@@ -1,25 +1,21 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
-/** Small codegen'd array folds replacing interpreted
+/** Small array folds replacing interpreted
   * `aggregate`/`transform`/`filter` HOF chains on corpus-sized streams
   * (optimization r14 — the LongMatchCount/CountIn/WordPairs pattern,
   * guide §"eliminate non-codegen expressions in the hot path"):
   *
-  *  - [[IdFold]] `id_fold(array<bigint>)` — the token-id wire fold
+  *  - [[idFold]] `id_fold(array<bigint>)` — the token-id wire fold
   *    `(acc * 1000003 + x) % 2^40` (seed 0) of tok1/tok2/tok4 and the
   *    streaming encode leg. Replaces `aggregate(ids, 0L, fold)`.
-  *  - [[ArraySumLong]] `array_sum_long(array<bigint>)` — Σ elements
+  *  - [[sumLong]] `array_sum_long(array<bigint>)` — Σ elements
   *    (seed 0). Replaces `aggregate(ns, 0L, _+_)` (tok4's token count).
-  *  - [[SumStrLen]] `sum_strlen(array<string>)` — Σ character lengths.
+  *  - [[sumStrLen]] `sum_strlen(array<string>)` — Σ character lengths.
   *    Replaces `aggregate(transform(words, length), 0L, _+_)` (ta2's
   *    word-length sum) without materializing the lengths array.
-  *  - [[LongCountEq]] `long_count_eq(array<bigint>, k)` — count of
+  *  - [[countEq]] `long_count_eq(array<bigint>, k)` — count of
   *    elements equal to a constant. Replaces
   *    `size(filter(ids, x => x === k))` (tok2's OOV count).
   *
@@ -28,119 +24,15 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * ELEMENT nulls the accumulator from its position onward (so the
   * result is null iff any element is null — `length(null)`, `acc +
   * null` and `(acc * m + null) % p` are all null and a null
-  * accumulator stays null); for the filter-count a null element simply
-  * doesn't count (the HOF's predicate is null, the element is
-  * dropped). ArrayFoldsSpec pins agreement with each built-in form on
-  * real corpus rows plus the null/empty edges.
+  * accumulator stays null) — hence their boxed `java.lang.Long`
+  * results; for the filter-count a null element simply doesn't count
+  * (the HOF's predicate is null, the element is dropped). ArrayFoldsSpec
+  * pins agreement with each built-in form on real corpus rows plus the
+  * null/empty edges.
   */
-case class IdFold(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"id_fold expects array<bigint>, got ${other.catalogString}")
-  }
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "id_fold"
-
-  override def nullSafeEval(input: Any): Any =
-    ArrayFolds.idFold(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // the fold can produce SQL NULL from non-null input (a null
-    // element), so route through the boxed compute and unbox; the
-    // local needs a fresh name — two folds in one projection would
-    // otherwise redefine it and kick the whole stage back to the
-    // interpreter (caught by the Verify log on tok2)
-    val r = ctx.freshName("fold")
-    nullSafeCodeGen(ctx, ev, c => s"""
-       |java.lang.Long $r = graft.functions.ArrayFolds.idFold($c);
-       |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r.longValue(); }
-     """.stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): IdFold =
-    copy(child = newChild)
-}
-
-case class ArraySumLong(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"array_sum_long expects array<bigint>, got ${other.catalogString}")
-  }
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "array_sum_long"
-
-  override def nullSafeEval(input: Any): Any =
-    ArrayFolds.sumLong(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val r = ctx.freshName("fold")
-    nullSafeCodeGen(ctx, ev, c => s"""
-       |java.lang.Long $r = graft.functions.ArrayFolds.sumLong($c);
-       |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r.longValue(); }
-     """.stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): ArraySumLong =
-    copy(child = newChild)
-}
-
-case class SumStrLen(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"sum_strlen expects array<string>, got ${other.catalogString}")
-  }
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "sum_strlen"
-
-  override def nullSafeEval(input: Any): Any =
-    ArrayFolds.sumStrLen(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val r = ctx.freshName("fold")
-    nullSafeCodeGen(ctx, ev, c => s"""
-       |java.lang.Long $r = graft.functions.ArrayFolds.sumStrLen($c);
-       |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r.longValue(); }
-     """.stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): SumStrLen =
-    copy(child = newChild)
-}
-
-case class LongCountEq(child: Expression, k: Long) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"long_count_eq expects array<bigint>, got ${other.catalogString}")
-  }
-  override def dataType: DataType = LongType
-  override def prettyName: String = "long_count_eq"
-
-  override def nullSafeEval(input: Any): Any =
-    ArrayFolds.countEq(input.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.ArrayFolds.countEq($c, ${k}L)")
-
-  override protected def withNewChildInternal(newChild: Expression): LongCountEq =
-    copy(child = newChild)
-}
-
 object ArrayFolds {
 
-  /** `(acc * MUL + x) % M40` left fold, seed 0 — called from both
-    * interpreted eval and generated code; null means SQL NULL. */
+  /** `(acc * MUL + x) % M40` left fold, seed 0; null means SQL NULL. */
   def idFold(arr: ArrayData): java.lang.Long = {
     val n = arr.numElements()
     var acc = 0L

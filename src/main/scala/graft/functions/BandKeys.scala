@@ -1,66 +1,36 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
-
-/** LSH band keys of a MinHash signature in one codegen'd pass: the
-  * RK fold `(acc * MUL + x) % M40` of each `rows`-slice of the
-  * signature, one key per band — the banding step of
-  * `Dedup.rkBanded` (dd2/dd9/dc2/cur2, and cc2 through dd2's pairs).
-  *
-  * The built-in formulation
-  * (`transform(sequence(0, bands-1), b => aggregate(slice(sig,
-  * b*rows+1, rows), 0L, fold))`) evaluates BOTH lambdas through the
-  * higher-order-function interpreter per BAND per document —
-  * allocating a sequence, `bands` slices and `bands` fold closures
-  * per row, the same per-row tax `long_match_count` removed from the
-  * pair side (optimization r13/r14; guide §"eliminate non-codegen
-  * expressions in the hot path"). This expression emits the `bands`
-  * keys in one linear pass over the signature.
-  *
-  * Semantics match the HOF formulation exactly on every reachable
-  * input: fold order is low index first, a band whose slice starts
-  * past the end of the signature folds nothing (key 0L — `slice`
-  * returns an empty array and `aggregate` returns the seed), a short
-  * final band folds the available prefix, and a null ELEMENT nulls
-  * that band's key from its position onward (the HOF accumulator
-  * goes null and stays null). The one deliberate difference: a null
-  * signature ARRAY yields null (standard null propagation) where the
-  * HOF form yields `bands` null keys — unreachable at every call
-  * site because `minhash_sketch` emits a non-null array for every
-  * group (BandKeysSpec pins both facts).
-  */
-case class BandKeys(child: Expression, bands: Int, rows: Int)
-  extends UnaryExpression {
-
-  require(bands > 0 && rows > 0, s"band_keys needs bands>0, rows>0, got $bands/$rows")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"band_keys expects array<bigint>, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-  override def prettyName: String = "band_keys"
-
-  override def nullSafeEval(input: Any): Any =
-    BandKeys.compute(input.asInstanceOf[ArrayData], bands, rows)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.BandKeys.compute($c, $bands, $rows)")
-
-  override protected def withNewChildInternal(newChild: Expression): BandKeys =
-    copy(child = newChild)
-}
 
 object BandKeys {
 
-  /** Called from both interpreted eval and generated code. */
+  /** LSH band keys of a MinHash signature in one pass (`band_keys`):
+    * the RK fold `(acc * MUL + x) % M40` of each `rows`-slice of the
+    * signature, one key per band — the banding step of
+    * `Dedup.rkBanded` (dd2/dd9/dc2/cur2, and cc2 through dd2's pairs).
+    *
+    * The built-in formulation
+    * (`transform(sequence(0, bands-1), b => aggregate(slice(sig,
+    * b*rows+1, rows), 0L, fold))`) evaluates BOTH lambdas through the
+    * higher-order-function interpreter per BAND per document —
+    * allocating a sequence, `bands` slices and `bands` fold closures
+    * per row, the same per-row tax `long_match_count` removed from the
+    * pair side (optimization r13/r14; guide §"eliminate non-codegen
+    * expressions in the hot path"). This kernel emits the `bands`
+    * keys in one linear pass over the signature.
+    *
+    * Semantics match the HOF formulation exactly on every reachable
+    * input: fold order is low index first, a band whose slice starts
+    * past the end of the signature folds nothing (key 0L — `slice`
+    * returns an empty array and `aggregate` returns the seed), a short
+    * final band folds the available prefix, and a null ELEMENT nulls
+    * that band's key from its position onward (the HOF accumulator
+    * goes null and stays null). The one deliberate difference: a null
+    * signature ARRAY yields null (standard null propagation) where the
+    * HOF form yields `bands` null keys — unreachable at every call
+    * site because `minhash_sketch` emits a non-null array for every
+    * group (BandKeysSpec pins both facts).
+    */
   def compute(sig: ArrayData, bands: Int, rows: Int): ArrayData = {
     val n = sig.numElements()
     val out = new Array[Any](bands)

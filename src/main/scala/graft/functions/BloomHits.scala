@@ -1,68 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
-
-/** Count of array elements whose BLOOM_K probe bits are ALL set in a
-  * fixed bit array — the per-document contamination count of dc4,
-  * fused into one codegen'd expression.
-  *
-  * Why an Expression and not `size(filter(arr, λ))`: Spark's
-  * higher-order functions evaluate their lambda INTERPRETED, once per
-  * element — for dc4 that is 4 probes × ~8 arithmetic nodes per
-  * shingle allocated and dispatched per row element, measured 51 s
-  * warm at sf10 vs 3.4 s for this compiled loop. The sketch rides
-  * along as a codegen reference object (16 KB, shipped once per task
-  * in the serialized expression — bounded model state, never corpus).
-  *
-  * The probe arithmetic is [[RkLsh.mix2]] over chains blA/blB — the
-  * same engine-neutral integers the DuckDB oracle replays — so this
-  * expression changes the execution strategy of dc4, not its answer.
-  *
-  * CAVEAT (r14, learned on [[PqScores]]): `sketch` is a raw Array
-  * constructor field — REFERENCE equality under case-class equality,
-  * so plan canonicalization treats two value-equal constructions as
-  * different. Safe here only because dc4 constructs the expression
-  * once per plan and nothing re-derives a pinned frame through it;
-  * if that ever changes, move the sketch to a foldable literal CHILD
-  * as PqScores does.
-  */
-case class BloomHits(child: Expression, sketch: Array[Long], bits: Long)
-  extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, false) => TypeCheckResult.TypeCheckSuccess
-    case ArrayType(LongType, true) => TypeCheckResult.TypeCheckFailure(
-      "bloom_hits expects array<bigint> without null elements " +
-        "(containsNull = true would read garbage via getLong)")
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"bloom_hits expects array<bigint>, got ${other.catalogString}")
-  }
-  override def dataType: DataType = LongType
-  override def prettyName: String = "bloom_hits"
-
-  override def nullSafeEval(input: Any): Any =
-    BloomHits.compute(input.asInstanceOf[ArrayData], sketch, bits)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val sk = ctx.addReferenceObj("bloomSketch", sketch, "long[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.BloomHits.compute($c, $sk, ${bits}L)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): BloomHits =
-    copy(child = newChild)
-}
 
 object BloomHits {
   import RkLsh.{A, B, P, blA, blB}
 
   /** JVM twin of the column-level probe arithmetic in
     * `graft.ops.Pipeline.bloomProbe` (two-round avalanche → bit
-    * position); kept in one place so eval and codegen share it. */
+    * position). */
   private def probe(i: Int, x: Long, bits: Long): Int = {
     val s1 = (A(blA(i)) * (x & (RkLsh.M40 - 1)) + B(blA(i))) % P
     val s1x = s1 ^ (s1 >>> 20)
@@ -71,8 +16,26 @@ object BloomHits {
     (((s2 ^ (s2 >>> 20)) % bits).toInt)
   }
 
-  /** Called from both interpreted eval and generated code. */
-  def compute(arr: ArrayData, sketch: Array[Long], bits: Long): Long = {
+  /** Count of array elements whose BLOOM_K probe bits are ALL set in a
+    * fixed bit array (`bloom_hits`) — the per-document contamination
+    * count of dc4, fused into one compiled loop.
+    *
+    * Why a kernel and not `size(filter(arr, λ))`: Spark's higher-order
+    * functions evaluate their lambda INTERPRETED, once per element —
+    * for dc4 that is 4 probes × ~8 arithmetic nodes per shingle
+    * allocated and dispatched per row element, measured 51 s warm at
+    * sf10 vs 3.4 s for this compiled loop. The sketch is a literal
+    * argument over primitive-backed UnsafeArrayData (16 KB, shipped
+    * once per task in the serialized plan — bounded model state, never
+    * corpus), so each probe reads a long without unboxing.
+    *
+    * The probe arithmetic is [[RkLsh.mix2]] over chains blA/blB — the
+    * same engine-neutral integers the DuckDB oracle replays — so this
+    * kernel changes the execution strategy of dc4, not its answer.
+    * `arr` must have no null elements (the registry rejects
+    * `containsNull = true`): getLong would read a null slot as garbage.
+    */
+  def compute(arr: ArrayData, sketch: ArrayData, bits: Long): Long = {
     val n = arr.numElements()
     var cnt = 0L
     var j = 0
@@ -82,7 +45,7 @@ object BloomHits {
       var i = 0
       while (ok && i < 4) {
         val p = probe(i, s, bits)
-        if (((sketch(p >>> 6) >>> (p & 63)) & 1L) == 0L) ok = false
+        if (((sketch.getLong(p >>> 6) >>> (p & 63)) & 1L) == 0L) ok = false
         i += 1
       }
       if (ok) cnt += 1

@@ -1,73 +1,37 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
-
-/** One BPE merge `(l, r) → l+r` applied to a symbol array in a single
-  * codegen'd pass — greedy left-to-right NON-OVERLAPPING merging with
-  * the restart rule (`[a,a,a,a]` merging `(a,a)` → `[aa,aa]`), exactly
-  * the semantics of `TextOps.bpeMergeFold`'s `aggregate` formulation,
-  * which this replaces (tok3's training iterations and the streaming
-  * encode leg's per-word merge chains).
-  *
-  * The HOF fold it replaces is interpreted AND quadratic in symbol
-  * count: every step allocates `concat(acc, array(x))` — a fresh
-  * accumulator array per element — so one merge over an L-symbol word
-  * costs O(L²) allocations, and the streaming encoder chains 8 merges
-  * per word inside a per-word `transform`. This expression is one
-  * linear scan with a single output allocation.
-  *
-  * Equivalence argument (BpeSpec pins it against the imperative
-  * reference, ArrayFoldsSpec against the HOF form itself): the fold
-  * appends each symbol unless the accumulator's LAST symbol equals `l`
-  * and the incoming one equals `r`, in which case the tail is
-  * rewritten to `l+r`; this loop performs the identical comparison on
-  * the identical values, including the case `merged == l` (possible
-  * only for empty `r`, which real merge tables never produce — and
-  * handled identically anyway since both forms compare the rewritten
-  * tail). A null ELEMENT never matches (`null === l` is null, the HOF
-  * takes the otherwise-branch and appends) — reproduced here by
-  * treating null as non-matching; a null ARRAY yields null on both
-  * forms. */
-case class BpeMerge(child: Expression, l: String, r: String)
-  extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"bpe_merge expects array<string>, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = true)
-  override def prettyName: String = "bpe_merge"
-
-  @transient private lazy val lU = UTF8String.fromString(l)
-  @transient private lazy val rU = UTF8String.fromString(r)
-  @transient private lazy val mU = UTF8String.fromString(l + r)
-
-  override def nullSafeEval(input: Any): Any =
-    BpeMerge.compute(input.asInstanceOf[ArrayData], lU, rU, mU)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = classOf[UTF8String].getName
-    val lRef = ctx.addReferenceObj("bpeL", lU, cls)
-    val rRef = ctx.addReferenceObj("bpeR", rU, cls)
-    val mRef = ctx.addReferenceObj("bpeM", mU, cls)
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.BpeMerge.compute($c, $lRef, $rRef, $mRef)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): BpeMerge =
-    copy(child = newChild)
-}
 
 object BpeMerge {
 
-  /** Called from both interpreted eval and generated code. */
+  /** One BPE merge `(l, r) → merged` (`merged` = l+r, built once when
+    * the call is planned) applied to a symbol array in a single pass
+    * (`bpe_merge`) — greedy left-to-right NON-OVERLAPPING merging with
+    * the restart rule (`[a,a,a,a]` merging `(a,a)` → `[aa,aa]`), exactly
+    * the semantics of `TextOps.bpeMergeFold`'s `aggregate` formulation,
+    * which this replaces (tok3's training iterations and the streaming
+    * encode leg's per-word merge chains).
+    *
+    * The HOF fold it replaces is interpreted AND quadratic in symbol
+    * count: every step allocates `concat(acc, array(x))` — a fresh
+    * accumulator array per element — so one merge over an L-symbol word
+    * costs O(L²) allocations, and the streaming encoder chains 8 merges
+    * per word inside a per-word `transform`. This kernel is one linear
+    * scan with a single output allocation.
+    *
+    * Equivalence argument (BpeSpec pins it against the imperative
+    * reference, ArrayFoldsSpec against the HOF form itself): the fold
+    * appends each symbol unless the accumulator's LAST symbol equals `l`
+    * and the incoming one equals `r`, in which case the tail is
+    * rewritten to `l+r`; this loop performs the identical comparison on
+    * the identical values, including the case `merged == l` (possible
+    * only for empty `r`, which real merge tables never produce — and
+    * handled identically anyway since both forms compare the rewritten
+    * tail). A null ELEMENT never matches (`null === l` is null, the HOF
+    * takes the otherwise-branch and appends) — reproduced here by
+    * treating null as non-matching; a null ARRAY yields null on both
+    * forms. */
   def compute(syms: ArrayData, l: UTF8String, r: UTF8String,
       merged: UTF8String): ArrayData = {
     val n = syms.numElements()

@@ -1,143 +1,146 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.udaf
-import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Registers every custom function this library ships into a session's
   * function registry, making them available to both the Column API
-  * (`call_function`) and plain SQL text:
+  * (`call_function`) and plain SQL text.
   *
-  *  - `double_dot(array<double>, array<double>)` — codegen'd dot product
-  *  - `long_match_count(array<bigint>, array<bigint>)` — codegen'd count
-  *    of equal positions (MinHash signature match)
-  *  - `band_keys(array<bigint>, bands, rows)` — codegen'd LSH band keys
-  *    (RK fold per signature slice)
+  * Kernel functions — a `StaticInvoke` of a static method that already
+  * holds the whole computation. Spark generates the static call inside
+  * whole-stage codegen, evaluates it reflectively when interpreted, and
+  * returns null for a null argument without calling; each kernel's
+  * scaladoc carries its semantics:
+  *
   *  - `id_fold(array<bigint>)` / `array_sum_long(array<bigint>)` /
   *    `sum_strlen(array<string>)` / `long_count_eq(array<bigint>, k)` —
-  *    codegen'd array folds (token-id wire fold, element sum, word-length
-  *    sum, constant-equality count)
+  *    array folds (token-id wire fold, element sum, word-length sum,
+  *    constant-equality count), [[ArrayFolds]]
+  *  - `band_keys(array<bigint>, bands, rows)` — LSH band keys (RK fold
+  *    per signature slice), [[BandKeys]]
+  *  - `bloom_hits(array<bigint>, sketch, bits)` — Bloom-sketch hit
+  *    count (dc4), [[BloomHits]]
   *  - `bpe_merge(array<string>, l, r)` — one greedy non-overlapping BPE
-  *    merge in a single pass
+  *    merge in a single pass, [[BpeMerge]]
   *  - `span_cover(array<bigint>, nt, k)` — interval-union coverage of
-  *    sorted k-gram positions (dd8's duplicated-token count)
+  *    sorted k-gram positions (dd8's duplicated-token count), [[SpanCover]]
   *  - `quantize_stats(array<double>)` — qt1's int8 scale/checksum/l2
-  *    measurement in one pass
-  *  - `quantize_grid(array<double>, q)` — raw integer grid
-  *    floor(x·q) (pq1/sim5's codebook domain; no normalization)
-  *  - `pq_scores(array<double>, mat, c2)` — per-subspace PQ assignment
-  *    scores ‖c_p‖² − 2·sub·c_p against a fixed codebook
+  *    measurement in one pass, [[QuantizeStats]]
+  *  - `quantize_grid(array<double>, q)` — raw integer grid floor(x·q)
+  *    (pq1/sim5's codebook domain; no normalization), [[PqCoding]]
   *  - `word_chunks(array<string>, k)` — non-overlapping k-word chunk
-  *    strings (dd6's chunking unit)
+  *    strings (dd6's chunking unit), [[WordChunks]]
   *  - `scaled_cos(array<double>, unrm, norms)` — floor-scaled cosine
-  *    vector against fixed centroid norms (cls1/dc3's score step)
-  *  - `count_in(array<string>, array<string>)` — codegen'd membership
-  *    hit count (stopword/marker/top-vocab scoring)
-  *  - `word_pairs(array<string>, mode)` — codegen'd adjacent word
-  *    pairs (0 ordered structs, 1 canonical structs, 2 joined strings)
-  *  - `minhash_sketch(bigint)` — 32-permutation MinHash signature sketch
-  *    (engine-neutral affine perms over mod-2^40 inputs, see [[RkLsh]])
-  *  - `simhash_sketch(bigint, bigint)` — weighted 63-bit SimHash
-  *  - `shingle_hashes(array<string>, k)` — distinct word-k-gram hashes
-  *    (engine-LOCAL values; oracles re-join raw strings)
-  *  - `rk_shingle_hashes(array<string>, k)` — distinct word-k-gram RK
-  *    hashes (engine-NEUTRAL values; oracles replay the arithmetic)
-  *  - `rk_word_hash(string)` — RK char fold mod 2^40 of one word
-  *  - `topn_by_key(bigint, bigint, n)` — bounded smallest-n (key, id)
-  *    sketch; returns ids ordered by (key, id)
-  *  - `hll_sketch(bigint)` — engine-neutral HyperLogLog distinct sketch
-  *  - `hist_sketch(bigint)` — engine-neutral log-histogram percentile sketch
+  *    vector against fixed centroid norms (cls1/dc3), [[ScaledCos]]
+  *  - `word_pairs(array<string>, mode)` — adjacent word pairs (0 ordered
+  *    structs, 1 canonical structs, 2 joined strings), [[WordPairs]]
+  *  - `shingle_hashes(array<string>, k)` / `shingle_hashes_pos(...)` —
+  *    distinct / positional word-k-gram hashes (engine-LOCAL values;
+  *    oracles re-join raw strings), [[ShingleHashes]]
+  *  - `rk_shingle_hashes(array<string>, k)` / `rk_word_hash(string)` —
+  *    engine-NEUTRAL RK shingle and word hashes, [[RkShingleHashes]]
   *  - `rk_lsh_signatures(array<double>, tables, bits)` — ±1 Rademacher
-  *    hyperplane LSH signatures (engine-NEUTRAL planes; oracles replay them)
-  *  - `vector_avg(array<double>)` — element-wise mean sketch aggregate
-  *  - `vector_sum_long(array<bigint>)` — element-wise integer sum sketch
-  *    aggregate → `struct(n, s)` (engine-NEUTRAL: exact, order-free)
-  *  - `rolling_hash(array<string>, k)` — Rabin–Karp [min, full] fingerprint
-  *  - `ma_agg(double, bigint, string)` — the reference's moving-average
-  *    aggregation protocol (sum/count/sma/real/filled/n struct)
+  *    hyperplane LSH signatures, [[RkLshSignatures]]
+  *  - `rolling_hash(array<string>, k)` — Rabin–Karp [min, full]
+  *    fingerprint, [[RollingHashFp]]
   *
-  * The builders validate arity and insert casts to the expected input
-  * types — the expressions themselves read primitive slots and would
-  * otherwise silently misread (or crash on) e.g. an array<float> column
-  * passed from SQL. Idempotent; safe to call per query. This is the
-  * single registration point — VectorFunctions delegates here.
+  * Expressions — classes whose generated code or evaluation is their
+  * own:
+  *
+  *  - `double_dot(array<double>, array<double>)` — dot product
+  *  - `long_match_count(array<bigint>, array<bigint>)` — count of equal
+  *    positions (MinHash signature match)
+  *  - `count_in(array<string>, array<string>)` — membership hit count
+  *    (stopword/marker/top-vocab scoring)
+  *  - `quantize_unit(array<double>, q)` / `matrix_dots(array<double>,
+  *    array<array<double>>)` — normalized grid, per-row dots
+  *  - `pq_scores(array<double>, mat, c2)` — per-subspace PQ assignment
+  *    scores ‖c_p‖² − 2·sub·c_p (a deliberate `CodegenFallback`)
+  *  - aggregates: `minhash_sketch(bigint)`, `simhash_sketch(bigint,
+  *    bigint)`, `topn_by_key(bigint, bigint, n)`, `hll_sketch(bigint)`,
+  *    `hist_sketch(bigint)`, `vector_avg(array<double>)`,
+  *    `vector_sum_long(array<bigint>)`, and `ma_agg(double, bigint,
+  *    string)` — the reference's moving-average aggregation protocol
+  *
+  * The builders validate arity, constant arguments and input types, and
+  * insert casts to the expected input types — kernels and expressions
+  * read primitive slots and would otherwise silently misread (or crash
+  * on) e.g. an array<float> column passed from SQL. A constant argument
+  * becomes a literal child, so plans built from equal constants compare
+  * equal. Idempotent; safe to call per query. This is the single
+  * registration point — VectorFunctions delegates here.
   */
 object GraftFunctions {
 
-  private def arity(name: String, n: Int)(exprs: Seq[Expression]): Unit =
-    require(exprs.length == n, s"$name expects $n arguments, got ${exprs.length}")
+  private val LongArray = ArrayType(LongType)
+  private val DoubleArray = ArrayType(DoubleType)
+  private val StringArray = ArrayType(StringType)
 
-  /** Extract a compile-time integer argument (e.g. a shingle width that
-    * shapes generated code). Checking `foldable` FIRST matters: eval()
-    * on a non-foldable (unbound attribute) expression surfaces as an
-    * obscure analyzer-time UnsupportedOperationException instead of
-    * this message. */
-  private def foldableInt(name: String, e: Expression): Int = {
-    if (!e.foldable) throw new IllegalArgumentException(
-      s"$name: argument must be a foldable (constant) integer, got ${e.sql}")
-    e.eval() match {
-      case n: Number => n.intValue()
-      case other => throw new IllegalArgumentException(
-        s"$name: argument must be a foldable integer, got $other")
+  /** One call's arguments, with the function name its errors carry. */
+  private final class Args(name: String, exprs: Seq[Expression]) {
+
+    def apply(i: Int): Expression = exprs(i)
+
+    def cast(i: Int, dt: DataType): Expression = Cast(exprs(i), dt)
+
+    /** Argument `i` as-is, rejected unless it already has type `dt`
+      * (element nullability aside) — for inputs that are never cast. */
+    def typed(i: Int, dt: DataType): Expression = {
+      val ok = (exprs(i).dataType, dt) match {
+        case (ArrayType(got, _), ArrayType(want, _)) => got == want
+        case (got, want) => got == want
+      }
+      if (!ok) throw new IllegalArgumentException(
+        s"$name expects ${dt.catalogString}, got ${exprs(i).dataType.catalogString}")
+      exprs(i)
+    }
+
+    /** A constant argument (a shingle width that shapes the output, a
+      * model's sketch or norms). Checking `foldable` FIRST matters:
+      * eval() on a non-foldable (unbound attribute) expression surfaces
+      * as an obscure analyzer-time UnsupportedOperationException instead
+      * of this message. A value `read` does not take (null included) is
+      * rejected. */
+    def foldable[T](i: Int, what: String)(read: PartialFunction[Any, T]): T = {
+      val e = exprs(i)
+      if (!e.foldable) throw new IllegalArgumentException(
+        s"$name: argument must be a foldable (constant) $what, got ${e.sql}")
+      val v = e.eval()
+      read.applyOrElse(v, (_: Any) => throw new IllegalArgumentException(
+        s"$name: argument must be a foldable $what, got $v"))
+    }
+
+    def int(i: Int): Int = foldable(i, "integer") { case n: Number => n.intValue() }
+
+    /** A constant array as a literal over primitive-backed
+      * UnsafeArrayData: `typedLit` builds a boxed GenericArrayData,
+      * which the kernel would unbox on every read. */
+    def longArray(i: Int): Literal = foldable(i, "array<bigint>") { case a: ArrayData =>
+      Literal(UnsafeArrayData.fromPrimitiveArray(a.toLongArray()), ArrayType(LongType, false))
+    }
+
+    def doubleArray(i: Int): Literal = foldable(i, "array<double>") { case a: ArrayData =>
+      Literal(UnsafeArrayData.fromPrimitiveArray(a.toDoubleArray()), ArrayType(DoubleType, false))
     }
   }
 
-  private[functions] def doubleDotBuilder(exprs: Seq[Expression]): Expression = {
-    arity("double_dot", 2)(exprs)
-    DoubleDot(Cast(exprs(0), ArrayType(DoubleType)), Cast(exprs(1), ArrayType(DoubleType)))
-  }
-
-  /** Extract a compile-time long argument (long_count_eq's constant). */
-  private def foldableLong(name: String, e: Expression): Long = {
-    if (!e.foldable) throw new IllegalArgumentException(
-      s"$name: argument must be a foldable (constant) integer, got ${e.sql}")
-    e.eval() match {
-      case n: Number => n.longValue()
-      case other => throw new IllegalArgumentException(
-        s"$name: argument must be a foldable integer, got $other")
-    }
-  }
-
-  /** Extract a compile-time string argument (bpe_merge's pair). */
-  private def foldableString(name: String, e: Expression): String = {
-    if (!e.foldable) throw new IllegalArgumentException(
-      s"$name: argument must be a foldable (constant) string, got ${e.sql}")
-    e.eval() match {
-      case s: org.apache.spark.unsafe.types.UTF8String => s.toString
-      case other => throw new IllegalArgumentException(
-        s"$name: argument must be a foldable string, got $other")
-    }
-  }
-
-  /** Extract a compile-time double-array argument (scaled_cos's
-    * centroid norms — bounded model state baked into the plan). */
-  private def foldableDoubleArray(name: String, e: Expression): Array[Double] = {
-    if (!e.foldable) throw new IllegalArgumentException(
-      s"$name: argument must be a foldable (constant) array<double>, got ${e.sql}")
-    e.eval() match {
-      case a: org.apache.spark.sql.catalyst.util.ArrayData => a.toDoubleArray()
-      case other => throw new IllegalArgumentException(
-        s"$name: argument must be a foldable array<double>, got $other")
-    }
-  }
-
-  /** Extract a compile-time long-array argument (dc4's Bloom sketch —
-    * model state baked into the generated code's references, not a
-    * per-row input). */
-  private def foldableLongArray(name: String, e: Expression): Array[Long] = {
-    if (!e.foldable) throw new IllegalArgumentException(
-      s"$name: argument must be a foldable (constant) array<bigint>, got ${e.sql}")
-    e.eval() match {
-      case a: org.apache.spark.sql.catalyst.util.ArrayData => a.toLongArray()
-      case other => throw new IllegalArgumentException(
-        s"$name: argument must be a foldable array<bigint>, got $other")
-    }
-  }
+  /** `kernel.method(args)`: `nullable` says whether the kernel itself
+    * can return null (a boxed result); null arguments always give null. */
+  private def invoke(kernel: AnyRef, method: String, dt: DataType,
+      nullable: Boolean = false)(args: Expression*): Expression =
+    StaticInvoke(kernel.getClass, dt, method, args, returnNullable = nullable)
 
   /** Sessions already registered, keyed weakly on their function
     * registry: every query entry point calls [[registerAll]]
-    * defensively, and re-registering 17 functions per query floods
+    * defensively, and re-registering 33 functions per query floods
     * stderr with "function X replaced" registry warnings — hundreds of
     * lines per bench sweep burying any real warning. Registration is
     * idempotent either way; this guard only makes it once-per-session.
@@ -163,153 +166,134 @@ object GraftFunctions {
     }
   }
 
-  private def registerInto(spark: SparkSession,
-      reg: org.apache.spark.sql.catalyst.analysis.FunctionRegistry): Unit = {
-    reg.createOrReplaceTempFunction("double_dot", doubleDotBuilder, "scala_udf")
-    reg.createOrReplaceTempFunction("bloom_hits", exprs => {
-      arity("bloom_hits", 3)(exprs)
-      BloomHits(exprs(0), foldableLongArray("bloom_hits", exprs(1)),
-        foldableInt("bloom_hits", exprs(2)).toLong)
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_sketch", exprs => {
-      arity("minhash_sketch", 1)(exprs)
-      MinHashSketch(Cast(exprs.head, LongType))
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("simhash_sketch", exprs => {
-      arity("simhash_sketch", 2)(exprs)
-      SimHashSketch(Cast(exprs(0), LongType), Cast(exprs(1), LongType))
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("vector_avg", exprs => {
-      arity("vector_avg", 1)(exprs)
-      VectorAvg(Cast(exprs.head, ArrayType(DoubleType)))
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("vector_sum_long", exprs => {
-      arity("vector_sum_long", 1)(exprs)
-      VectorSumLong(Cast(exprs.head, ArrayType(LongType)))
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("quantize_unit", exprs => {
-      arity("quantize_unit", 2)(exprs)
-      QuantizeUnit(Cast(exprs(0), ArrayType(DoubleType)),
-        foldableInt("quantize_unit", exprs(1)))
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("matrix_dots", exprs => {
-      arity("matrix_dots", 2)(exprs)
-      MatrixDots(Cast(exprs(0), ArrayType(DoubleType)),
-        Cast(exprs(1), ArrayType(ArrayType(DoubleType))))
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("rolling_hash", exprs => {
-      arity("rolling_hash", 2)(exprs)
-      RollingHashFp(exprs(0), foldableInt("rolling_hash", exprs(1)))
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("shingle_hashes", exprs => {
-      arity("shingle_hashes", 2)(exprs)
-      // k must be a compile-time constant (it shapes the generated code)
-      ShingleHashes(exprs(0), foldableInt("shingle_hashes", exprs(1)))
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("shingle_hashes_pos", exprs => {
-      arity("shingle_hashes_pos", 2)(exprs)
-      ShingleHashesPos(exprs(0), foldableInt("shingle_hashes_pos", exprs(1)))
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("rk_shingle_hashes", exprs => {
-      arity("rk_shingle_hashes", 2)(exprs)
-      RkShingleHashes(exprs(0), foldableInt("rk_shingle_hashes", exprs(1)))
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("rk_word_hash", exprs => {
-      arity("rk_word_hash", 1)(exprs)
-      RkWordHash(exprs.head)
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("hll_sketch", exprs => {
-      arity("hll_sketch", 1)(exprs)
-      HllSketch(Cast(exprs.head, LongType))
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("hist_sketch", exprs => {
-      arity("hist_sketch", 1)(exprs)
-      HistSketch(Cast(exprs.head, LongType))
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("rk_lsh_signatures", exprs => {
-      arity("rk_lsh_signatures", 3)(exprs)
-      RkLshSignatures(Cast(exprs(0), ArrayType(DoubleType)),
-        foldableInt("rk_lsh_signatures", exprs(1)), foldableInt("rk_lsh_signatures", exprs(2)))
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("word_pairs", exprs => {
-      arity("word_pairs", 2)(exprs)
-      WordPairs(Cast(exprs(0), ArrayType(org.apache.spark.sql.types.StringType)),
-        foldableInt("word_pairs", exprs(1)))
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("count_in", exprs => {
-      arity("count_in", 2)(exprs)
-      CountIn(Cast(exprs(0), ArrayType(org.apache.spark.sql.types.StringType)),
-        Cast(exprs(1), ArrayType(org.apache.spark.sql.types.StringType)))
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("band_keys", exprs => {
-      arity("band_keys", 3)(exprs)
-      BandKeys(Cast(exprs(0), ArrayType(LongType)),
-        foldableInt("band_keys", exprs(1)), foldableInt("band_keys", exprs(2)))
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("id_fold", exprs => {
-      arity("id_fold", 1)(exprs)
-      IdFold(Cast(exprs.head, ArrayType(LongType)))
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("array_sum_long", exprs => {
-      arity("array_sum_long", 1)(exprs)
-      ArraySumLong(Cast(exprs.head, ArrayType(LongType)))
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("sum_strlen", exprs => {
-      arity("sum_strlen", 1)(exprs)
-      SumStrLen(Cast(exprs.head, ArrayType(org.apache.spark.sql.types.StringType)))
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("long_count_eq", exprs => {
-      arity("long_count_eq", 2)(exprs)
-      LongCountEq(Cast(exprs(0), ArrayType(LongType)),
-        foldableLong("long_count_eq", exprs(1)))
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("scaled_cos", exprs => {
-      arity("scaled_cos", 3)(exprs)
-      ScaledCos(Cast(exprs(0), ArrayType(DoubleType)), Cast(exprs(1), DoubleType),
-        foldableDoubleArray("scaled_cos", exprs(2)))
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("word_chunks", exprs => {
-      arity("word_chunks", 2)(exprs)
-      WordChunks(Cast(exprs(0), ArrayType(org.apache.spark.sql.types.StringType)),
-        foldableInt("word_chunks", exprs(1)))
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("quantize_grid", exprs => {
-      arity("quantize_grid", 2)(exprs)
-      QuantizeGrid(Cast(exprs(0), ArrayType(DoubleType)),
-        foldableInt("quantize_grid", exprs(1)))
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("pq_scores", exprs => {
-      arity("pq_scores", 3)(exprs)
+  private def registerInto(spark: SparkSession, reg: FunctionRegistry): Unit = {
+    def fn(name: String, arity: Int)(build: Args => Expression): Unit =
+      reg.createOrReplaceTempFunction(name, exprs => {
+        require(exprs.length == arity, s"$name expects $arity arguments, got ${exprs.length}")
+        build(new Args(name, exprs))
+      }, "scala_udf")
+    def shingleWidth(a: Args): Literal = {
+      val k = a.int(1)
+      require(k >= 1, s"shingle size must be >= 1, got $k")
+      Literal(k)
+    }
+
+    // kernels
+    fn("id_fold", 1) { a =>
+      invoke(ArrayFolds, "idFold", LongType, nullable = true)(a.cast(0, LongArray))
+    }
+    fn("array_sum_long", 1) { a =>
+      invoke(ArrayFolds, "sumLong", LongType, nullable = true)(a.cast(0, LongArray))
+    }
+    fn("sum_strlen", 1) { a =>
+      invoke(ArrayFolds, "sumStrLen", LongType, nullable = true)(a.cast(0, StringArray))
+    }
+    fn("long_count_eq", 2) { a =>
+      val k = a.foldable(1, "integer") { case n: Number => n.longValue() }
+      invoke(ArrayFolds, "countEq", LongType)(a.cast(0, LongArray), Literal(k))
+    }
+    fn("band_keys", 3) { a =>
+      val (bands, rows) = (a.int(1), a.int(2))
+      require(bands > 0 && rows > 0, s"band_keys needs bands>0, rows>0, got $bands/$rows")
+      invoke(BandKeys, "compute", ArrayType(LongType))(
+        a.cast(0, LongArray), Literal(bands), Literal(rows))
+    }
+    fn("bloom_hits", 3) { a =>
+      a(0).dataType match {
+        case ArrayType(LongType, false) =>
+        case ArrayType(LongType, true) => throw new IllegalArgumentException(
+          "bloom_hits expects array<bigint> without null elements " +
+            "(containsNull = true would read garbage via getLong)")
+        case other => throw new IllegalArgumentException(
+          s"bloom_hits expects array<bigint>, got ${other.catalogString}")
+      }
+      invoke(BloomHits, "compute", LongType)(a(0), a.longArray(1), Literal(a.int(2).toLong))
+    }
+    fn("bpe_merge", 3) { a =>
+      def sym(i: Int) = a.foldable(i, "string") { case s: UTF8String => s.toString }
+      val (l, r) = (sym(1), sym(2))
+      invoke(BpeMerge, "compute", ArrayType(StringType))(
+        a.cast(0, StringArray), Literal(l), Literal(r), Literal(l + r))
+    }
+    fn("span_cover", 3) { a =>
+      val k = a.int(2)
+      require(k > 0, s"span_cover needs k > 0, got $k")
+      invoke(SpanCover, "compute", LongType, nullable = true)(
+        a.cast(0, LongArray), a.cast(1, LongType), Literal(k))
+    }
+    fn("quantize_stats", 1) { a =>
+      invoke(QuantizeStats, "compute", QuantizeStats.resultType)(a.cast(0, DoubleArray))
+    }
+    fn("quantize_grid", 2) { a =>
+      invoke(PqCoding, "quantizeGrid", ArrayType(LongType), nullable = true)(
+        a.cast(0, DoubleArray), Literal(a.int(1)))
+    }
+    fn("word_chunks", 2) { a =>
+      val k = a.int(1)
+      require(k > 0, s"word_chunks needs k > 0, got $k")
+      invoke(WordChunks, "compute", ArrayType(StringType, containsNull = false))(
+        a.cast(0, StringArray), Literal(k))
+    }
+    fn("scaled_cos", 3) { a =>
+      invoke(ScaledCos, "compute", ArrayType(DoubleType))(
+        a.cast(0, DoubleArray), a.cast(1, DoubleType), a.doubleArray(2))
+    }
+    fn("word_pairs", 2) { a =>
+      val mode = a.int(1)
+      require(mode >= 0 && mode <= 2, s"word_pairs mode must be 0|1|2, got $mode")
+      invoke(WordPairs, "compute", WordPairs.resultType(mode))(
+        a.cast(0, StringArray), Literal(mode))
+    }
+    fn("shingle_hashes", 2) { a =>
+      invoke(ShingleHashes, "compute", ArrayType(LongType, containsNull = false))(
+        a.typed(0, StringArray), shingleWidth(a))
+    }
+    fn("shingle_hashes_pos", 2) { a =>
+      invoke(ShingleHashes, "computePos", ArrayType(LongType, containsNull = false))(
+        a.typed(0, StringArray), shingleWidth(a))
+    }
+    fn("rk_shingle_hashes", 2) { a =>
+      invoke(RkShingleHashes, "compute", ArrayType(LongType, containsNull = false))(
+        a.typed(0, StringArray), shingleWidth(a))
+    }
+    fn("rk_word_hash", 1) { a =>
+      invoke(RkShingleHashes, "wordHash", LongType)(a.typed(0, StringType))
+    }
+    fn("rk_lsh_signatures", 3) { a =>
+      val (tables, bits) = (a.int(1), a.int(2))
+      require(tables >= 1 && bits >= 1 && bits <= 30 && tables * bits <= 512,
+        s"implausible LSH shape: $tables x $bits")
+      invoke(RkLshSignatures, "compute", ArrayType(IntegerType, containsNull = false))(
+        a.cast(0, DoubleArray), Literal(tables), Literal(bits))
+    }
+    fn("rolling_hash", 2) { a =>
+      invoke(RollingHashFp, "compute", ArrayType(LongType, containsNull = false))(
+        a.typed(0, StringArray), shingleWidth(a))
+    }
+
+    // expressions
+    fn("double_dot", 2) { a => DoubleDot(a.cast(0, DoubleArray), a.cast(1, DoubleArray)) }
+    fn("long_match_count", 2) { a =>
+      LongMatchCount(a.cast(0, LongArray), a.cast(1, LongArray))
+    }
+    fn("count_in", 2) { a => CountIn(a.cast(0, StringArray), a.cast(1, StringArray)) }
+    fn("quantize_unit", 2) { a => QuantizeUnit(a.cast(0, DoubleArray), a.int(1)) }
+    fn("matrix_dots", 2) { a =>
+      MatrixDots(a.cast(0, DoubleArray), a.cast(1, ArrayType(DoubleArray)))
+    }
+    fn("pq_scores", 3) { a =>
       // codebook/norms stay literal CHILDREN (value-equal under plan
       // canonicalization), never constructor arrays — see PqScores
-      PqScores(Cast(exprs(0), ArrayType(DoubleType)),
-        Cast(exprs(1), ArrayType(ArrayType(DoubleType))),
-        Cast(exprs(2), ArrayType(DoubleType)))
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("quantize_stats", exprs => {
-      arity("quantize_stats", 1)(exprs)
-      QuantizeStats(Cast(exprs.head, ArrayType(DoubleType)))
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("span_cover", exprs => {
-      arity("span_cover", 3)(exprs)
-      SpanCover(Cast(exprs(0), ArrayType(LongType)), Cast(exprs(1), LongType),
-        foldableInt("span_cover", exprs(2)))
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("bpe_merge", exprs => {
-      arity("bpe_merge", 3)(exprs)
-      BpeMerge(Cast(exprs(0), ArrayType(org.apache.spark.sql.types.StringType)),
-        foldableString("bpe_merge", exprs(1)), foldableString("bpe_merge", exprs(2)))
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("long_match_count", exprs => {
-      arity("long_match_count", 2)(exprs)
-      LongMatchCount(Cast(exprs(0), ArrayType(LongType)),
-        Cast(exprs(1), ArrayType(LongType)))
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("topn_by_key", exprs => {
-      arity("topn_by_key", 3)(exprs)
-      TopNByKey(Cast(exprs(0), LongType), Cast(exprs(1), LongType),
-        foldableInt("topn_by_key", exprs(2)))
-    }, "scala_udf")
+      PqScores(a.cast(0, DoubleArray), a.cast(1, ArrayType(DoubleArray)),
+        a.cast(2, DoubleArray))
+    }
+    fn("minhash_sketch", 1) { a => MinHashSketch(a.cast(0, LongType)) }
+    fn("simhash_sketch", 2) { a => SimHashSketch(a.cast(0, LongType), a.cast(1, LongType)) }
+    fn("topn_by_key", 3) { a => TopNByKey(a.cast(0, LongType), a.cast(1, LongType), a.int(2)) }
+    fn("hll_sketch", 1) { a => HllSketch(a.cast(0, LongType)) }
+    fn("hist_sketch", 1) { a => HistSketch(a.cast(0, LongType)) }
+    fn("vector_avg", 1) { a => VectorAvg(a.cast(0, DoubleArray)) }
+    fn("vector_sum_long", 1) { a => VectorSumLong(a.cast(0, LongArray)) }
     spark.udf.register("ma_agg", udaf(new MaAggregator))
   }
 }

@@ -1,70 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
-
-/** The PQ coding pass's two remaining per-row HOFs replaced
-  * (optimization r14 — the [[QuantizeUnit]] standing rule: a
-  * per-element lambda on a hot column does not belong in
-  * `transform`/`zip_with`). Both run over the FULL corpus in every
-  * consumer of the coded frame — pq1/sim5 directly, sim6/knn2/ir3/hn2
-  * through the IVF-PQ coding pass, plus every PQ training iteration.
-  * QuantizeGrid is codegen'd; PqScores is a deliberate
-  * CodegenFallback — see its scaladoc for the measured JIT cliff:
-  *
-  *  - [[QuantizeGrid]] `quantize_grid(array<double>, q)` — the raw
-  *    integer grid `qx[i] = floor(v[i] * q)` of pq1/sim5's codebook
-  *    domain. Replaces `transform(v, x -> floor(x * q))`; unlike
-  *    [[QuantizeUnit]] there is no normalization (the PQ books train
-  *    on the raw grid so reconstruction error stays an exact integer).
-  *    Null semantics are transform's: null array → null, a null
-  *    ELEMENT maps through the lambda to a null element (not the
-  *    all-null array of the norm-coupled QuantizeUnit — no norm ties
-  *    the elements together here).
-  *  - [[PqScores]] `pq_scores(sub, mat, c2)` — the per-subspace
-  *    assignment scores `out[p] = c2[p] − 2·(sub·mat[p])`
-  *    (‖c_p‖² − 2·sub·c_p; argmin = nearest codebook entry). Replaces
-  *    `zip_with(typedLit(c2), matrix_dots(sub, typedLit(mat)),
-  *    (a, b) => a - 2.0 * b)` — matrix_dots was already codegen'd but
-  *    the zip_with tail evaluated interpreted per codebook entry per
-  *    row. The dot accumulates strict left-to-right (identical to
-  *    [[MatrixDots]]' foldable path), then `c2[p] - (2.0 * dot)` in
-  *    the lambda's exact IEEE op order, so scores are bit-identical
-  *    and the oracle replay is untouched. Codebooks are bounded model
-  *    state (PQ_S × PQ_K × PQ_D longs) riding as foldable literal
-  *    children, flattened to codegen reference objects lazily — see
-  *    the equality note on the case class. Null semantics match the
-  *    composite form: null input array → null; a null element or a
-  *    width mismatch → the all-null K array (matrix_dots'
-  *    all-or-nothing nulls, mapped through the lambda).
-  *
-  * ArrayFoldsSpec pins both against the HOF forms they replace on
-  * real corpus rows (doubleToLongBits agreement) plus the null/empty/
-  * mismatch edges.
-  */
-case class QuantizeGrid(child: Expression, q: Int) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"quantize_grid expects array<double>, got ${other.catalogString}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-  override def nullable: Boolean = true
-  override def prettyName: String = "quantize_grid"
-
-  override def nullSafeEval(v: Any): Any =
-    PqCoding.quantizeGrid(v.asInstanceOf[ArrayData], q)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.PqCoding.quantizeGrid($c, $q)")
-
-  override protected def withNewChildInternal(newChild: Expression): QuantizeGrid =
-    copy(child = newChild)
-}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** The codebook and its squared norms are foldable CHILDREN (literal
   * expressions), not constructor arrays: raw `Array` fields compare by
@@ -139,9 +79,49 @@ case class PqScores(first: Expression, second: Expression, third: Expression)
     copy(first = newFirst, second = newSecond, third = newThird)
 }
 
+/** The PQ coding pass's two remaining per-row HOFs replaced
+  * (optimization r14 — the [[QuantizeUnit]] standing rule: a
+  * per-element lambda on a hot column does not belong in
+  * `transform`/`zip_with`). Both run over the FULL corpus in every
+  * consumer of the coded frame — pq1/sim5 directly, sim6/knn2/ir3/hn2
+  * through the IVF-PQ coding pass, plus every PQ training iteration.
+  * quantize_grid is a static kernel call inside generated code;
+  * PqScores is a deliberate CodegenFallback — see its scaladoc for the
+  * measured JIT cliff:
+  *
+  *  - [[PqCoding.quantizeGrid]] `quantize_grid(array<double>, q)` — the raw
+  *    integer grid `qx[i] = floor(v[i] * q)` of pq1/sim5's codebook
+  *    domain. Replaces `transform(v, x -> floor(x * q))`; unlike
+  *    [[QuantizeUnit]] there is no normalization (the PQ books train
+  *    on the raw grid so reconstruction error stays an exact integer).
+  *    Null semantics are transform's: null array → null, a null
+  *    ELEMENT maps through the lambda to a null element (not the
+  *    all-null array of the norm-coupled QuantizeUnit — no norm ties
+  *    the elements together here).
+  *  - [[PqScores]] `pq_scores(sub, mat, c2)` — the per-subspace
+  *    assignment scores `out[p] = c2[p] − 2·(sub·mat[p])`
+  *    (‖c_p‖² − 2·sub·c_p; argmin = nearest codebook entry). Replaces
+  *    `zip_with(typedLit(c2), matrix_dots(sub, typedLit(mat)),
+  *    (a, b) => a - 2.0 * b)` — matrix_dots was already codegen'd but
+  *    the zip_with tail evaluated interpreted per codebook entry per
+  *    row. The dot accumulates strict left-to-right (identical to
+  *    [[MatrixDots]]' foldable path), then `c2[p] - (2.0 * dot)` in
+  *    the lambda's exact IEEE op order, so scores are bit-identical
+  *    and the oracle replay is untouched. Codebooks are bounded model
+  *    state (PQ_S × PQ_K × PQ_D longs) riding as foldable literal
+  *    children, flattened to codegen reference objects lazily — see
+  *    the equality note on the case class. Null semantics match the
+  *    composite form: null input array → null; a null element or a
+  *    width mismatch → the all-null K array (matrix_dots'
+  *    all-or-nothing nulls, mapped through the lambda).
+  *
+  * ArrayFoldsSpec pins both against the HOF forms they replace on
+  * real corpus rows (doubleToLongBits agreement) plus the null/empty/
+  * mismatch edges.
+  */
 object PqCoding {
 
-  /** Called from both interpreted eval and generated code. */
+  /** `floor(v[i] * q)` per element, a null element staying null. */
   def quantizeGrid(v: ArrayData, q: Int): ArrayData = {
     val n = v.numElements()
     val out = new Array[Any](n)
@@ -156,7 +136,7 @@ object PqCoding {
     new GenericArrayData(out)
   }
 
-  /** Called from both interpreted eval and generated code. */
+  /** [[PqScores]]' kernel over the flattened codebook. */
   def pqScores(v: ArrayData, flat: Array[Double], dim: Int,
       c2: Array[Double]): ArrayData = {
     val k = c2.length

@@ -1,62 +1,40 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** qt1's whole scalar-int8 quantization measurement in one codegen'd
-  * pass: `struct(s, checksum, l2)` where `s = max|x| / 127`,
-  * `q_i = (s == 0) ? 0 : floor(x_i / s + 0.5)`, `checksum = Σ long(q_i)`
-  * and `l2 = Σ (x_i − q_i·s)²` — the four chained HOF passes it
-  * replaces (`array_max(transform(abs))`, `transform(floor)`,
-  * `aggregate(cast-sum)`, `aggregate(zip_with(err²))`) each ran their
-  * lambdas interpreted per ELEMENT over the corpus-sized embedding
-  * stream, allocating two intermediate arrays per row (optimization
-  * r14; the LongMatchCount/BandKeys class).
-  *
-  * Bit-identical by construction: `max|x|` = `max(max(x), −min(x))`
-  * evaluated here exactly as the HOF's element loop would (no
-  * reordering of the comparison chain — max is order-free), the
-  * checksum's double→long cast truncates toward zero like the HOF's
-  * `cast`, and both sums fold LEFT TO RIGHT in element order, so the
-  * IEEE sums match the `aggregate` folds bit for bit. Null ARRAY →
-  * null (standard propagation); a null ELEMENT (unreachable —
-  * embeddings parquet arrays carry no null elements, and the oracle
-  * assumes the same) nulls checksum and l2 while the scale still skips
-  * it, mirroring array_max's null-skip and the folds' null
-  * propagation. ArrayFoldsSpec pins agreement with the full HOF chain
-  * on real embeddings. */
-case class QuantizeStats(child: Expression) extends UnaryExpression {
+object QuantizeStats {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"quantize_stats expects array<double>, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = StructType(Seq(
+  /** `quantize_stats`' result: `struct(s, checksum, l2)`. */
+  val resultType: StructType = StructType(Seq(
     StructField("s", DoubleType, nullable = true),
     StructField("checksum", LongType, nullable = true),
     StructField("l2", DoubleType, nullable = true)))
-  override def prettyName: String = "quantize_stats"
 
-  override def nullSafeEval(input: Any): Any =
-    QuantizeStats.compute(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.QuantizeStats.compute($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): QuantizeStats =
-    copy(child = newChild)
-}
-
-object QuantizeStats {
-
-  /** Called from both interpreted eval and generated code. */
+  /** qt1's whole scalar-int8 quantization measurement in one
+    * pass: `struct(s, checksum, l2)` where `s = max|x| / 127`,
+    * `q_i = (s == 0) ? 0 : floor(x_i / s + 0.5)`, `checksum = Σ long(q_i)`
+    * and `l2 = Σ (x_i − q_i·s)²` — the four chained HOF passes it
+    * replaces (`array_max(transform(abs))`, `transform(floor)`,
+    * `aggregate(cast-sum)`, `aggregate(zip_with(err²))`) each ran their
+    * lambdas interpreted per ELEMENT over the corpus-sized embedding
+    * stream, allocating two intermediate arrays per row (optimization
+    * r14; the LongMatchCount/BandKeys class).
+    *
+    * Bit-identical by construction: `max|x|` = `max(max(x), −min(x))`
+    * evaluated here exactly as the HOF's element loop would (no
+    * reordering of the comparison chain — max is order-free), the
+    * checksum's double→long cast truncates toward zero like the HOF's
+    * `cast`, and both sums fold LEFT TO RIGHT in element order, so the
+    * IEEE sums match the `aggregate` folds bit for bit. Null ARRAY →
+    * null (standard propagation); a null ELEMENT (unreachable —
+    * embeddings parquet arrays carry no null elements, and the oracle
+    * assumes the same) nulls checksum and l2 while the scale still skips
+    * it, mirroring array_max's null-skip and the folds' null
+    * propagation. ArrayFoldsSpec pins agreement with the full HOF chain
+    * on real embeddings. */
   def compute(v: ArrayData): InternalRow = {
     val n = v.numElements()
     // scale: array_max skips null elements; max of an all-null/empty

@@ -1,10 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Shared constants for ENGINE-NEUTRAL LSH hashing (MinHash + SimHash).
@@ -119,45 +115,13 @@ object RkLsh {
       |  (a, x) -> (a * 31 + x) % 1099511627776)""".stripMargin
 }
 
-/** Distinct word-k-gram shingle hashes with ENGINE-NEUTRAL values:
-  * the same windowing/dedup semantics as [[ShingleHashes]], but the
-  * hash is the RK construction from [[RkLsh]] — word hash
-  * `(h·31 + char) mod 2^40` folded `(h·1000003 + wh) mod 2^40` over the
-  * window — so a DuckDB oracle reproduces the VALUES, not just the set
-  * identity. Feeds dd2's MinHash signatures (which must hash-match the
-  * oracle end to end, unlike dd4 whose oracle re-joins raw strings).
-  *
-  * Chars hash by Java char code — identical to `ascii()` for this
-  * corpus's single-byte text (same caveat as [[RollingHashFp]]).
-  * Windows `i ∈ [0, max(n−k, 0)]` with the final windows clamped at
-  * the array end: documents shorter than k yield one truncated shingle.
-  */
-case class RkShingleHashes(child: Expression, k: Int)
-  extends UnaryExpression {
-
-  require(k >= 1, s"shingle size must be >= 1, got $k")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"rk_shingle_hashes expects array<string>, got ${other.catalogString}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "rk_shingle_hashes"
-
-  override def nullSafeEval(input: Any): Any =
-    RkShingleHashes.compute(input.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.RkShingleHashes.compute($c, $k)")
-
-  override protected def withNewChildInternal(newChild: Expression): RkShingleHashes =
-    copy(child = newChild)
-}
-
 object RkShingleHashes {
   import RkLsh.{M40, MUL}
 
+  /** Engine-neutral RK word hash of a single string (`rk_word_hash`):
+    * `(h·31 + c) mod 2^40` over the chars — the scalar building block
+    * dd3's SimHash derives its 63-bit fingerprints from. DuckDB mirror:
+    * [[RkLsh.wordSql]]. */
   def wordHash(s: UTF8String): Long = {
     val str = s.toString
     var h = 0L
@@ -166,7 +130,20 @@ object RkShingleHashes {
     h
   }
 
-  /** Called from both interpreted eval and generated code. */
+  /** Distinct word-k-gram shingle hashes with ENGINE-NEUTRAL values
+    * (`rk_shingle_hashes`): the same windowing/dedup semantics as
+    * [[ShingleHashes.compute]], but the hash is the RK construction
+    * from [[RkLsh]] — word hash
+    * `(h·31 + char) mod 2^40` folded `(h·1000003 + wh) mod 2^40` over the
+    * window — so a DuckDB oracle reproduces the VALUES, not just the set
+    * identity. Feeds dd2's MinHash signatures (which must hash-match the
+    * oracle end to end, unlike dd4 whose oracle re-joins raw strings).
+    *
+    * Chars hash by Java char code — identical to `ascii()` for this
+    * corpus's single-byte text (same caveat as [[RollingHashFp]]).
+    * Windows `i ∈ [0, max(n−k, 0)]` with the final windows clamped at
+    * the array end: documents shorter than k yield one truncated shingle.
+    */
   def compute(words: ArrayData, k: Int): ArrayData = {
     val n = words.numElements()
     val m = math.max(n - k + 1, 1)
@@ -187,27 +164,4 @@ object RkShingleHashes {
     }
     new GenericArrayData(if (cnt == m) out else java.util.Arrays.copyOf(out, cnt))
   }
-}
-
-/** Engine-neutral RK word hash of a single string: `(h·31 + c) mod 2^40`
-  * over the chars — the scalar building block dd3's SimHash derives its
-  * 63-bit fingerprints from. DuckDB mirror: [[RkLsh.wordSql]]. */
-case class RkWordHash(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"rk_word_hash expects string, got ${other.catalogString}")
-  }
-  override def dataType: DataType = LongType
-  override def prettyName: String = "rk_word_hash"
-
-  override def nullSafeEval(input: Any): Any =
-    RkShingleHashes.wordHash(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.RkShingleHashes.wordHash($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): RkWordHash =
-    copy(child = newChild)
 }

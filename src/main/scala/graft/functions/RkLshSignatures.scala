@@ -1,10 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
 /** Random-hyperplane LSH signatures with ENGINE-NEUTRAL ±1 Rademacher
   * planes — the oracle-checkable replacement for the round-2 float
@@ -29,33 +25,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * hash-matches [[DoubleDot]]) — so signature BITS, not just their
   * distribution, agree with the oracle's.
   *
-  * Same compilation story as [[LshSignatures]]: one compiled loop over
-  * a cached plane matrix instead of tables×bits×dim inlined literals.
+  * [[compute]] (`rk_lsh_signatures`) is one compiled loop over a cached
+  * plane matrix instead of tables×bits×dim inlined literals; the
+  * registry rejects shapes outside 1 ≤ bits ≤ 30, tables·bits ≤ 512.
   */
-case class RkLshSignatures(child: Expression, tables: Int, bits: Int)
-  extends UnaryExpression {
-
-  require(tables >= 1 && bits >= 1 && bits <= 30 && tables * bits <= 512,
-    s"implausible LSH shape: $tables x $bits")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"rk_lsh_signatures expects array<double>, got ${other.catalogString}")
-  }
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "rk_lsh_signatures"
-
-  override def nullSafeEval(input: Any): Any =
-    RkLshSignatures.compute(input.asInstanceOf[ArrayData], tables, bits)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.RkLshSignatures.compute($c, $tables, $bits)")
-
-  override protected def withNewChildInternal(newChild: Expression): RkLshSignatures =
-    copy(child = newChild)
-}
-
 object RkLshSignatures {
 
   /** ±1.0 from the parity of the two-round mix over pid·dim + d. */
@@ -75,7 +48,8 @@ object RkLshSignatures {
     cache.computeIfAbsent((n, dim), _ =>
       Array.tabulate(n, dim)((p, d) => planeComponent(p, dim, d)))
 
-  /** Called from both interpreted eval and generated code. */
+  /** One `bits`-bit signature per table: bit j is set when the dot
+    * with plane `t·bits + j` is ≥ 0. */
   def compute(v: ArrayData, tables: Int, bits: Int): ArrayData = {
     val dim = v.numElements()
     val vec = new Array[Double](dim)

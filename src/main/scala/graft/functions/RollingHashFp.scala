@@ -1,13 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /** Rabin–Karp rolling-hash fingerprint of a tokenized document:
-  * returns `[min_hash, full_hash]` where
+  * returns `[min_hash, full_hash]` (`rolling_hash`) where
   *
   *  - word hash  = fold over the word's char codes: (h·31 + c) mod 2^40
   *  - shingle    = fold over a k-word window's word hashes:
@@ -19,7 +15,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * This is arithmetic-identical to the `transform`/`aggregate` Column
   * formulation it replaces (and to the DuckDB oracle's
   * list_reduce/list_transform mirror — ta5 stays fully oracle-checked);
-  * the point of the expression is evaluation cost: higher-order
+  * the point of the kernel is evaluation cost: higher-order
   * functions run their lambdas interpreted, and the per-character inner
   * fold made ta5 one of the most expensive linear scans in the suite
   * (6.9 s at sf1). Here the same folds run as one compiled pass.
@@ -28,35 +24,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * single-byte text this corpus guarantees; documents with astral-plane
   * code points would need code-point iteration on both engines.
   */
-case class RollingHashFp(child: Expression, k: Int)
-  extends UnaryExpression {
-
-  require(k >= 1, s"shingle size must be >= 1, got $k")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"rolling_hash expects array<string>, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "rolling_hash"
-
-  override def nullSafeEval(input: Any): Any =
-    RollingHashFp.compute(input.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.RollingHashFp.compute($c, $k)")
-
-  override protected def withNewChildInternal(newChild: Expression): RollingHashFp =
-    copy(child = newChild)
-}
-
 object RollingHashFp {
 
   private final val M40 = 1099511627776L // 2^40
 
-  /** Called from both interpreted eval and generated code. */
   def compute(words: ArrayData, k: Int): ArrayData = {
     val n = words.numElements()
     val wh = new Array[Long](n)

@@ -1,84 +1,43 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
-
-/** The floor-scaled cosine vector of a dots column against a fixed
-  * centroid-norm array: `out[i] = floor(dots[i] / (unrm * norms[i])
-  * * 1e6) / 1e6` — cls1/dc3's per-row score step, in one codegen'd
-  * pass.
-  *
-  * The built-in formulation (`zip_with(matrix_dots(...),
-  * typedLit(norms), (d, n) => floorE6(d / (unrm * n)))`) evaluates its
-  * lambda through the higher-order-function interpreter per CENTROID
-  * per row next to the already-codegen'd `matrix_dots` (optimization
-  * r14 — the LongMatchCount class, K-element tail). The norm array
-  * rides as a codegen reference object (model state, bounded by the
-  * label/benchmark count, never corpus).
-  *
-  * Arithmetic matches `Exact.floorE6` exactly: one divide, one
-  * multiply by 1e6 (the long literal widens to an exact double), a
-  * floor-to-long (Java truncation semantics on overflow/NaN, as
-  * Spark's floor(double)→bigint), then the long→double divide by 1e6.
-  * zip_with's null padding is reproduced: the output length is
-  * max(|dots|, |norms|) with nulls where either side runs out, and a
-  * null dots ELEMENT yields a null score (unreachable — matrix_dots
-  * emits none; ArrayFoldsSpec pins agreement on real rows). A null
-  * dots ARRAY or null unrm yields null (standard propagation —
-  * unrm is a norm of a non-null vector at both call sites).
-  *
-  * CAVEAT (r14, learned on [[PqScores]]): `norms` is a raw Array
-  * constructor field, which compares by REFERENCE under case-class
-  * equality — plan canonicalization (`sameResult`, cached-plan
-  * lookup) treats two value-equal constructions as different. Safe
-  * here only because both call sites (cls1/dc3) construct the
-  * expression exactly once per plan and nothing re-derives a
-  * pinned frame through it; if that ever changes, move the norms to
-  * a foldable literal CHILD as PqScores does. */
-case class ScaledCos(left: Expression, right: Expression, norms: Array[Double])
-  extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), DoubleType) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"scaled_cos expects (array<double>, double), got $other")
-    }
-
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
-  override def prettyName: String = "scaled_cos"
-
-  override def nullSafeEval(dots: Any, unrm: Any): Any =
-    ScaledCos.compute(dots.asInstanceOf[ArrayData],
-      unrm.asInstanceOf[Double], norms)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ns = ctx.addReferenceObj("cosNorms", norms, "double[]")
-    defineCodeGen(ctx, ev, (d, u) =>
-      s"graft.functions.ScaledCos.compute($d, $u, $ns)")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): ScaledCos =
-    copy(left = newLeft, right = newRight)
-}
 
 object ScaledCos {
 
-  /** Called from both interpreted eval and generated code. */
-  def compute(dots: ArrayData, unrm: Double, norms: Array[Double]): ArrayData = {
+  /** The floor-scaled cosine vector of a dots column against a fixed
+    * centroid-norm array (`scaled_cos`): `out[i] = floor(dots[i] /
+    * (unrm * norms[i]) * 1e6) / 1e6` — cls1/dc3's per-row score step,
+    * in one pass.
+    *
+    * The built-in formulation (`zip_with(matrix_dots(...),
+    * typedLit(norms), (d, n) => floorE6(d / (unrm * n)))`) evaluates its
+    * lambda through the higher-order-function interpreter per CENTROID
+    * per row next to the already-codegen'd `matrix_dots` (optimization
+    * r14 — the LongMatchCount class, K-element tail). The norms are a
+    * literal argument over primitive-backed UnsafeArrayData (model
+    * state, bounded by the label/benchmark count, never corpus).
+    *
+    * Arithmetic matches `Exact.floorE6` exactly: one divide, one
+    * multiply by 1e6 (the long literal widens to an exact double), a
+    * floor-to-long (Java truncation semantics on overflow/NaN, as
+    * Spark's floor(double)→bigint), then the long→double divide by 1e6.
+    * zip_with's null padding is reproduced: the output length is
+    * max(|dots|, |norms|) with nulls where either side runs out, and a
+    * null dots ELEMENT yields a null score (unreachable — matrix_dots
+    * emits none; ArrayFoldsSpec pins agreement on real rows). A null
+    * dots ARRAY or null unrm yields null (standard propagation —
+    * unrm is a norm of a non-null vector at both call sites). */
+  def compute(dots: ArrayData, unrm: Double, norms: ArrayData): ArrayData = {
     val nd = dots.numElements()
-    val n = math.max(nd, norms.length)
+    val nn = norms.numElements()
+    val n = math.max(nd, nn)
     val out = new Array[Any](n)
     var i = 0
     while (i < n) {
       out(i) =
-        if (i >= nd || i >= norms.length || dots.isNullAt(i)) null
+        if (i >= nd || i >= nn || dots.isNullAt(i)) null
         else {
-          val t = dots.getDouble(i) / (unrm * norms(i))
+          val t = dots.getDouble(i) / (unrm * norms.getDouble(i))
           java.lang.Double.valueOf(math.floor(t * 1000000.0).toLong / 1e6)
         }
       i += 1

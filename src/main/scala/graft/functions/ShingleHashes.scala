@@ -1,90 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
-
-/** Distinct word-`k`-gram shingle hashes of a tokenized document, as one
-  * codegen-friendly pass.
-  *
-  * The built-in formulation
-  * `array_distinct(transform(sequence(1, greatest(n-k+1, 1)), i ->
-  * xxhash64(concat_ws(" ", slice(words, i, k)))))` evaluates its lambda
-  * interpreted (higher-order functions sit outside whole-stage codegen)
-  * and re-hashes every word k times through string concatenation; on the
-  * dedup corpus that interpretation was the single largest cost of the
-  * shingle self-join pipeline, paid 3× per query (both self-join sides
-  * plus the document-frequency scan). This expression hashes each word
-  * once, mixes word hashes into shingle hashes, and dedups in place.
-  *
-  * Shingle identity matches the oracle's string identity exactly: words
-  * contain no separator characters, so (w_i..w_{i+k-1}) tuples collide
-  * iff their space-joined strings collide. The hash VALUE is deliberately
-  * engine-local (a 64-bit FNV/avalanche mix, not Spark's xxhash64) — the
-  * DuckDB oracle joins on raw shingle strings, so only injectivity
-  * matters, and a 2^-64-per-pair collision would surface as a hash
-  * mismatch in the correctness gate.
-  *
-  * Windowing semantics mirror `sequence(1, greatest(n-k+1, 1))` +
-  * clamped `slice`: documents shorter than k words yield exactly one
-  * truncated shingle.
-  */
-case class ShingleHashes(child: Expression, k: Int)
-  extends UnaryExpression {
-
-  require(k >= 1, s"shingle size must be >= 1, got $k")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"shingle_hashes expects array<string>, got ${other.catalogString}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "shingle_hashes"
-
-  override def nullSafeEval(input: Any): Any =
-    ShingleHashes.compute(input.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ShingleHashes.compute($c, $k)")
-
-  override protected def withNewChildInternal(newChild: Expression): ShingleHashes =
-    copy(child = newChild)
-}
-
-/** Positional variant of [[ShingleHashes]]: the same word-`k`-gram
-  * hashes, position-ordered and NOT deduplicated — element `i` of the
-  * output is the hash of the shingle starting at token `i`, so
-  * `posexplode` recovers (position, shingle) pairs. Duplicated-span
-  * detection (dd8) needs every occurrence: a gram repeated WITHIN one
-  * document is a duplicate too, and each occurrence covers a different
-  * token span. Windowing matches [[ShingleHashes]] exactly (documents
-  * shorter than k words yield one clamped shingle at position 0). */
-case class ShingleHashesPos(child: Expression, k: Int)
-  extends UnaryExpression {
-
-  require(k >= 1, s"shingle size must be >= 1, got $k")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"shingle_hashes_pos expects array<string>, got ${other.catalogString}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "shingle_hashes_pos"
-
-  override def nullSafeEval(input: Any): Any =
-    ShingleHashes.computePos(input.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ShingleHashes.computePos($c, $k)")
-
-  override protected def withNewChildInternal(newChild: Expression): ShingleHashesPos =
-    copy(child = newChild)
-}
 
 object ShingleHashes {
 
@@ -108,7 +25,31 @@ object ShingleHashes {
     mix(h)
   }
 
-  /** Called from both interpreted eval and generated code. */
+  /** Distinct word-`k`-gram shingle hashes of a tokenized document, in
+    * one pass (`shingle_hashes`).
+    *
+    * The built-in formulation
+    * `array_distinct(transform(sequence(1, greatest(n-k+1, 1)), i ->
+    * xxhash64(concat_ws(" ", slice(words, i, k)))))` evaluates its lambda
+    * interpreted (higher-order functions sit outside whole-stage codegen)
+    * and re-hashes every word k times through string concatenation; on the
+    * dedup corpus that interpretation was the single largest cost of the
+    * shingle self-join pipeline, paid 3× per query (both self-join sides
+    * plus the document-frequency scan). This kernel hashes each word
+    * once, mixes word hashes into shingle hashes, and dedups in place.
+    *
+    * Shingle identity matches the oracle's string identity exactly: words
+    * contain no separator characters, so (w_i..w_{i+k-1}) tuples collide
+    * iff their space-joined strings collide. The hash VALUE is deliberately
+    * engine-local (a 64-bit FNV/avalanche mix, not Spark's xxhash64) — the
+    * DuckDB oracle joins on raw shingle strings, so only injectivity
+    * matters, and a 2^-64-per-pair collision would surface as a hash
+    * mismatch in the correctness gate.
+    *
+    * Windowing semantics mirror `sequence(1, greatest(n-k+1, 1))` +
+    * clamped `slice`: documents shorter than k words yield exactly one
+    * truncated shingle.
+    */
   def compute(words: ArrayData, k: Int): ArrayData = {
     val n = words.numElements()
     val m = math.max(n - k + 1, 1)
@@ -131,7 +72,14 @@ object ShingleHashes {
     new GenericArrayData(if (cnt == m) out else java.util.Arrays.copyOf(out, cnt))
   }
 
-  /** [[ShingleHashesPos]] kernel: position-ordered, no dedup. */
+  /** Positional variant of [[compute]] (`shingle_hashes_pos`): the same
+    * word-`k`-gram hashes, position-ordered and NOT deduplicated — element `i` of the
+    * output is the hash of the shingle starting at token `i`, so
+    * `posexplode` recovers (position, shingle) pairs. Duplicated-span
+    * detection (dd8) needs every occurrence: a gram repeated WITHIN one
+    * document is a duplicate too, and each occurrence covers a different
+    * token span. Windowing matches [[compute]] exactly (documents
+    * shorter than k words yield one clamped shingle at position 0). */
   def computePos(words: ArrayData, k: Int): ArrayData = {
     val n = words.numElements()
     val m = math.max(n - k + 1, 1)

@@ -1,69 +1,31 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, LongType}
-
-/** Union length of the intervals `[p, min(p + k, nt))` over a SORTED
-  * position array — dd8's duplicated-token coverage count, in one
-  * codegen'd pass.
-  *
-  * The HOF formulation it replaces —
-  * {{{aggregate(ps, struct(cov 0L, cur 0L), (a, p) -> struct(
-  *    a.cov + greatest(0, least(p+k, nt) - greatest(p, a.cur)),
-  *    greatest(a.cur, least(p+k, nt))), a -> a.cov)}}}
-  * — allocated a fresh 2-field struct per POSITION through the
-  * higher-order-function interpreter; on the replica-heavy fixture
-  * nearly every position of a duplicated document is in `ps`, so the
-  * fold runs at token-stream cardinality (optimization r14, the same
-  * class as LongMatchCount/BandKeys).
-  *
-  * Sweep arithmetic is identical: cov += max(0, min(p+k, nt) −
-  * max(p, cur)); cur = max(cur, min(p+k, nt)). Null inputs (array or
-  * nt) are null by standard propagation; a null ELEMENT returns null —
-  * unreachable at the call site because `ps` is
-  * `array_sort(collect_list(...))` and collect_list never emits nulls
-  * (the HOF's behavior on that input is a greatest/least null-skip
-  * accident nobody should preserve; ArrayFoldsSpec pins agreement on
-  * every reachable input). */
-case class SpanCover(left: Expression, right: Expression, k: Int)
-  extends BinaryExpression {
-
-  require(k > 0, s"span_cover needs k > 0, got $k")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (org.apache.spark.sql.types.ArrayType(LongType, _), LongType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"span_cover expects (array<bigint>, bigint), got $other")
-    }
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "span_cover"
-
-  override def nullSafeEval(ps: Any, nt: Any): Any =
-    SpanCover.compute(ps.asInstanceOf[ArrayData], nt.asInstanceOf[Long], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val r = ctx.freshName("cov")
-    nullSafeCodeGen(ctx, ev, (ps, nt) => s"""
-       |java.lang.Long $r = graft.functions.SpanCover.compute($ps, $nt, $k);
-       |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r.longValue(); }
-     """.stripMargin)
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SpanCover =
-    copy(left = newLeft, right = newRight)
-}
 
 object SpanCover {
 
-  /** Called from both interpreted eval and generated code. */
+  /** Union length of the intervals `[p, min(p + k, nt))` over a SORTED
+    * position array (`span_cover`) — dd8's duplicated-token coverage
+    * count, in one pass.
+    *
+    * The HOF formulation it replaces —
+    * {{{aggregate(ps, struct(cov 0L, cur 0L), (a, p) -> struct(
+    *    a.cov + greatest(0, least(p+k, nt) - greatest(p, a.cur)),
+    *    greatest(a.cur, least(p+k, nt))), a -> a.cov)}}}
+    * — allocated a fresh 2-field struct per POSITION through the
+    * higher-order-function interpreter; on the replica-heavy fixture
+    * nearly every position of a duplicated document is in `ps`, so the
+    * fold runs at token-stream cardinality (optimization r14, the same
+    * class as LongMatchCount/BandKeys).
+    *
+    * Sweep arithmetic is identical: cov += max(0, min(p+k, nt) −
+    * max(p, cur)); cur = max(cur, min(p+k, nt)). Null inputs (array or
+    * nt) are null by standard propagation; a null ELEMENT returns null —
+    * unreachable at the call site because `ps` is
+    * `array_sort(collect_list(...))` and collect_list never emits nulls
+    * (the HOF's behavior on that input is a greatest/least null-skip
+    * accident nobody should preserve; ArrayFoldsSpec pins agreement on
+    * every reachable input). */
   def compute(ps: ArrayData, nt: Long, k: Int): java.lang.Long = {
     val n = ps.numElements()
     var cov = 0L

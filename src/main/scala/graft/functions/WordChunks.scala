@@ -1,59 +1,31 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
-
-/** Non-overlapping fixed-`k`-word chunk strings of a tokenized
-  * document in one codegen'd pass — dd6's chunking unit.
-  *
-  * The built-in formulation
-  * (`transform(sequence(0, nc-1), i -> array_join(slice(w, i*k+1, k), " "))`)
-  * evaluates its lambda through the higher-order-function interpreter
-  * per CHUNK, allocating a sequence and one slice array per chunk per
-  * document (optimization r14 — the WordPairs class). This expression
-  * emits the ceil(n/k) chunk strings in one linear pass with no
-  * intermediate arrays.
-  *
-  * Semantics match the HOF chain exactly on every reachable input:
-  * the last chunk joins the remaining < k words; null ELEMENTS are
-  * skipped with no separator (array_join's contract — unreachable,
-  * split() emits none); a null ARRAY yields null. The HOF's nc
-  * arithmetic never sees n = 0 (split of a non-null string returns at
-  * least [""]), so chunk count is always ≥ 1 — reproduced as
-  * ceil(n/k) with the same floor-division arithmetic.
-  */
-case class WordChunks(child: Expression, k: Int) extends UnaryExpression {
-
-  require(k > 0, s"word_chunks needs k > 0, got $k")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"word_chunks expects array<string>, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "word_chunks"
-
-  override def nullSafeEval(input: Any): Any =
-    WordChunks.compute(input.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.WordChunks.compute($c, $k)")
-
-  override protected def withNewChildInternal(newChild: Expression): WordChunks =
-    copy(child = newChild)
-}
 
 object WordChunks {
 
   private val SEP = UTF8String.fromString(" ")
 
-  /** Called from both interpreted eval and generated code. */
+  /** Non-overlapping fixed-`k`-word chunk strings of a tokenized
+    * document in one pass (`word_chunks`) — dd6's chunking unit.
+    *
+    * The built-in formulation
+    * (`transform(sequence(0, nc-1), i -> array_join(slice(w, i*k+1, k), " "))`)
+    * evaluates its lambda through the higher-order-function interpreter
+    * per CHUNK, allocating a sequence and one slice array per chunk per
+    * document (optimization r14 — the WordPairs class). This kernel
+    * emits the ceil(n/k) chunk strings in one linear pass with no
+    * intermediate arrays.
+    *
+    * Semantics match the HOF chain exactly on every reachable input:
+    * the last chunk joins the remaining < k words; null ELEMENTS are
+    * skipped with no separator (array_join's contract — unreachable,
+    * split() emits none); a null ARRAY yields null. The HOF's nc
+    * arithmetic never sees n = 0 (split of a non-null string returns at
+    * least [""]), so chunk count is always ≥ 1 — reproduced as
+    * ceil(n/k) with the same floor-division arithmetic.
+    */
   def compute(words: ArrayData, k: Int): ArrayData = {
     val n = words.numElements()
     val nc = (n + k - 1) / k

@@ -1,16 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Adjacent word pairs (bigrams) of a tokenized document in one
-  * codegen-friendly pass — the construction lm1/cooc1/ng1/rep1/apx3
-  * all open with.
+/** Adjacent word pairs (bigrams) of a tokenized document in one pass
+  * (`word_pairs`) — the construction lm1/cooc1/ng1/rep1/apx3 all open
+  * with.
   *
   * The built-in formulations —
   * `zip_with(slice(w,1,n-1), slice(w,2,n-1), struct)` (lm1) and
@@ -18,9 +15,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * evaluate their lambdas through the higher-order-function
   * interpreter per TOKEN, allocating slices/sequences per document
   * (optimization r13: the ShingleHashes move applied to the bigram
-  * family). This expression emits the n−1 pairs in one linear pass.
+  * family). [[compute]] emits the n−1 pairs in one linear pass.
   *
-  * Modes (fixed at plan time):
+  * Modes (fixed at plan time; the registry rejects any other):
   *  - ORD (0):   array<struct<l,r>> — pairs in document order
   *    (lm1's zip_with twin);
   *  - UNORD (1): array<struct<x,y>> — each pair canonically ordered
@@ -33,20 +30,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * sites either filter size ≥ 2 or wrap in when/otherwise(empty));
   * a null words ARRAY yields null (explode drops it). split(text," ")
   * never produces null elements, but the null handling above keeps
-  * the expression a drop-in for arbitrary input.
+  * the kernel a drop-in for arbitrary input.
   */
-case class WordPairs(child: Expression, mode: Int)
-  extends UnaryExpression {
+object WordPairs {
 
-  require(mode >= 0 && mode <= 2, s"word_pairs mode must be 0|1|2, got $mode")
+  private val SEP = UTF8String.fromString(" ")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"word_pairs expects array<string>, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = mode match {
+  /** The result type of `mode` ∈ {0, 1, 2}. */
+  def resultType(mode: Int): DataType = mode match {
     case 0 => ArrayType(StructType(Seq(
       StructField("l", StringType), StructField("r", StringType))), containsNull = false)
     case 1 => ArrayType(StructType(Seq(
@@ -54,23 +45,6 @@ case class WordPairs(child: Expression, mode: Int)
     case 2 => ArrayType(StringType, containsNull = true)
   }
 
-  override def prettyName: String = "word_pairs"
-
-  override def nullSafeEval(input: Any): Any =
-    WordPairs.compute(input.asInstanceOf[ArrayData], mode)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.WordPairs.compute($c, $mode)")
-
-  override protected def withNewChildInternal(newChild: Expression): WordPairs =
-    copy(child = newChild)
-}
-
-object WordPairs {
-
-  private val SEP = UTF8String.fromString(" ")
-
-  /** Called from both interpreted eval and generated code. */
   def compute(words: ArrayData, mode: Int): ArrayData = {
     val n = words.numElements()
     if (n < 2) return new GenericArrayData(Array.empty[Any])

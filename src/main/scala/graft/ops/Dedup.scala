@@ -785,7 +785,7 @@ object Dedup {
     * whose content is mostly boilerplate shared with others.
     *
     * Shape (100 TB): positional gram hashes come from one codegen'd
-    * pass ([[graft.functions.ShingleHashesPos]]); the duplicate-gram
+    * pass ([[graft.functions.ShingleHashes.computePos]]); the duplicate-gram
     * table is a groupBy on the 8-byte hash (map-side partials, shuffle
     * carries hash+count) and joins back behind [[Model.guardedBroadcast]]
     * — broadcast while provably small, shuffle-equi-join on the hash

@@ -218,7 +218,7 @@ object Pipeline {
     * 1970's guarantee: no false NEGATIVES at any load — supersets of the
     * true flag set, with the FP rate as the dial). The corpus side is
     * the real win: membership is pure arithmetic against the sketch via
-    * the codegen'd [[graft.functions.BloomHits]] expression — one narrow
+    * the compiled [[graft.functions.BloomHits]] kernel — one narrow
     * compiled map with NO join, NO shuffle, and no per-gram explode;
     * only flagged doc_ids leave the scan. (A first cut used
     * size(filter(shingles, λ)): Spark evaluates higher-order-function

@@ -1468,7 +1468,7 @@ object Similarity {
     * (ADC search). */
   private def pqModel(spark: SparkSession, dir: String)
       : (Array[Array[Array[Long]]], DataFrame) = {
-    // raw-grid quantize in one codegen'd pass (QuantizeGrid replaces
+    // raw-grid quantize in one codegen'd pass (quantize_grid replaces
     // `transform(v, x -> floor(x * q))` — the HOF evaluated its lambda
     // interpreted on every corpus row; optimization r14)
     graft.functions.GraftFunctions.registerAll(spark)

@@ -6,9 +6,11 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The r14 codegen'd array folds (id_fold, array_sum_long, sum_strlen,
   * long_count_eq, bpe_merge) each pinned against the exact built-in HOF
   * formulation it replaced, on real corpus rows plus the null/empty
-  * edges the corpus never produces. */
+  * edges the corpus never produces — those on both the generated-code
+  * and the interpreted path ([[CodegenPaths.onBothPaths]]). */
 class ArrayFoldsSpec extends AnyFunSuite {
   import TestSpark._
+  import CodegenPaths.onBothPaths
   import spark.implicits._
 
   graft.functions.GraftFunctions.registerAll(spark)
@@ -32,13 +34,15 @@ class ArrayFoldsSpec extends AnyFunSuite {
   }
 
   test("id_fold: empty → seed 0, null element → null, null array → null") {
-    val df = Seq(
-      (1L, Some(Seq[java.lang.Long]())),
-      (2L, Some(Seq[java.lang.Long](5L, null, 7L))),
-      (3L, Option.empty[Seq[java.lang.Long]])).toDF("i", "ids")
-    val rows = df.select(col("i"), call_function("id_fold", col("ids")).as("f"))
-      .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getLong(1))).toMap
-    assert(rows(1L) == 0L && rows(2L) == null && rows(3L) == null)
+    onBothPaths {
+      val df = Seq(
+        (1L, Some(Seq[java.lang.Long]())),
+        (2L, Some(Seq[java.lang.Long](5L, null, 7L))),
+        (3L, Option.empty[Seq[java.lang.Long]])).toDF("i", "ids")
+      val rows = df.select(col("i"), call_function("id_fold", col("ids")).as("f"))
+        .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getLong(1))).toMap
+      assert(rows(1L) == 0L && rows(2L) == null && rows(3L) == null)
+    }
   }
 
   test("array_sum_long agrees with the aggregate HOF, including null edges") {
@@ -47,12 +51,14 @@ class ArrayFoldsSpec extends AnyFunSuite {
     val native = idsDf.select(call_function("array_sum_long", col("ids")).as("s"))
       .collect().map(_.getLong(0))
     assert(hof.nonEmpty && hof.sameElements(native))
-    val edges = Seq(
-      (1L, Some(Seq[java.lang.Long]())),
-      (2L, Some(Seq[java.lang.Long](5L, null))),
-      (3L, Option.empty[Seq[java.lang.Long]])).toDF("i", "ids")
-      .select(col("i"), call_function("array_sum_long", col("ids")).as("s"))
-      .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getLong(1))).toMap
+    val edges = onBothPaths {
+      Seq(
+        (1L, Some(Seq[java.lang.Long]())),
+        (2L, Some(Seq[java.lang.Long](5L, null))),
+        (3L, Option.empty[Seq[java.lang.Long]])).toDF("i", "ids")
+        .select(col("i"), call_function("array_sum_long", col("ids")).as("s"))
+        .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getLong(1))).toMap
+    }
     assert(edges(1L) == 0L && edges(2L) == null && edges(3L) == null)
   }
 
@@ -67,16 +73,18 @@ class ArrayFoldsSpec extends AnyFunSuite {
   }
 
   test("sum_strlen counts code points like length(), and nulls like the HOF") {
-    val df = Seq(
-      (1L, Some(Seq("héllo", "日本語", ""))), // 5 + 3 + 0
-      (2L, Some(Seq[String]())),
-      (3L, Option.empty[Seq[String]])).toDF("i", "w")
-    val rows = df.select(col("i"), call_function("sum_strlen", col("w")).as("s"))
-      .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getLong(1))).toMap
-    assert(rows(1L) == 8L && rows(2L) == 0L && rows(3L) == null)
-    val withNull = Seq(Tuple1(Seq[String]("a", null))).toDF("w")
-      .select(call_function("sum_strlen", col("w")))
-    assert(withNull.head().isNullAt(0))
+    onBothPaths {
+      val df = Seq(
+        (1L, Some(Seq("héllo", "日本語", ""))), // 5 + 3 + 0
+        (2L, Some(Seq[String]())),
+        (3L, Option.empty[Seq[String]])).toDF("i", "w")
+      val rows = df.select(col("i"), call_function("sum_strlen", col("w")).as("s"))
+        .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getLong(1))).toMap
+      assert(rows(1L) == 8L && rows(2L) == 0L && rows(3L) == null)
+      val withNull = Seq(Tuple1(Seq[String]("a", null))).toDF("w")
+        .select(call_function("sum_strlen", col("w")))
+      assert(withNull.head().isNullAt(0))
+    }
   }
 
   test("long_count_eq agrees with size(filter(ids, _ === k)), null elements dropped") {
@@ -85,8 +93,10 @@ class ArrayFoldsSpec extends AnyFunSuite {
     val native = idsDf.select(call_function("long_count_eq", col("ids"), lit(0L)).as("c"))
       .collect().map(_.getLong(0))
     assert(hof.nonEmpty && hof.sameElements(native))
-    val edge = Seq(Tuple1(Seq[java.lang.Long](0L, null, 0L, 3L))).toDF("ids")
-      .select(call_function("long_count_eq", col("ids"), lit(0L))).head().getLong(0)
+    val edge = onBothPaths {
+      Seq(Tuple1(Seq[java.lang.Long](0L, null, 0L, 3L))).toDF("ids")
+        .select(call_function("long_count_eq", col("ids"), lit(0L))).head().getLong(0)
+    }
     assert(edge == 2L)
   }
 
@@ -113,10 +123,12 @@ class ArrayFoldsSpec extends AnyFunSuite {
   }
 
   test("scaled_cos reproduces zip_with's ragged-length null padding") {
-    val out = Seq(Tuple1(Seq(1.0, 2.0))).toDF("dots")
-      .select(call_function("scaled_cos", col("dots"), lit(1.0),
-        typedLit(Seq(1.0, 1.0, 1.0))).as("cs")).head().getSeq[Any](0)
-    assert(out.length == 3 && out(2) == null && out(0) == 1.0)
+    onBothPaths {
+      val out = Seq(Tuple1(Seq(1.0, 2.0))).toDF("dots")
+        .select(call_function("scaled_cos", col("dots"), lit(1.0),
+          typedLit(Seq(1.0, 1.0, 1.0))).as("cs")).head().getSeq[Any](0)
+      assert(out.length == 3 && out(2) == null && out(0) == 1.0)
+    }
   }
 
   test("word_chunks agrees with the transform/slice/array_join HOF on real documents") {
@@ -134,15 +146,17 @@ class ArrayFoldsSpec extends AnyFunSuite {
   }
 
   test("word_chunks edges: short/exact-multiple arrays, null array → null") {
-    def chunksOf(w: Seq[String]) = Seq(Tuple1(w)).toDF("w")
-      .select(call_function("word_chunks", col("w"), lit(3))).head().getSeq[String](0)
-    assert(chunksOf(Seq("a", "b")) == Seq("a b"))
-    assert(chunksOf(Seq("a", "b", "c")) == Seq("a b c"))
-    assert(chunksOf(Seq("a", "b", "c", "d")) == Seq("a b c", "d"))
-    assert(chunksOf(Seq("")) == Seq(""))
-    val nul = Seq(Tuple1(Option.empty[Seq[String]])).toDF("w")
-      .select(call_function("word_chunks", col("w"), lit(3)))
-    assert(nul.head().isNullAt(0))
+    onBothPaths {
+      def chunksOf(w: Seq[String]) = Seq(Tuple1(w)).toDF("w")
+        .select(call_function("word_chunks", col("w"), lit(3))).head().getSeq[String](0)
+      assert(chunksOf(Seq("a", "b")) == Seq("a b"))
+      assert(chunksOf(Seq("a", "b", "c")) == Seq("a b c"))
+      assert(chunksOf(Seq("a", "b", "c", "d")) == Seq("a b c", "d"))
+      assert(chunksOf(Seq("")) == Seq(""))
+      val nul = Seq(Tuple1(Option.empty[Seq[String]])).toDF("w")
+        .select(call_function("word_chunks", col("w"), lit(3)))
+      assert(nul.head().isNullAt(0))
+    }
   }
 
   test("bpe_merge agrees with the aggregate-fold formulation on real corpus words") {
@@ -166,10 +180,12 @@ class ArrayFoldsSpec extends AnyFunSuite {
   }
 
   test("bpe_merge greedy restart: [a,a,a,a] merging (a,a) → [aa,aa]") {
-    val out = Seq(Tuple1(Seq("a", "a", "a", "a"))).toDF("syms")
-      .select(call_function("bpe_merge", col("syms"), lit("a"), lit("a")))
-      .head().getSeq[String](0)
-    assert(out == Seq("aa", "aa"))
+    onBothPaths {
+      val out = Seq(Tuple1(Seq("a", "a", "a", "a"))).toDF("syms")
+        .select(call_function("bpe_merge", col("syms"), lit("a"), lit("a")))
+        .head().getSeq[String](0)
+      assert(out == Seq("aa", "aa"))
+    }
   }
 
   test("span_cover agrees with the interval-union aggregate HOF on real duplicated positions") {
@@ -201,15 +217,17 @@ class ArrayFoldsSpec extends AnyFunSuite {
   }
 
   test("span_cover edges: empty → 0, clamping at nt, overlap merging, null array → null") {
-    val df = Seq(
-      (1L, Some(Seq[java.lang.Long]()), 10L),
-      (2L, Some(Seq[java.lang.Long](0L, 1L, 8L)), 10L), // [0,4)∪[1,5)∪[8,10) = 7
-      (3L, Some(Seq[java.lang.Long](7L)), 8L), // clamped [7,8) = 1
-      (4L, Option.empty[Seq[java.lang.Long]], 10L)).toDF("i", "ps", "nt")
-    val rows = df.select(col("i"),
-        call_function("span_cover", col("ps"), col("nt"), lit(4)).as("c"))
-      .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getLong(1))).toMap
-    assert(rows(1L) == 0L && rows(2L) == 7L && rows(3L) == 1L && rows(4L) == null)
+    onBothPaths {
+      val df = Seq(
+        (1L, Some(Seq[java.lang.Long]()), 10L),
+        (2L, Some(Seq[java.lang.Long](0L, 1L, 8L)), 10L), // [0,4)∪[1,5)∪[8,10) = 7
+        (3L, Some(Seq[java.lang.Long](7L)), 8L), // clamped [7,8) = 1
+        (4L, Option.empty[Seq[java.lang.Long]], 10L)).toDF("i", "ps", "nt")
+      val rows = df.select(col("i"),
+          call_function("span_cover", col("ps"), col("nt"), lit(4)).as("c"))
+        .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getLong(1))).toMap
+      assert(rows(1L) == 0L && rows(2L) == 7L && rows(3L) == 1L && rows(4L) == null)
+    }
   }
 
   test("quantize_stats agrees bit-for-bit with qt1's former HOF chain on real embeddings") {
@@ -238,20 +256,22 @@ class ArrayFoldsSpec extends AnyFunSuite {
   }
 
   test("quantize_stats edges: zero vector → scale 0/checksum 0/l2 0; empty and null array → nulls") {
-    val df = Seq(
-      (1L, Some(Seq(0.0, 0.0))),
-      (2L, Some(Seq.empty[Double])),
-      (3L, Option.empty[Seq[Double]])).toDF("i", "v")
-      .select(col("i"), call_function("quantize_stats", col("v")).as("qs"))
-      .select(col("i"), col("qs.s"), col("qs.checksum"), col("qs.l2"))
-    val rows = df.collect().map(r => r.getLong(0) ->
-      ((if (r.isNullAt(1)) null else r.getDouble(1)),
-       (if (r.isNullAt(2)) null else r.getLong(2)),
-       (if (r.isNullAt(3)) null else r.getDouble(3)))).toMap
-    assert(rows(1L) == ((0.0, 0L, 0.0)))
-    // empty: null scale but fold SEEDS for the sums, like the HOFs
-    assert(rows(2L) == ((null, 0L, 0.0)))
-    assert(rows(3L) == ((null, null, null)))
+    onBothPaths {
+      val df = Seq(
+        (1L, Some(Seq(0.0, 0.0))),
+        (2L, Some(Seq.empty[Double])),
+        (3L, Option.empty[Seq[Double]])).toDF("i", "v")
+        .select(col("i"), call_function("quantize_stats", col("v")).as("qs"))
+        .select(col("i"), col("qs.s"), col("qs.checksum"), col("qs.l2"))
+      val rows = df.collect().map(r => r.getLong(0) ->
+        ((if (r.isNullAt(1)) null else r.getDouble(1)),
+         (if (r.isNullAt(2)) null else r.getLong(2)),
+         (if (r.isNullAt(3)) null else r.getDouble(3)))).toMap
+      assert(rows(1L) == ((0.0, 0L, 0.0)))
+      // empty: null scale but fold SEEDS for the sums, like the HOFs
+      assert(rows(2L) == ((null, 0L, 0.0)))
+      assert(rows(3L) == ((null, null, null)))
+    }
   }
 
   test("quantize_grid agrees with transform(v, x -> floor(x * q)) on real embeddings") {
@@ -267,16 +287,18 @@ class ArrayFoldsSpec extends AnyFunSuite {
   }
 
   test("quantize_grid edges: transform's per-element nulls, empty → empty, null array → null") {
-    val df = Seq(
-      (1L, Some(Seq[java.lang.Double](1.5, null, -0.25))),
-      (2L, Some(Seq.empty[java.lang.Double])),
-      (3L, Option.empty[Seq[java.lang.Double]])).toDF("i", "v")
-      .select(col("i"), call_function("quantize_grid", col("v"), lit(512)).as("qx"))
-    val rows = df.collect().map(r =>
-      r.getLong(0) -> (if (r.isNullAt(1)) null else r.getSeq[Any](1))).toMap
-    assert(rows(1L) == Seq(768L, null, -128L))
-    assert(rows(2L) == Seq.empty)
-    assert(rows(3L) == null)
+    onBothPaths {
+      val df = Seq(
+        (1L, Some(Seq[java.lang.Double](1.5, null, -0.25))),
+        (2L, Some(Seq.empty[java.lang.Double])),
+        (3L, Option.empty[Seq[java.lang.Double]])).toDF("i", "v")
+        .select(col("i"), call_function("quantize_grid", col("v"), lit(512)).as("qx"))
+      val rows = df.collect().map(r =>
+        r.getLong(0) -> (if (r.isNullAt(1)) null else r.getSeq[Any](1))).toMap
+      assert(rows(1L) == Seq(768L, null, -128L))
+      assert(rows(2L) == Seq.empty)
+      assert(rows(3L) == null)
+    }
   }
 
   test("pq_scores agrees with zip_with(c2, matrix_dots, a - 2b) on real grid subvectors") {
@@ -306,29 +328,33 @@ class ArrayFoldsSpec extends AnyFunSuite {
   }
 
   test("pq_scores edges: null element / width mismatch → all-null K, null array → null") {
-    val mat = Seq.tabulate(4)(p => Seq.tabulate(3)(j => (p + j).toDouble))
-    val c2 = mat.map(r => r.map(x => x * x).sum)
-    def scoresOf(sub: Option[Seq[java.lang.Double]]) =
-      Seq(Tuple1(sub)).toDF("sub")
-        .select(call_function("pq_scores", col("sub"), typedLit(mat), typedLit(c2)))
-        .head()
-    val nullEl = scoresOf(Some(Seq[java.lang.Double](1.0, null, 2.0)))
-    assert(nullEl.getSeq[Any](0) == Seq(null, null, null, null))
-    val short = scoresOf(Some(Seq[java.lang.Double](1.0, 2.0)))
-    assert(short.getSeq[Any](0) == Seq(null, null, null, null))
-    assert(scoresOf(None).isNullAt(0))
-    // sanity on the arithmetic itself: sub == mat row 0 → score −‖c0‖²
-    val exact = scoresOf(Some(Seq[java.lang.Double](0.0, 1.0, 2.0))).getSeq[Double](0)
-    assert(exact(0) == -c2(0))
+    onBothPaths {
+      val mat = Seq.tabulate(4)(p => Seq.tabulate(3)(j => (p + j).toDouble))
+      val c2 = mat.map(r => r.map(x => x * x).sum)
+      def scoresOf(sub: Option[Seq[java.lang.Double]]) =
+        Seq(Tuple1(sub)).toDF("sub")
+          .select(call_function("pq_scores", col("sub"), typedLit(mat), typedLit(c2)))
+          .head()
+      val nullEl = scoresOf(Some(Seq[java.lang.Double](1.0, null, 2.0)))
+      assert(nullEl.getSeq[Any](0) == Seq(null, null, null, null))
+      val short = scoresOf(Some(Seq[java.lang.Double](1.0, 2.0)))
+      assert(short.getSeq[Any](0) == Seq(null, null, null, null))
+      assert(scoresOf(None).isNullAt(0))
+      // sanity on the arithmetic itself: sub == mat row 0 → score −‖c0‖²
+      val exact = scoresOf(Some(Seq[java.lang.Double](0.0, 1.0, 2.0))).getSeq[Double](0)
+      assert(exact(0) == -c2(0))
+    }
   }
 
   test("bpe_merge null edges: null array → null, null element appends unmatched") {
-    val nullArr = Seq(Tuple1(Option.empty[Seq[String]])).toDF("syms")
-      .select(call_function("bpe_merge", col("syms"), lit("a"), lit("b")))
-    assert(nullArr.head().isNullAt(0))
-    val withNull = Seq(Tuple1(Seq[String]("a", null, "b"))).toDF("syms")
-      .select(call_function("bpe_merge", col("syms"), lit("a"), lit("b")))
-      .head().getSeq[String](0)
-    assert(withNull == Seq("a", null, "b"))
+    onBothPaths {
+      val nullArr = Seq(Tuple1(Option.empty[Seq[String]])).toDF("syms")
+        .select(call_function("bpe_merge", col("syms"), lit("a"), lit("b")))
+      assert(nullArr.head().isNullAt(0))
+      val withNull = Seq(Tuple1(Seq[String]("a", null, "b"))).toDF("syms")
+        .select(call_function("bpe_merge", col("syms"), lit("a"), lit("b")))
+        .head().getSeq[String](0)
+      assert(withNull == Seq("a", null, "b"))
+    }
   }
 }

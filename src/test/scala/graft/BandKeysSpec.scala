@@ -10,6 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * on the unreachable-by-construction edges. */
 class BandKeysSpec extends AnyFunSuite {
   import TestSpark._
+  import CodegenPaths.onBothPaths
   import spark.implicits._
 
   graft.functions.GraftFunctions.registerAll(spark)
@@ -48,27 +49,35 @@ class BandKeysSpec extends AnyFunSuite {
   }
 
   test("short signature: missing bands fold to the seed 0, partial band folds its prefix") {
-    val (h, n) = both(Seq(5L, 6L, 7L)) // < one full band
-    assert(h == n)
-    assert(n.drop(1).forall(_ == 0L)) // bands 1..7 see empty slices
+    onBothPaths {
+      val (h, n) = both(Seq(5L, 6L, 7L)) // < one full band
+      assert(h == n)
+      assert(n.drop(1).forall(_ == 0L)) // bands 1..7 see empty slices
+    }
   }
 
   test("empty signature: every band is the seed 0, like aggregate over an empty slice") {
-    val (h, n) = both(Seq.empty)
-    assert(h == n && n.forall(_ == 0L))
+    onBothPaths {
+      val (h, n) = both(Seq.empty)
+      assert(h == n && n.forall(_ == 0L))
+    }
   }
 
   test("null element nulls that band's key from its position onward, like the HOF accumulator") {
-    val sig = Seq[java.lang.Long](1L, null, 3L, 4L, 9L, 9L, 9L, 9L)
-    val (h, n) = both(sig)
-    assert(h == n)
-    assert(n.head == null && n(1) != null)
+    onBothPaths {
+      val sig = Seq[java.lang.Long](1L, null, 3L, 4L, 9L, 9L, 9L, 9L)
+      val (h, n) = both(sig)
+      assert(h == n)
+      assert(n.head == null && n(1) != null)
+    }
   }
 
   test("null ARRAY yields null (deliberate difference from the HOF's 8 nulls — unreachable: minhash_sketch never emits null)") {
     val df = Seq(Tuple1(Option.empty[Seq[Long]])).toDF("sig")
-    assert(df.select(call_function("band_keys", col("sig"), lit(BANDS), lit(ROWS)))
-      .head().isNullAt(0))
+    onBothPaths {
+      assert(df.select(call_function("band_keys", col("sig"), lit(BANDS), lit(ROWS)))
+        .head().isNullAt(0))
+    }
     // and the unreachability claim: every sig the sketch emits is non-null
     val sigs = Tables.documents(spark, sf).limit(60)
       .select(col("doc_id"),

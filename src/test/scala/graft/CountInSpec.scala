@@ -9,14 +9,16 @@ import org.scalatest.funsuite.AnyFunSuite
   * formulations it replaced. */
 class CountInSpec extends AnyFunSuite {
   import TestSpark._
+  import CodegenPaths.onBothPaths
   import spark.implicits._
 
   graft.functions.GraftFunctions.registerAll(spark)
 
-  private def countOf(w: Seq[String], m: Seq[String]): Long =
+  private def countOf(w: Seq[String], m: Seq[String]): Long = onBothPaths {
     Seq((w, m)).toDF("w", "m")
       .select(call_function("count_in", col("w"), col("m")).as("c"))
       .head().getLong(0)
+  }
 
   test("counts occurrences, not distinct hits") {
     assert(countOf(Seq("the", "cat", "the", "dog"), Seq("the", "dog")) == 3L)
@@ -28,16 +30,20 @@ class CountInSpec extends AnyFunSuite {
   }
 
   test("null elements never count, matching filter(isin)'s null drop") {
-    val r = Seq(1).toDF("x").select(call_function("count_in",
-      array(lit("a"), lit(null).cast("string"), lit("b")),
-      array(lit("a"), lit(null).cast("string"))).as("c")).head().getLong(0)
-    assert(r == 1L)
+    onBothPaths {
+      val r = Seq(1).toDF("x").select(call_function("count_in",
+        array(lit("a"), lit(null).cast("string"), lit("b")),
+        array(lit("a"), lit(null).cast("string"))).as("c")).head().getLong(0)
+      assert(r == 1L)
+    }
   }
 
   test("null array yields null") {
-    val r = Seq((Some(Seq("a")), Option.empty[Seq[String]])).toDF("w", "m")
-      .select(call_function("count_in", col("w"), col("m")).as("c")).head()
-    assert(r.isNullAt(0))
+    onBothPaths {
+      val r = Seq((Some(Seq("a")), Option.empty[Seq[String]])).toDF("w", "m")
+        .select(call_function("count_in", col("w"), col("m")).as("c")).head()
+      assert(r.isNullAt(0))
+    }
   }
 
   test("agrees with size(filter(isin)) and filter(array_contains) on real docs") {

@@ -6,12 +6,13 @@ import graft.functions.VectorFunctions
 
 /** Edge cases of the custom codegen'd DoubleDot expression — both the
   * interpreted (nullSafeEval) and generated (doGenCode) paths run in
-  * these plans. */
+  * these plans ([[CodegenPaths.onBothPaths]]). */
 class DoubleDotSpec extends AnyFunSuite {
   import TestSpark._
+  import CodegenPaths.onBothPaths
   import spark.implicits._
 
-  private def dotOf(a: Seq[Double], b: Seq[Double]): java.lang.Double = {
+  private def dotOf(a: Seq[Double], b: Seq[Double]): java.lang.Double = onBothPaths {
     val r = Seq((a, b)).toDF("a", "b")
       .select(VectorFunctions.dot(col("a"), col("b")).as("d")).head()
     if (r.isNullAt(0)) null else r.getDouble(0)
@@ -27,17 +28,21 @@ class DoubleDotSpec extends AnyFunSuite {
   }
 
   test("a null ELEMENT nullifies the product, matching the HOF formulation") {
-    val r = Seq(1).toDF("x").select(
-      VectorFunctions.dot(
-        array(lit(1.0), lit(null).cast("double")),
-        array(lit(2.0), lit(3.0))).as("d")).head()
-    assert(r.isNullAt(0))
+    onBothPaths {
+      val r = Seq(1).toDF("x").select(
+        VectorFunctions.dot(
+          array(lit(1.0), lit(null).cast("double")),
+          array(lit(2.0), lit(3.0))).as("d")).head()
+      assert(r.isNullAt(0))
+    }
   }
 
   test("null input yields null, not a crash") {
-    val r = Seq((Some(Seq(1.0)), Option.empty[Seq[Double]])).toDF("a", "b")
-      .select(VectorFunctions.dot(col("a"), col("b")).as("d")).head()
-    assert(r.isNullAt(0))
+    onBothPaths {
+      val r = Seq((Some(Seq(1.0)), Option.empty[Seq[Double]])).toDF("a", "b")
+        .select(VectorFunctions.dot(col("a"), col("b")).as("d")).head()
+      assert(r.isNullAt(0))
+    }
   }
 
   test("float input is cast up and accumulated in double") {

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 object TestSpark {
@@ -37,12 +38,20 @@ class EntrySmokeSpec extends AnyFunSuite {
   // oracle-less hash-based queries have against that)
   private val mayBeEmpty = Set("set3_except")
 
+  // Every output column is consumed, as Bench's hash does: count()
+  // alone lets column pruning drop the projected expressions. With
+  // codegen fallback off, generated code that fails to compile throws
+  // here instead of silently running interpreted.
   test("every query runs, oracle keys ⊆ queries, and results are non-trivial") {
     val qs = SparkEntry.queries
     assert(SparkEntry.oracleSql.keySet.subsetOf(qs.keySet))
-    qs.foreach { case (name, fn) =>
-      val n = fn(spark, sf).count() // allowlisted queries run for the not-throwing check only
-      if (!mayBeEmpty(name)) assert(n > 0, s"$name returned 0 rows on the smoke fixture")
+    CodegenPaths.withConf("spark.sql.codegen.fallback" -> "false") {
+      qs.foreach { case (name, fn) =>
+        val df = fn(spark, sf)
+        val n = df.select(count(lit(1)), bit_xor(xxhash64(struct(df.columns.map(col): _*))))
+          .head().getLong(0) // allowlisted queries run for the not-throwing check only
+        if (!mayBeEmpty(name)) assert(n > 0, s"$name returned 0 rows on the smoke fixture")
+      }
     }
   }
 }

@@ -9,15 +9,17 @@ import org.scalatest.funsuite.AnyFunSuite
   * on every input shape the signature path can produce. */
 class LongMatchCountSpec extends AnyFunSuite {
   import TestSpark._
+  import CodegenPaths.onBothPaths
   import spark.implicits._
 
   graft.functions.GraftFunctions.registerAll(spark)
 
-  private def countOf(a: Seq[java.lang.Long], b: Seq[java.lang.Long]): java.lang.Long = {
-    val r = Seq((a, b)).toDF("a", "b")
-      .select(call_function("long_match_count", col("a"), col("b")).as("c")).head()
-    if (r.isNullAt(0)) null else r.getLong(0)
-  }
+  private def countOf(a: Seq[java.lang.Long], b: Seq[java.lang.Long]): java.lang.Long =
+    onBothPaths {
+      val r = Seq((a, b)).toDF("a", "b")
+        .select(call_function("long_match_count", col("a"), col("b")).as("c")).head()
+      if (r.isNullAt(0)) null else r.getLong(0)
+    }
 
   test("counts equal positions") {
     assert(countOf(Seq(1L, 2L, 3L, 4L), Seq(1L, 9L, 3L, 4L)) == 3L)
@@ -35,9 +37,11 @@ class LongMatchCountSpec extends AnyFunSuite {
   }
 
   test("null input yields null, not a crash") {
-    val r = Seq((Some(Seq(1L)), Option.empty[Seq[Long]])).toDF("a", "b")
-      .select(call_function("long_match_count", col("a"), col("b")).as("c")).head()
-    assert(r.isNullAt(0))
+    onBothPaths {
+      val r = Seq((Some(Seq(1L)), Option.empty[Seq[Long]])).toDF("a", "b")
+        .select(call_function("long_match_count", col("a"), col("b")).as("c")).head()
+      assert(r.isNullAt(0))
+    }
   }
 
   test("agrees with the interpreted HOF formulation on real signatures") {
