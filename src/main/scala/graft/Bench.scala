@@ -1,45 +1,12 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{bit_xor, col, struct, xxhash64}
 object Bench {
-
-  /** Consume a query result in a way that forces EVERY output column to
-    * be computed: hash the full row struct and sum the hashes. A bare
-    * `count()` lets Catalyst prune unreferenced columns, so
-    * projection-only queries (p1, f11, f12, ta3, …) would be timed with
-    * the very expressions they exercise optimized away. bit_xor (not
-    * sum) folds the hashes: ANSI mode makes a sum of 64-bit hashes
-    * overflow. */
-  private def consume(df: DataFrame): Unit = {
-    df.select(xxhash64(struct(df.columns.map(col): _*)).as("h"))
-      .agg(bit_xor(col("h"))).collect()
-    ()
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // scan-partition sizing for THIS environment (the knob SCALE.md's
-      // cluster template sets to 128-256m for TB inputs): the test SFs
-      // are ~10 MB/table, so the defaults (128m + 4m open cost) pack
-      // every file into 1-2 scan tasks and serialize the scan stage of
-      // every query regardless of core count. Sized so a 32-file sf1
-      // table fans out to ~one task per core. (Single-file driver SFs
-      // are 1 row group and cannot fan out either way.)
-      .config("spark.sql.files.maxPartitionBytes", "256k")
-      .config("spark.sql.files.openCostInBytes", "64k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warm up the JVM/codegen/parquet-footer caches so the first timed
-    // query doesn't absorb session startup
-    try {
-      spark.range(1000000).selectExpr("sum(id)").collect()
-      SparkEntry.queries.get("p1_project").foreach(fn => consume(fn(spark, sfDir)))
-    } catch { case _: Throwable => () }
+    val spark = Harness.session()
+    // warm up the parquet-footer caches too
+    try SparkEntry.queries.get("p1_project").foreach(fn => Harness.consume(fn(spark, sfDir)))
+    catch { case _: Throwable => () }
     // SPARK_GRAFT_SKIP=q1,q2 excludes queries from a run — used for
     // scale experiments where the declared-quadratic oracle queries
     // (dd4/dd5) would otherwise dominate wall time AND poison every
@@ -97,30 +64,19 @@ object Bench {
       .filterNot { case (name, _) => skip(name) }
     def sweep(reps: Int)(record: (String, Boolean) => Unit): Seq[(String, Double, Seq[Double])] =
       active.map { case (name, fn) =>
-        // settle between queries (NOT counted in the query's time): a
-        // large join's garbage + deoptimization churn otherwise bleeds
-        // into the NEXT query's measurement — at sf1 a post-dd3
-        // p2_filter_nonzero measured 280 s cold vs 6 s after a
-        // GC+settle, a 40x phantom. Standard harness hygiene (JMH does
-        // the same between iterations).
-        System.gc()
-        Thread.sleep(200)
-        // reps run back-to-back with no settle between them: the first
-        // already runs settled, and the median discards a rep that a
-        // GC cycle or pricing transient hit
-        val times = (1 to reps).flatMap { _ =>
-          val t0 = System.nanoTime()
-          val ok =
-            try { consume(fn(spark, sfDir)); true }
-            catch {
-              case e: Throwable =>
-                // record the failure loudly — a swallowed exception would
-                // read as a near-zero (improved) time in the bench line
-                System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-                false
-            }
-          if (ok) Some((System.nanoTime() - t0) / 1e9) else None
-        }
+        // reps run back-to-back after one settle: the first already
+        // runs settled, and the median discards a rep that a GC cycle or
+        // pricing transient hit
+        val times = Harness.timed(reps) {
+          try { Harness.consume(fn(spark, sfDir)); true }
+          catch {
+            case e: Throwable =>
+              // record the failure loudly — a swallowed exception would
+              // read as a near-zero (improved) time in the bench line
+              System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+              false
+          }
+        }.collect { case (true, dt) => dt }
         // any failed rep fails the query: a partial median would hide
         // a flaky operator behind its surviving runs
         val ok = times.size == reps
@@ -171,7 +127,7 @@ object Bench {
     val skipped = skip.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val quads = quadratic.toSeq.sorted.filterNot(skip)
       .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"warm":$warms,"warm_reps_detail":$warmDetail,"warm_total":$warmTotal,"warm_reps":${if (warm) warmReps else 0},"errors":$errs,"warm_errors":$warmErrs,"skipped":$skipped,"quadratic":$quads,"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"warm":$warms,"warm_reps_detail":$warmDetail,"warm_total":$warmTotal,"warm_reps":${if (warm) warmReps else 0},"errors":$errs,"warm_errors":$warmErrs,"skipped":$skipped,"quadratic":$quads,"sf":"$sfDir","cpus":${Harness.cpus}}"""
     // The full per-query line is ~7 KB; the driver's stdout capture keeps
     // only the LAST ~2 KB, so printing it would leave a head-truncated,
     // unparseable fragment in BENCH_r{N}.json (r6's "parsed": null). Two
@@ -184,7 +140,7 @@ object Bench {
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LAST.json")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(out), json + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] write $out: ${e.getMessage}") }
-    val compact = s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"warm_total":$warmTotal,"warm_reps":${if (warm) warmReps else 0},"errors":$errs,"warm_errors":$warmErrs,"skipped":$skipped,"quadratic":$quads,"sf":"$sfDir","detail":"$out"}"""
+    val compact = s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"warm_total":$warmTotal,"warm_reps":${if (warm) warmReps else 0},"errors":$errs,"warm_errors":$warmErrs,"skipped":$skipped,"quadratic":$quads,"sf":"$sfDir","cpus":${Harness.cpus},"detail":"$out"}"""
     println(compact)
     spark.stop()
   }

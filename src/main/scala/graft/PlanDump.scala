@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round tool: dump the formatted (pre-execution) plan of
   * every registry query to one file per query, for plan-diff evidence
   * (plans/r14/<query>_before.txt / _after.txt). Mostly analysis — but
@@ -22,14 +20,7 @@ object PlanDump {
     java.nio.file.Files.createDirectories(out)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.files.maxPartitionBytes", "256k") // match Bench
-      .config("spark.sql.files.openCostInBytes", "64k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)
          if only.forall(_.contains(name))) {
       try {

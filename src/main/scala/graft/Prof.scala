@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{bit_xor, col, struct, xxhash64}
-
 /** Scratch per-query profiler: times each named query `reps` times in
   * one JVM (run 1 = cold, the rest warm), printing plans on demand.
   * Not part of the driver contract.
@@ -30,54 +27,24 @@ object Prof {
     val reps = args.drop(2).collectFirst {
       case a if a.startsWith("reps=") => math.max(1, a.stripPrefix("reps=").toInt)
     }.getOrElse(2)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.files.maxPartitionBytes", "256k") // match Bench
-      .config("spark.sql.files.openCostInBytes", "64k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_CONF="k=v;k=v" sets session confs (e.g. graft.ivf.maxK
-    // for the two-level-trainer scale probes)
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.nonEmpty)
-      .foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) =>
-            System.err.println(s"[prof] conf $k=$v")
-            spark.conf.set(k, v)
-          case _ =>
-            // a segment without '=' (e.g. a trailing "k1=v1;k2") used to
-            // MatchError and kill the whole profiling run — skip loudly
-            System.err.println(s"[prof] ignoring malformed SPARK_GRAFT_CONF segment '$kv' (expected k=v)")
-        }
-      })
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    def consume(df: org.apache.spark.sql.DataFrame): Unit = {
-      df.select(xxhash64(struct(df.columns.map(col): _*)).as("h"))
-        .agg(bit_xor(col("h"))).collect()
-      ()
-    }
+    val spark = Harness.session()
+    Harness.confOverrides(spark, "prof")
+    // the header tools/sf10_pairs.py matches against the artifact's cpus
+    println(s"""[prof] {"cpus":${Harness.cpus}}""")
     for (n <- names; fn = SparkEntry.queries(n)) {
       if (explain) fn(spark, dir).explain("formatted")
       for (i <- 1 to reps) {
-        System.gc(); Thread.sleep(200)
-        val t0 = System.nanoTime()
-        consume(fn(spark, dir))
-        println(f"[prof] $n run$i ${(System.nanoTime() - t0) / 1e9}%.2f s")
+        val (_, dt) = Harness.timed(1)(Harness.consume(fn(spark, dir))).head
+        println(f"[prof] $n run$i $dt%.2f s")
         if (!keep) graft.ops.Model.release()
       }
       if (keep) graft.ops.Model.release()
       if (finalPlan) {
         // the consumed wrapper's executed plan contains the query's
         // whole subtree with AQE's runtime choices materialized
-        val d = fn(spark, dir)
-        val c = d.select(xxhash64(struct(d.columns.map(col): _*)).as("h"))
-          .agg(bit_xor(col("h")))
-        c.collect()
+        val (_, _, plan) = Harness.consume(fn(spark, dir))
         println(s"[prof-finalplan] $n")
-        println(c.queryExecution.executedPlan.toString
-          .split("== Initial Plan ==").head)
+        println(plan.toString.split("== Initial Plan ==").head)
         graft.ops.Model.release()
       }
     }

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.{ModelStore, Similarity}
 
@@ -24,25 +23,8 @@ object ProfServe {
     val reps = args.drop(2).collectFirst {
       case a if a.startsWith("reps=") => a.stripPrefix("reps=").toInt
     }.getOrElse(5)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.files.maxPartitionBytes", "256k") // match StreamBench
-      .config("spark.sql.files.openCostInBytes", "64k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_CONF="k=v;k=v" session-conf overrides (the Prof pattern)
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.nonEmpty)
-      .foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) =>
-            System.err.println(s"[profserve] conf $k=$v")
-            spark.conf.set(k, v)
-          case _ => ()
-        }
-      })
-    spark.range(1000000).selectExpr("sum(id)").collect()
+    val spark = Harness.session()
+    Harness.confOverrides(spark, "profserve")
 
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, JobRec]()
     spark.sparkContext.addSparkListener(new SparkListener {

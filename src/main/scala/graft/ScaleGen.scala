@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deterministic N× upscaling of a testdata sf directory, for scale
@@ -73,13 +73,7 @@ object ScaleGen {
     }
     def wanted(name: String): Boolean = only.forall(_.contains(name))
     val factor = factorS.toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     def replicate(df: DataFrame): DataFrame =
       df.withColumn("rep", explode(sequence(lit(0L), lit(factor - 1L))))

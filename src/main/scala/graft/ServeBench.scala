@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{bit_xor, broadcast, col, row_number, struct, xxhash64}
+import org.apache.spark.sql.functions.{broadcast, col, row_number, xxhash64}
 import org.apache.spark.sql.expressions.Window
 import graft.ops.{ModelStore, Similarity}
 import graft.functions.VectorFunctions.{dot, norm2}
@@ -33,12 +32,6 @@ import graft.functions.VectorFunctions.{dot, norm2}
   * recall_at_10/recall_at_50/nq/probes fields). */
 object ServeBench {
 
-  private def consume(df: org.apache.spark.sql.DataFrame): Unit = {
-    df.select(xxhash64(struct(df.columns.map(col): _*)).as("h"))
-      .agg(bit_xor(col("h"))).collect()
-    ()
-  }
-
   def main(args: Array[String]): Unit = {
     val (dir, modelDir, mode) = (args(0), args(1), args(2))
     val names =
@@ -50,37 +43,15 @@ object ServeBench {
         Seq("sim6_ivfpq", "knn2_label_knn_ivfpq", "dd7_semantic_dedup")
       else Seq("sim6_ivfpq", "knn2_label_knn_ivfpq", "ir3_hybrid_rrf_ivfpq",
         "tok4_bpe_encode", "dd7_semantic_dedup")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.files.maxPartitionBytes", "256k") // match Bench
-      .config("spark.sql.files.openCostInBytes", "64k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_CONF="k=v;k=v" session-conf overrides (the Prof
-    // pattern) — how the two-level regime is forced for the sf10
-    // serve/append legs (graft.ivf.maxK below the corpus's desired K)
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.nonEmpty)
-      .foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) =>
-            System.err.println(s"[servebench] conf $k=$v")
-            spark.conf.set(k, v)
-          case _ =>
-            System.err.println(
-              s"[servebench] ignoring malformed SPARK_GRAFT_CONF segment '$kv'")
-        }
-      })
-    spark.range(1000000).selectExpr("sum(id)").collect()
+    val spark = Harness.session()
+    // SPARK_GRAFT_CONF is how the two-level regime is forced for the
+    // sf10 serve/append legs (graft.ivf.maxK below the corpus's desired K)
+    Harness.confOverrides(spark, "servebench")
 
     val timed = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     var recallExtra = "" // recall mode's extra JSON fields
     def time[A](label: String)(body: => A): A = {
-      System.gc(); Thread.sleep(200)
-      val t0 = System.nanoTime()
-      val r = body
-      val dt = (System.nanoTime() - t0) / 1e9
+      val (r, dt) = Harness.timed(1)(body).head
       timed(label) = dt
       println(f"[servebench] $label ${dt}%.2f s")
       r
@@ -96,7 +67,7 @@ object ServeBench {
         time("load_bpe") { ModelStore.loadBpe(spark, dir, modelDir) }
         time("load_ivfpq") { ModelStore.loadIvfPq(spark, dir, modelDir) }
         for (n <- names) {
-          time(n) { consume(SparkEntry.queries(n)(spark, dir)) }
+          time(n) { Harness.consume(SparkEntry.queries(n)(spark, dir)) }
           graft.ops.Model.release()
         }
       case "grow" =>
@@ -136,7 +107,7 @@ object ServeBench {
         // the model was trained on the base — delta load, then serve
         time("load_ivfpq_delta") { ModelStore.loadIvfPqDelta(spark, dir, modelDir) }
         for (n <- names) {
-          time(n) { consume(SparkEntry.queries(n)(spark, dir)) }
+          time(n) { Harness.consume(SparkEntry.queries(n)(spark, dir)) }
           graft.ops.Model.release()
         }
       case "recall" =>
@@ -207,7 +178,7 @@ object ServeBench {
     val qs = timed.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val extra = if (recallExtra.isEmpty) "" else s",$recallExtra"
-    println(s"""{"servebench":"$mode","sf":"$dir"$extra,"times":$qs}""")
+    println(s"""{"servebench":"$mode","sf":"$dir","cpus":${Harness.cpus}$extra,"times":$qs}""")
     spark.stop()
   }
 }

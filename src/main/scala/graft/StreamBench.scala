@@ -80,45 +80,31 @@ object StreamBench {
     val leg = args(1)
     val work = if (args.length > 2) args(2)
       else Files.createTempDirectory("graft_streambench_").toString
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      // state shards are sized to STATE VOLUME, not to the core count:
-      // every shard pays a changelog-commit fsync per batch (measured
-      // at sf1: ~340 ms summed PER SHARD per batch — 10.9 s across 32,
-      // dwarfing the 2.5 s of actual update work), so over-sharding
-      // 74k state rows across 32 RocksDB instances made every leg
-      // commit-bound. 8 shards ≈ 9k rows each here; a 100 TB deployment
-      // picks the shard count from projected state rows the same way
-      // (state partitioning is fixed at first checkpoint — it is a
-      // deliberate capacity decision, not a parallelism default).
-      // SPARK_GRAFT_STREAM_SHARDS overrides for the shard-sizing
-      // sweeps (state partitioning is fixed at first checkpoint, so
-      // the knob must be set before a leg's first run)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_SHARDS", "8"))
-      .config("spark.sql.files.maxPartitionBytes", "256k")
-      .config("spark.sql.files.openCostInBytes", "64k")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // changelog checkpointing: commit the batch's delta to the
-      // checkpoint instead of a full SST snapshot per partition per
-      // batch — the production RocksDB deployment shape (snapshots
-      // still happen, in the background maintenance thread)
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-      // cut snapshots every 15 s instead of the 60 s default so the
-      // sst gauge has a chance to be fresh on legs longer than a
-      // snapshot interval (shorter legs report null — see sstIsStale)
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "15s")
-      // bound the provider's block-cache/memtable memory so the
-      // reported in-memory figure is a configured design property, not
-      // an unbounded cache high-water mark (round-10's 262 MB read as
-      // "state size" when the durable state was 29.6 MB of SSTs)
-      .config("spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage", "true")
-      .config("spark.sql.streaming.stateStore.rocksdb.maxMemoryUsageMB", "512")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").collect()
+    val spark = Harness.session()
+    // state shards are sized to STATE VOLUME, not to the core count:
+    // every shard pays a changelog-commit fsync per batch (measured
+    // at sf1: ~340 ms summed PER SHARD per batch — 10.9 s across 32,
+    // dwarfing the 2.5 s of actual update work), so over-sharding
+    // 74k state rows across 32 RocksDB instances made every leg
+    // commit-bound. 8 shards ≈ 9k rows each here; a 100 TB deployment
+    // picks the shard count from projected state rows the same way
+    // (state partitioning is fixed at first checkpoint — it is a
+    // deliberate capacity decision, not a parallelism default).
+    // SPARK_GRAFT_STREAM_SHARDS overrides for the shard-sizing
+    // sweeps (state partitioning is fixed at first checkpoint, so
+    // the knob must be set before a leg's first run)
+    spark.conf.set("spark.sql.shuffle.partitions",
+      sys.env.getOrElse("SPARK_GRAFT_STREAM_SHARDS", "8"))
+    // cut snapshots every 15 s instead of the 60 s default so the
+    // sst gauge has a chance to be fresh on legs longer than a
+    // snapshot interval (shorter legs report null — see sstIsStale)
+    spark.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "15s")
+    // bound the provider's block-cache/memtable memory so the
+    // reported in-memory figure is a configured design property, not
+    // an unbounded cache high-water mark (round-10's 262 MB read as
+    // "state size" when the durable state was 29.6 MB of SSTs)
+    spark.conf.set("spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage", "true")
+    spark.conf.set("spark.sql.streaming.stateStore.rocksdb.maxMemoryUsageMB", "512")
 
     val legs =
       if (leg == "all")
@@ -168,7 +154,7 @@ object StreamBench {
         s""""ckpt_state_bytes":${r.ckptStateBytes},""" +
         s""""ckpt_bytes_per_row":${f"${r.ckptBytesPerRow}%.1f"}}"""
     }.mkString("[", ",", "]")
-    println(s"""{"streambench":"$sfDir","legs":$js}""")
+    println(s"""{"streambench":"$sfDir","cpus":${Harness.cpus},"legs":$js}""")
     spark.stop()
   }
 

@@ -353,16 +353,13 @@ class PlanSpec extends AnyFunSuite {
 
   test("lm1/cooc1/dd6/tok1/dd8/dd10: model tables past the broadcast guard " +
       "degrade to a shuffle join instead of an OOM-by-construction") {
-    import org.apache.spark.sql.functions.{bit_xor, struct, xxhash64}
     // simulate "corpus-derived model table exceeds the broadcast
     // budget" (a 100-TB bigram vocabulary blows the 8 GB broadcast
     // hard cap): Model.guardedBroadcast's threshold drops to 0 (no
     // table fits) and the planner's own broadcasts are disabled —
     // every query must take the shuffle-join path AND return
     // identical rows
-    def sig(df: org.apache.spark.sql.DataFrame): Long =
-      df.select(xxhash64(struct(df.columns.sorted.map(org.apache.spark.sql.functions.col): _*)).as("h"))
-        .agg(bit_xor(org.apache.spark.sql.functions.col("h"))).head().getLong(0)
+    def sig(df: org.apache.spark.sql.DataFrame): Long = Harness.consume(df)._1
     val fns: Seq[(String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame)] =
       Seq(("lm1", graft.ops.TextOps.lm1BigramCoherence _),
         ("cooc1", graft.ops.TextOps.cooc1PairLift _),

@@ -17,6 +17,11 @@ the declared-quadratic oracle twins, then compare only what was dumped:
     SPARK_GRAFT_CPUS=32 sbt "runMain graft.Verify /tmp/sf1 /tmp/verify_sf1 <scale-path queries...>"
     python3 tools/oracle_check.py /tmp/sf1 /tmp/verify_sf1 --only-present
 
+Verify, like every graft main, runs at local[SPARK_GRAFT_CPUS] with one
+shuffle partition per core (graft.Harness.session); unset, it uses every
+core the JVM sees. The sf1 examples set 32, the count the sf1 artifacts
+and their Prof pairs ran at.
+
 --only-present skips oracle entries with no Spark dump (reported as
 `skip`, not FAIL) so a subset Verify run can gate green; the default
 strict mode still fails on missing outputs.

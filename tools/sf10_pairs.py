@@ -7,7 +7,8 @@ see SCALE.md round-8/9 notes). Protocol:
 
   1. run the full sweep (cold + 1 in-sweep warm) -> BENCH_sf10_r{N}.json
   2. for each heavy-tail query, run `sbt "runMain graft.Prof <dir> <q> reps=4"`
-     in its OWN JVM (cold + 3 warm) and parse the [prof] lines
+     in its OWN JVM (cold + 3 warm), with SPARK_GRAFT_CPUS set to the
+     artifact's `cpus`, and parse the [prof] lines
   3. this script folds those into the artifact as:
         warm_isolated:      {query: median-of-3 isolated warm}
         cold_isolated:      {query: isolated fresh-JVM cold}
@@ -21,6 +22,10 @@ see SCALE.md round-8/9 notes). Protocol:
      vs 27 s isolated, pure alphabetical GC bleed after cc2).
      FAILS (exit 1) if any isolated median warm > 1.5x isolated cold
      (the adjudication bar the in-sweep column could not hold).
+     REFUSES (exit 2, artifact untouched) a log whose `[prof] {"cpus":N}`
+     header differs from the artifact's `cpus`, or where either is
+     missing: timings are only comparable at matched parallelism (two
+     sf1 sweeps read 2.1x inflated against pairs run at another count).
 
 Usage: sf10_pairs.py <artifact.json> <prof_log_dir>
   prof_log_dir holds one <query>.log per probed query (Prof stdout).
@@ -34,10 +39,16 @@ import sys
 from pathlib import Path
 
 
-def parse_prof(path: Path):
+def prof_cpus(text: str):
+    # header: [prof] {"cpus":N}
+    m = re.search(r"\[prof\] (\{.*\})", text)
+    return json.loads(m.group(1)).get("cpus") if m else None
+
+
+def parse_prof(text: str):
     # lines: [prof] <name> run<i> <sec> s
     runs = {}
-    for m in re.finditer(r"\[prof\] (\S+) run(\d+) ([0-9.]+) s", path.read_text()):
+    for m in re.finditer(r"\[prof\] (\S+) run(\d+) ([0-9.]+) s", text):
         runs.setdefault(m.group(1), []).append((int(m.group(2)), float(m.group(3))))
     out = {}
     for name, rs in runs.items():
@@ -51,9 +62,16 @@ def parse_prof(path: Path):
 def main():
     artifact_path, log_dir = sys.argv[1], Path(sys.argv[2])
     art = json.loads(Path(artifact_path).read_text())
+    logs = {log: log.read_text() for log in sorted(log_dir.glob("*.log"))}
+    for log, text in logs.items():
+        cpus = prof_cpus(text)
+        if cpus is None or cpus != art.get("cpus"):
+            print(f"REFUSED: {log} ran at cpus={cpus}, {artifact_path} at "
+                  f"cpus={art.get('cpus')}; pairs merge only at matched parallelism")
+            sys.exit(2)
     cold_iso, warm_iso, warm_iso_detail = {}, {}, {}
-    for log in sorted(log_dir.glob("*.log")):
-        for name, (cold, warm, warms) in parse_prof(log).items():
+    for text in logs.values():
+        for name, (cold, warm, warms) in parse_prof(text).items():
             cold_iso[name] = cold
             if warm is not None:
                 warm_iso[name] = warm
