@@ -155,22 +155,36 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
-  test("streaming SMA agg buffer is all-numeric: hash aggregate, no string demotion") {
-    // batch form of the SAME windowedSma code path (unified API): the
-    // string `type` column must ride as a grouping key, never as a
-    // first()/min() in the aggregation buffer (which demotes the whole
-    // aggregate to sort-based — the round-1 streaming variant did this)
+  test("streaming SMA: one transformWithState, no window expansion or aggregate") {
+    // one state row per (symbol, type) replaced window() + groupBy + agg:
+    // no Expand copies each tick into its windows, no partial/merge/final
+    // aggregate runs, and the one exchange carries only the six columns
+    // the windows read
+    import org.apache.spark.sql.Encoders
+    import org.apache.spark.sql.execution.ExpandExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.streaming.operators.stateful.StatefulOperator
+    import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
     import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val parsed = Seq(
-      ("2024-01-01 00:00:10", "TSM", "stock", 3L, 10.0, "real"),
-      ("2024-01-01 00:00:11", "TSM", "stock", 0L, 0.0, "filled"),
-      ("2024-01-01 00:00:12", "AAPL", "stock", 2L, 20.0, "real"))
-      .toDF("ts_s", "symbol", "type", "size_per_sec", "vwap_price_per_sec", "real_or_filled")
-      .withColumn("ts", to_timestamp(col("ts_s")))
-    val p = plan(graft.streaming.MaPipeline.windowedSma(parsed, gate = None))
-    assert(!p.contains("SortAggregate"), p)
-    assert(p.contains("HashAggregate(keys=[window"), p)
+    import graft.streaming.MaPipeline
+    val input = MemoryStream[String](Encoders.STRING, spark)
+    val q = MaPipeline.windowedSma(MaPipeline.parse(input.toDF().select(col("value"))))
+      .writeStream.format("memory").queryName("sma_plan").outputMode("update").start()
+    try {
+      input.addData("""{"symbol":"TSM","type":"stock",""" +
+        """"current_time":"2024-01-01T00:00:10+00:00","real_or_filled":"real",""" +
+        """"vwap_price_per_sec":10.0,"size_per_sec":3}""")
+      q.processAllAvailable()
+      val p = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+      assert(p.collect { case s: StatefulOperator => s.nodeName } == Seq("TransformWithState"),
+        p.toString)
+      assert(p.collect { case e: ExpandExec => e }.isEmpty, p.toString)
+      assert(p.collect { case a: BaseAggregateExec => a }.isEmpty, p.toString)
+      val exchanges = p.collect { case e: ShuffleExchangeExec => e }
+      assert(exchanges.map(_.child.output.map(_.name)) == Seq(Seq("symbol", "type", "ts",
+        "vwap_price_per_sec", "size_per_sec", "real_or_filled")), p.toString)
+    } finally q.stop()
   }
 
   test("pk1: distributed prefix sum — no single-partition funnel") {

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.{MaPipeline, StockTick, V1StateProcessor}
 
@@ -26,7 +27,7 @@ class StreamingSpec extends AnyFunSuite {
   test("windowed SMA append mode: exactly-5 gate + watermark close (V2 semantics)") {
     val input = MemoryStream[String](Encoders.STRING, spark)
     val parsed = MaPipeline.parse(input.toDF().select(col("value")))
-    val out = MaPipeline.windowedSma(parsed) // 5s/1s, gate=5
+    val out = MaPipeline.windowedSma(parsed, emit = OutputMode.Append()) // 5s/1s, gate=5
     val q = out.writeStream.format("memory").queryName("sma_append")
       .outputMode("append").start()
     try {
@@ -55,7 +56,8 @@ class StreamingSpec extends AnyFunSuite {
 
   test("windowed SMA: incomplete window never emits (ma_agg.py:57)") {
     val input = MemoryStream[String](Encoders.STRING, spark)
-    val out = MaPipeline.windowedSma(MaPipeline.parse(input.toDF().select(col("value"))))
+    val out = MaPipeline.windowedSma(MaPipeline.parse(input.toDF().select(col("value"))),
+      emit = OutputMode.Append())
     val q = out.writeStream.format("memory").queryName("sma_gate")
       .outputMode("append").start()
     try {
@@ -72,7 +74,7 @@ class StreamingSpec extends AnyFunSuite {
     val parsed = MaPipeline.parse(input.toDF().select(col("value")))
     // stage 1: 5s tumbling partials (append on close), stage 2 merges 35s
     val partials = MaPipeline.windowedSma(parsed, size = "5 seconds",
-      slide = "5 seconds", gate = None)
+      slide = "5 seconds", gate = None, emit = OutputMode.Append())
     val q1 = partials.writeStream.format("memory").queryName("v3_partials")
       .outputMode("append").start()
     try {
@@ -190,7 +192,8 @@ class StreamingSpec extends AnyFunSuite {
   test("watermark lateness: data older than the watermark is dropped (W4)") {
     val input = MemoryStream[String](Encoders.STRING, spark)
     val out = MaPipeline.windowedSma(MaPipeline.parse(input.toDF().select(col("value"))),
-      size = "5 seconds", slide = "5 seconds", watermark = "5 seconds", gate = None)
+      size = "5 seconds", slide = "5 seconds", watermark = "5 seconds", gate = None,
+      emit = OutputMode.Append())
     val q = out.writeStream.format("memory").queryName("sma_late")
       .outputMode("append").start()
     try {
@@ -208,6 +211,35 @@ class StreamingSpec extends AnyFunSuite {
       assert(rows.length == 1, "exactly one emission for the closed window")
       assert(rows.head.getAs[Long]("window_data_count") == 2L,
         "the late row must not appear in the emitted window")
+    } finally q.stop()
+  }
+
+  test("malformed and late ticks give no row, stop nothing, and late ones are counted") {
+    val input = MemoryStream[String](Encoders.STRING, spark)
+    val out = MaPipeline.windowedSma(MaPipeline.parse(input.toDF().select(col("value"))),
+      gate = None)
+    val q = out.writeStream.format("memory").queryName("sma_bad")
+      .outputMode("update").start()
+    try {
+      // a non-JSON line, and a tick whose current_time does not parse
+      input.addData("not json", wire("M", 10, 1.0, 1).replace("2024-01-01T00:00:10", "yesterday"),
+        wire("K", 10, 1.0, 1))
+      q.processAllAvailable()
+      input.addData(wire("K", 40, 1.0, 1)) // the next trigger's watermark is 35 s
+      q.processAllAvailable()
+      input.addData(wire("K", 41, 1.0, 1)) // late ticks are judged by the previous trigger's
+      q.processAllAvailable()
+      // three ticks at or before that watermark, one after it
+      input.addData(wire("L", 12, 9.0, 1), wire("L", 20, 9.0, 1), wire("K", 33, 9.0, 1),
+        wire("K", 38, 2.0, 1))
+      q.processAllAvailable()
+      assert(q.isActive && q.exception.isEmpty)
+      val rows = spark.table("sma_bad")
+      assert(rows.filter($"symbol".isNull || $"symbol" === "M" || $"symbol" === "L").isEmpty)
+      assert(rows.filter($"symbol" === "K" && $"sum_of_vwap" >= 9.0).isEmpty)
+      assert(rows.filter($"symbol" === "K" && $"start" === "2024-01-01T00:00:38Z").count() > 0)
+      val dropped = q.recentProgress.flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
+      assert(dropped == 3L, q.recentProgress.map(_.json).mkString("\n"))
     } finally q.stop()
   }
 
@@ -236,7 +268,7 @@ class StreamingSpec extends AnyFunSuite {
     val ckptDir = new java.io.File(base, "ckpt").getAbsolutePath
     def startQuery() = MaPipeline
       .windowedSma(MaPipeline.parse(MaPipeline.fromJsonFiles(spark, srcDir.getAbsolutePath)),
-        size = "5 seconds", slide = "5 seconds", gate = None)
+        size = "5 seconds", slide = "5 seconds", gate = None, emit = OutputMode.Append())
       .writeStream.format("parquet")
       .option("path", outDir).option("checkpointLocation", ckptDir)
       .outputMode("append").start()
