@@ -87,18 +87,17 @@ object Dedup {
     *    small by construction (df > max(64, 1%·N) admits at most
     *    avg_shingles_per_doc/1% entries regardless of corpus size —
     *    model state, not data). */
-  private val statsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Array[Long])]()
+  private val statsCache = new KeyedCache[(Long, Array[Long])](64)
 
   private def stopStats(spark: SparkSession, dir: String): (Long, Array[Long]) =
-    statsCache.computeIfAbsent(dir, _ => {
+    statsCache.getOrBuild(spark, dir) {
       val cutoff = dfCutoff(docs(spark, dir).count())
       val stop = docs(spark, dir).select(explode(shingleArr(spark)).as("s"))
         .groupBy(col("s")).agg(count(lit(1)).as("df"))
         .filter(col("df") > cutoff)
         .collect().map(_.getLong(0))
       (cutoff, stop)
-    })
+    }
 
   /** DD4 — exact n-gram Jaccard near-dup pairs (threshold 0.5): join on
     * common shingles, |A∩B| / (|A|+|B|−|A∩B|).

@@ -303,6 +303,6 @@ object ModelStore {
     val nS = rows.keys.map(_._1).max + 1
     val nP = rows.keys.map(_._2).max + 1
     val books = Array.tabulate(nS, nP)((s, p) => rows((s, p)))
-    Similarity.installUnitPqBooks(corpusDir, books)
+    Similarity.installUnitPqBooks(spark, corpusDir, books)
   }
 }

@@ -75,11 +75,7 @@ object PairGuard {
 
   /** estimate memo: semantic plan hashes + confs → estimated rows.
     * Bounded LRU, same shape as the as-of probe memo. */
-  private val memo =
-    new java.util.LinkedHashMap[String, Long](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Long]): Boolean = size() > 64
-    }
+  private val memo = new KeyedCache[Long](64)
 
   /** Saturating Double→Long for the estimate: the per-key products are
     * summed as DOUBLE (a LongType sum wraps silently in non-ANSI mode —
@@ -186,11 +182,7 @@ object PairGuard {
     val memoKey = Seq(query,
       floorOn.queryExecution.analyzed.semanticHash(), extraMemo, f, cap)
       .mkString("|")
-    val est = memo.synchronized(Option(memo.get(memoKey))).getOrElse {
-      val e = estimate(f, 421L)
-      memo.synchronized(memo.put(memoKey, e))
-      e
-    }
+    val est = memo.getOrBuild(floorOn.sparkSession, memoKey)(estimate(f, 421L))
     if (est > cap) {
       val msg = s"pair-expansion guard: $query estimates ~$est expanded " +
         s"pair rows (> $MaxExpandRowsConf=$cap). This operator enumerates " +
@@ -204,10 +196,7 @@ object PairGuard {
 
   /** test seam: the memoized estimate for a query, if one was computed */
   private[graft] def lastEstimate(query: String): Option[Long] =
-    memo.synchronized {
-      import scala.jdk.CollectionConverters._
-      memo.asScala.collectFirst {
-        case (k, v) if k.startsWith(query + "|") => v
-      }
+    memo.snapshot.collectFirst {
+      case (k, v) if k.startsWith(query + "|") => v
     }
 }

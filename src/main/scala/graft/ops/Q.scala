@@ -52,30 +52,42 @@ object Model {
     * count job the ONE materialization and the join a cache read.
     * persist (recompute-on-executor-loss) rather than localCheckpoint
     * (which is fail-on-loss, wrong default for a 1000-executor run).
-    * The harness (Bench/Verify/specs) calls [[release]] after each
-    * query's terminal action so cached model tables never accumulate
-    * across a 99-query sweep. */
-  private val live = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    *
+    * Pins are query-owned: every [[pin]]/[[fits]] records a reference
+    * for the calling thread (the thread that builds and consumes a
+    * query), and [[release]] drops only that thread's references. A
+    * plan is unpersisted when its last reference goes, so one query's
+    * release never evicts a table another query running in the same
+    * session still reads. A plan some other owner cached (a model
+    * registry's table) is not referenced here and never unpersisted. */
+  private val live = scala.collection.mutable.ArrayBuffer.empty[(Thread, DataFrame)]
+
+  private def sharesPlan(a: DataFrame, b: DataFrame): Boolean =
+    a.queryExecution.analyzed.sameResult(b.queryExecution.analyzed)
+
+  /** persist `df` unless Spark already caches its plan, and record a
+    * reference for the calling thread when this call persisted it or
+    * a query's pin already holds the plan; true when it persisted */
+  private def hold(df: DataFrame): Boolean = synchronized {
+    // storageLevel does a semantic CacheManager lookup: back-to-back
+    // reps of the same query (Bench's warm medians run with no
+    // release between reps, by design — the later reps measure the
+    // serve path) rebuild a semantically-equal plan, and re-persisting
+    // it would only log "Asked to cache already cached data"
+    val fresh = df.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    if (fresh) df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    if (fresh || live.exists { case (_, d) => sharesPlan(d, df) })
+      live += (Thread.currentThread -> df)
+    fresh
+  }
 
   /** true when the model table is provably broadcast-safe; as a side
-    * effect the table is persisted (and registered for [[release]]) so
-    * the deciding count job doubles as its only materialization */
+    * effect the table is persisted (and referenced until [[release]])
+    * so the deciding count job doubles as its only materialization */
   def fits(df: DataFrame): Boolean = {
     val max = df.sparkSession.conf.getOption(MaxEntriesConf)
       .map(_.toLong).getOrElse(DefaultMaxEntries)
-    max > 0 && {
-      // storageLevel does a semantic CacheManager lookup: back-to-back
-      // reps of the same query (Bench's warm medians run with no
-      // release between reps, by design — the later reps measure the
-      // serve path) rebuild a semantically-equal plan, and re-persisting
-      // it only logs "Asked to cache already cached data" and would
-      // double-register the same cache entry for release
-      if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        synchronized { live += df }
-      }
-      df.count() <= max
-    }
+    max > 0 && { hold(df); df.count() <= max }
   }
 
   def guardedBroadcast(df: DataFrame): DataFrame =
@@ -108,20 +120,20 @@ object Model {
     * timed window, and warm reps reuse the pinned table exactly like
     * every registry model table (the serve path). */
   def pin(df: DataFrame): DataFrame = {
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      synchronized { live += df }
-      df.count()
-    }
+    if (hold(df)) df.count()
     df
   }
 
-  /** unpersist every model table the guard cached since the last call —
-    * the harness invokes this between queries, after the terminal
-    * action that consumed the cached table */
+  /** drop the calling thread's references and unpersist each plan
+    * whose last reference that was — the harness invokes this between
+    * queries, after the terminal action that consumed the cached
+    * table */
   def release(): Unit = synchronized {
-    live.foreach(df => try df.unpersist(false) catch { case _: Throwable => () })
+    val (mine, others) = live.partition(_._1 eq Thread.currentThread)
     live.clear()
+    live ++= others
+    for ((_, df) <- mine if !others.exists { case (_, d) => sharesPlan(d, df) })
+      try df.unpersist(false) catch { case _: Throwable => () }
   }
 }
 

@@ -319,7 +319,7 @@ object Similarity {
     * kept as a DISTRIBUTED table (never collected), so cell population
     * stays ≈ 4·target and driver/model state stays ≤ maxK rows at any
     * corpus size — the SemDeDup/IVF-PQ deployment reality at 100 TB.
-    * See [[twoLevelAssigned]]. */
+    * See [[twoLevelTrained]]. */
   val TargetCellConf = "graft.ivf.targetCell"
   val MaxKConf = "graft.ivf.maxK"
 
@@ -458,10 +458,10 @@ object Similarity {
     * centroid matrix (driver arrays — pure values, session-free) or
     * the two-level pair of coarse arrays + the persisted fine matrix
     * table. Nothing corpus-sized lives here. */
-  private sealed trait IvfTrained
-  private final case class FlatTrained(
+  private[graft] sealed trait IvfTrained
+  private[graft] final case class FlatTrained(
       k: Int, centroids: Array[Seq[Long]]) extends IvfTrained
-  private final case class TwoLevelTrained(
+  private[graft] final case class TwoLevelTrained(
       k1: Int, k2: Int, coarse: Array[Seq[Long]],
       mat: DataFrame) extends IvfTrained
 
@@ -478,24 +478,13 @@ object Similarity {
     * [[MaxKConf]]) so a spec forcing the two-level path never sees a
     * flat model trained under defaults. A tiny LRU (per-entry state is
     * K×64 longs ≤ 32 MB at the default cap; PQ books are 8×16×8
-    * longs) bounds a long-lived session; evicted two-level matrix
-    * tables are unpersisted. */
-  private val ModelCacheMax = 4
-  private def lruCache[V](onEvict: V => Unit) =
-    new java.util.LinkedHashMap[String, V](8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, V]): Boolean = {
-        val evict = size() > ModelCacheMax
-        if (evict) onEvict(e.getValue)
-        evict
-      }
-    }
-  private val ivfCache = lruCache[IvfTrained] {
-    case TwoLevelTrained(_, _, _, mat) =>
-      try mat.unpersist(false) catch { case _: Throwable => () }
-    case _ => ()
-  }
-  private val pqCache = lruCache[Array[Array[Array[Long]]]](_ => ())
+    * longs) bounds a long-lived session; a two-level entry's fine
+    * matrix table goes with it ([[KeyedCache]]). */
+  private[graft] val ivfCache = new KeyedCache[IvfTrained](4, {
+    case TwoLevelTrained(_, _, _, mat) => Seq(mat)
+    case _ => Nil
+  })
+  private[graft] val pqCache = new KeyedCache[Array[Array[Array[Long]]]](4)
 
   private def ivfCacheKey(spark: SparkSession, dir: String): String =
     s"$dir|${spark.conf.getOption(TargetCellConf).getOrElse("")}" +
@@ -518,26 +507,18 @@ object Similarity {
   /** the trained quantizer for `dir` under the CURRENT session confs —
     * [[graft.ops.ModelStore]]'s export surface. Trains on a registry
     * miss; returns whichever regime the corpus+confs select. */
-  private[graft] def exportIvf(spark: SparkSession, dir: String): IvfExport = {
-    ivfAssigned(spark, dir) // ensure trained + registered
-    ivfCache.synchronized { Option(ivfCache.get(ivfCacheKey(spark, dir))) } match {
-      case Some(FlatTrained(_, centroids)) => FlatIvfExport(centroids)
-      case Some(TwoLevelTrained(k1, k2, coarse, mat)) =>
-        TwoLevelIvfExport(k1, k2, coarse, mat)
-      case _ => throw new IllegalStateException(
-        "exportIvf: training did not register a model")
+  private[graft] def exportIvf(spark: SparkSession, dir: String): IvfExport =
+    ivfTrained(spark, dir, unitVecs(spark, dir)) match {
+      case FlatTrained(_, centroids) => FlatIvfExport(centroids)
+      case TwoLevelTrained(k1, k2, coarse, mat) => TwoLevelIvfExport(k1, k2, coarse, mat)
     }
-  }
 
   /** install an externally-loaded flat quantizer under the current
     * session confs (the serve-side of [[graft.ops.ModelStore]]) */
   private[graft] def installFlatIvf(spark: SparkSession, dir: String,
       centroids: Array[Seq[Long]]): Unit =
-    ivfCache.synchronized {
-      ivfCache.put(ivfCacheKey(spark, dir),
-        FlatTrained(centroids.length, centroids))
-      ()
-    }
+    ivfCache.put(spark, ivfCacheKey(spark, dir),
+      FlatTrained(centroids.length, centroids))
 
   /** install an externally-loaded two-level quantizer under the
     * current session confs: the fine matrix table is persisted +
@@ -548,10 +529,7 @@ object Similarity {
       k1: Int, k2: Int, coarse: Array[Seq[Long]], mat: DataFrame): Unit = {
     val m = mat.persist()
     m.count()
-    ivfCache.synchronized {
-      ivfCache.put(ivfCacheKey(spark, dir), TwoLevelTrained(k1, k2, coarse, m))
-      ()
-    }
+    ivfCache.put(spark, ivfCacheKey(spark, dir), TwoLevelTrained(k1, k2, coarse, m))
   }
 
   /** the trained unit-grid PQ codebooks riding the IVF model (sim6's
@@ -565,31 +543,21 @@ object Similarity {
   }
 
   /** install externally-loaded unit-grid PQ codebooks */
-  private[graft] def installUnitPqBooks(dir: String,
+  private[graft] def installUnitPqBooks(spark: SparkSession, dir: String,
       books: Array[Array[Array[Long]]]): Unit =
-    pqCache.synchronized { pqCache.put(s"$dir|unit", books); () }
+    pqCache.put(spark, s"$dir|unit", books)
 
   /** test hook: drop every registered quantizer model (unpersisting
-    * two-level matrix tables), forcing the next call to retrain */
+    * two-level matrix tables and served corpora), forcing the next
+    * call to retrain */
   private[graft] def resetModelRegistry(): Unit = {
-    ivfCache.synchronized {
-      ivfCache.values().forEach {
-        case TwoLevelTrained(_, _, _, mat) =>
-          try mat.unpersist(false) catch { case _: Throwable => () }
-        case _ => ()
-      }
-      ivfCache.clear()
-    }
-    pqCache.synchronized { pqCache.clear() }
-    servedCorpusCache.synchronized {
-      servedCorpusCache.values().forEach { sm =>
-        try sm.coded.unpersist(false) catch { case _: Throwable => () }
-      }
-      servedCorpusCache.clear()
-    }
+    ivfCache.clear()
+    pqCache.clear()
+    servedCorpusCache.clear()
   }
 
-  private[graft] def ivfAssigned(spark: SparkSession, dir: String): IvfModel = {
+  /** the corpus on the integer grid: (vec_id, v, nrm, uq) */
+  private def unitVecs(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.registerAll(spark)
     // unit-normalize + integer-grid quantize in ONE codegen'd pass
     // (QuantizeUnit; the HOF transform chain evaluated its lambdas
@@ -598,52 +566,50 @@ object Similarity {
     // hashes are unchanged; cell dots then go through the codegen'd
     // MatrixDots, exact (products ≤ 2^18, 64-term sums ≤ 2^24 —
     // order- and engine-free)
-    val e = vecs(spark, dir).withColumn("nrm", norm2(col("v")))
+    vecs(spark, dir).withColumn("nrm", norm2(col("v")))
       .withColumn("uq", call_function("quantize_unit", col("v"), lit(IVF_Q)))
       .select(col("vec_id"), col("v"), col("nrm"), col("uq"))
+  }
 
-    val key = ivfCacheKey(spark, dir)
-    val hit = ivfCache.synchronized { Option(ivfCache.get(key)) }
-    hit match {
-      case Some(FlatTrained(k, centroids)) =>
-        IvfModel(withCellFlat(e, centroids), k)
-      case Some(TwoLevelTrained(k1, k2, coarse, mat))
-          // same-CONTEXT, not same-session: foreachBatch hands the
-          // sink a cloned session (sparkSessionForStream), and a
-          // session-identity guard would silently retrain the full
-          // two-level model on the first micro-batch — the exact
-          // offline-train/online-serve split the serving leg exists
-          // to avoid. Cached data + the persisted fine matrix live in
-          // sharedState (per-context), so any session of the training
-          // context can reuse the model.
-          if mat.sparkSession.sparkContext eq spark.sparkContext =>
+  /** Lloyd's iterations see a deterministic 1-in-4 sample (k-means
+    * needs representative cluster shapes, not every point; at 100 TB
+    * the training scan is the dominant cost and subsampling is the
+    * standard fix). Only the sample is cached — a few MB here, and at
+    * scale a bounded fraction of the corpus. The count that sizes K
+    * doubles as the cache materialization (the Model.fits pattern — no
+    * second corpus pass). */
+  private def trainSample(e: DataFrame): DataFrame =
+    e.filter(pmod(col("vec_id"), lit(4)) === 0)
+      .select(col("vec_id"), col("uq")).cache()
+
+  /** the registered quantizer for `dir` under the current session
+    * confs, trained from `e` ([[unitVecs]]) on a miss; a hit never
+    * evaluates `e` (each evaluation reads the corpus schema, a job) */
+  private def ivfTrained(spark: SparkSession, dir: String,
+      e: => DataFrame): IvfTrained = {
+    graft.functions.GraftFunctions.registerAll(spark)
+    ivfCache.getOrBuild(spark, ivfCacheKey(spark, dir)) {
+      val train = trainSample(e)
+      val (desired, flatCap, maxK) = ivfParams(spark, train.count())
+      if (desired <= flatCap) {
+        val k = desired.toInt
+        val centroids = lloydFlat(train, k)
+        // training is done: release the cached sample (the downstream
+        // query scans the full corpus once; keeping the cache would pin
+        // storage for the rest of the session)
+        train.unpersist()
+        FlatTrained(k, centroids)
+      } else twoLevelTrained(train, desired, maxK)
+    }
+  }
+
+  private[graft] def ivfAssigned(spark: SparkSession, dir: String): IvfModel = {
+    val e = unitVecs(spark, dir)
+    ivfTrained(spark, dir, e) match {
+      case FlatTrained(k, centroids) => IvfModel(withCellFlat(e, centroids), k)
+      case TwoLevelTrained(k1, k2, coarse, mat) =>
         IvfModel(assignTwoLevel(e, coarse, mat, k2), k1 * k2,
           Some(IvfFine(k1, k2, mat)))
-      case _ =>
-        // miss (or a two-level matrix bound to a dead session):
-        // train, then register. Lloyd's iterations see a deterministic
-        // 1-in-4 sample (k-means needs representative cluster shapes,
-        // not every point; at 100 TB the training scan is the dominant
-        // cost and subsampling is the standard fix). Only the sample
-        // is cached — a few MB here, and at scale a bounded fraction
-        // of the corpus. The count that sizes K doubles as the cache
-        // materialization (the Model.fits pattern — no second corpus
-        // pass).
-        val train = e.filter(pmod(col("vec_id"), lit(4)) === 0)
-          .select(col("vec_id"), col("uq"))
-        train.cache()
-        val (desired, flatCap, maxK) = ivfParams(spark, train.count())
-
-        if (desired <= flatCap) {
-          val k = desired.toInt
-          val centroids = lloydFlat(train, k)
-          // training is done: release the cached sample (the downstream
-          // query scans the full corpus once; keeping the cache would pin
-          // storage for the rest of the session)
-          train.unpersist()
-          ivfCache.synchronized { ivfCache.put(key, FlatTrained(k, centroids)); () }
-          IvfModel(withCellFlat(e, centroids), k)
-        } else twoLevelAssigned(key, e, train, desired, maxK)
     }
   }
 
@@ -652,21 +618,16 @@ object Similarity {
     * ([[graft.streaming.SemanticDedupStream]]) applies on ingest: the
     * SemDeDup deployment shape trains the quantizer offline over a
     * corpus snapshot and assigns online. Identical sample prep, params
-    * and Lloyd loop as [[ivfAssigned]]'s flat branch (K clamped to
+    * and Lloyd loop as [[ivfTrained]]'s flat branch (K clamped to
     * the flat cap), so for any corpus where the flat path engages this IS
     * dd7's model — which is what lets StreamingSemanticDedupSpec
     * assert streaming ≡ batch dd7 exactly. */
   private[graft] def flatCentroids(spark: SparkSession, dir: String): Array[Seq[Long]] = {
-    graft.functions.GraftFunctions.registerAll(spark)
     val key = ivfCacheKey(spark, dir)
-    ivfCache.synchronized { Option(ivfCache.get(key)) } match {
+    ivfCache.get(spark, key) match {
       case Some(FlatTrained(_, centroids)) => centroids
       case _ =>
-        val train = vecs(spark, dir)
-          .withColumn("uq", call_function("quantize_unit", col("v"), lit(IVF_Q)))
-          .filter(pmod(col("vec_id"), lit(4)) === 0)
-          .select(col("vec_id"), col("uq"))
-        train.cache()
+        val train = trainSample(unitVecs(spark, dir))
         try {
           val (desired, flatCap, _) = ivfParams(spark, train.count())
           val centroids = lloydFlat(train, math.min(desired, flatCap).toInt)
@@ -674,9 +635,7 @@ object Similarity {
           // this clamped model is NOT what ivfAssigned would train (it
           // goes two-level), so registering it would poison the shared
           // key
-          if (desired <= flatCap) ivfCache.synchronized {
-            ivfCache.put(key, FlatTrained(desired.toInt, centroids)); ()
-          }
+          if (desired <= flatCap) ivfCache.put(spark, key, FlatTrained(desired.toInt, centroids))
           centroids
         } finally { train.unpersist(); () }
     }
@@ -793,8 +752,8 @@ object Similarity {
       .withColumn("cell", col("cell1") * k2 + col("cell2"))
       .select(col("vec_id"), col("v"), col("nrm"), col("uq"), col("dots"), col("cell"))
 
-  private def twoLevelAssigned(cacheKey: String, e: DataFrame,
-      train: DataFrame, desired: Long, maxK: Long): IvfModel = {
+  private def twoLevelTrained(train: DataFrame, desired: Long,
+      maxK: Long): TwoLevelTrained = {
     val k1 = math.min(maxK, math.ceil(math.sqrt(desired.toDouble)).toLong).toInt
     // k2 is deliberately NOT capped at maxK: the fine model is a
     // distributed (cell1, fidx, c) table, never collected, so maxK (a
@@ -837,16 +796,12 @@ object Similarity {
 
     // materialize the fine model ONCE (its lineage is the whole
     // IVF_ITERS training chain — unpersisted, every downstream action
-    // and every registry reuse would replay the training), then
-    // register: K1 rows of K2×64 matrices, model-sized.
+    // and every registry reuse would replay the training): K1 rows of
+    // K2×64 matrices, model-sized.
     val mat = fineMat(fine).persist()
     mat.count()
     train.unpersist()
-    ivfCache.synchronized {
-      ivfCache.put(cacheKey, TwoLevelTrained(k1, k2, coarse, mat)); ()
-    }
-    IvfModel(assignTwoLevel(e, coarse, mat, k2), k1 * k2,
-      Some(IvfFine(k1, k2, mat)))
+    TwoLevelTrained(k1, k2, coarse, mat)
   }
 
   /** DuckDB replay of [[sim3AnnIvf]]: quantize to the integer grid,
@@ -1516,12 +1471,7 @@ object Similarity {
   private def pqBooks(spark: SparkSession, e: DataFrame, cacheKey: String)
       : Array[Array[Array[Long]]] = {
     graft.functions.GraftFunctions.registerAll(spark)
-    val cached = pqCache.synchronized { Option(pqCache.get(cacheKey)) }
-    cached.getOrElse {
-      val trained = pqTrainOn(e)
-      pqCache.synchronized { pqCache.put(cacheKey, trained); () }
-      trained
-    }
+    pqCache.getOrBuild(spark, cacheKey)(pqTrainOn(e))
   }
 
   private def pqModelOn(spark: SparkSession, e: DataFrame, cacheKey: String)
@@ -1709,15 +1659,11 @@ object Similarity {
     * EXTERNAL query's `dots` column is computed against for probe
     * selection (the corpus side gets the same column from its
     * assignment scan). */
-  private def topMatrix(spark: SparkSession, dir: String): Array[Seq[Long]] = {
-    ivfAssigned(spark, dir) // ensure trained + registered
-    ivfCache.synchronized { Option(ivfCache.get(ivfCacheKey(spark, dir))) } match {
-      case Some(FlatTrained(_, c)) => c
-      case Some(TwoLevelTrained(_, _, coarse, _)) => coarse
-      case _ => throw new IllegalStateException(
-        "topMatrix: training did not register a model")
+  private def topMatrix(spark: SparkSession, dir: String): Array[Seq[Long]] =
+    ivfTrained(spark, dir, unitVecs(spark, dir)) match {
+      case FlatTrained(_, c) => c
+      case TwoLevelTrained(_, _, coarse, _) => coarse
     }
-  }
 
   /** [[sim6TopK]] over EXTERNAL query vectors — the serve surface the
     * streaming ANN leg ([[graft.streaming.AnnServeStream]]) shares
@@ -1771,85 +1717,58 @@ object Similarity {
     * ([[graft.streaming.AnnServeStream]]) re-ran the full corpus
     * coding scan on EVERY micro-batch (measured at sf1: ~4 s/batch of
     * which the 125-query ranking itself is a fraction).
-    * [[pinServedCorpus]] persists it once per serving session; keyed
-    * like the model registry, context-checked like the two-level fine
-    * matrix (foreachBatch hands sinks a cloned session), evicted with
-    * an unpersist. Derivation is deterministic, so a hit cannot change
-    * any result — only skip the rebuild. */
-  private val servedCorpusCache = lruCache[ServedModel] { sm =>
-    try sm.coded.unpersist(false) catch { case _: Throwable => () }
-  }
-
-  /** per-key pin latches: concurrent pins of the SAME (corpus, confs)
-    * serialize here — so only one builds and persists — while pins of
-    * DIFFERENT corpora proceed in parallel and neither ever holds the
-    * global cache lock across a Spark job. Keys are (dir, conf)
-    * combos, a handful per process, so the map never needs eviction. */
-  private val servedPinLatches =
-    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+    * [[pinServedCorpus]] persists it once per serving session, keyed
+    * like the model registry; the coded corpus goes with its entry.
+    * Derivation is deterministic, so a hit cannot change any result —
+    * only skip the rebuild. */
+  private val servedCorpusCache = new KeyedCache[ServedModel](4, sm => Seq(sm.coded))
 
   /** persist + register the coded corpus and its serve-time plan
     * snapshot for a serving session. The multi-second build (training
-    * fallback, coding scan, persist + count) runs OUTSIDE the cache
-    * lock — a concurrent served()/sim6Rank reader never blocks on a
-    * pin, and two sessions pinning different corpora do not serialize
-    * — but INSIDE a per-key latch, so two concurrent serve() starts of
-    * the same corpus cannot both persist (the round-10 race: the
-    * second put displaced the first without the LRU eviction hook
-    * firing — a leaked MEMORY_AND_DISK corpus copy). The put re-checks
-    * under the cache lock and unpersists any displaced entry (re-pin
-    * after a context restart). */
+    * fallback, coding scan, persist + count) runs inside the key's
+    * build latch only, so a concurrent served()/sim6Rank reader never
+    * blocks on a pin, two sessions pinning different corpora do not
+    * serialize, and two concurrent serve() starts of the same corpus
+    * persist it once. */
   private[graft] def pinServedCorpus(spark: SparkSession, dir: String): Unit = {
-    val key = ivfCacheKey(spark, dir)
-    servedPinLatches.computeIfAbsent(key, _ => new AnyRef).synchronized {
-      val hit = servedCorpusCache.synchronized {
-        Option(servedCorpusCache.get(key))
-      }.exists(_.coded.sparkSession.sparkContext eq spark.sparkContext)
-      if (!hit) {
-        val model = ivfAssigned(spark, dir)
-        val eSel = model.assigned.select(
-          col("vec_id"), col("uq").as("qx"), col("cell"), col("v"),
-          col("nrm"), col("dots"))
-        val books = pqBooks(spark, eSel, s"$dir|unit")
-        val codedPlan = pqWithCells(books, eSel)
-        // serve-time slicing: the parquet-scan partitioning (sized for
-        // batch scans under files.maxPartitionBytes) is the wrong
-        // granularity for a resident corpus that is re-scanned every
-        // micro-batch — at sf1 it left 600-row cached partitions whose
-        // per-task scheduling cost dwarfed the ADC work. Target a row
-        // density where task launch is amortized (~8k coded rows per
-        // slice, capped at the core count); `graft.serve.slices`
-        // overrides for corpora whose row width is unusual.
-        val n0 = codedPlan.count()
-        val slices = spark.conf.getOption("graft.serve.slices")
-          .map(_.toInt).filter(_ > 0).getOrElse {
-            val byRows = math.ceil(n0 / 8192.0).toInt
-            math.min(math.max(byRows, 1),
-              spark.sparkContext.defaultParallelism)
-          }
-        val coded = codedPlan.coalesce(slices)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        coded.count()
-        val slim = coded.select(col("vec_id") +: col("cell") +:
-          (0 until PQ_S).map(s => col(s"cell$s")): _*)
-        val raw = coded.select(col("vec_id"), col("v"), col("nrm"))
-        val cents = topMatrix(spark, dir).map(_.map(_.toDouble).toSeq).toSeq
-        servedCorpusCache.synchronized {
-          Option(servedCorpusCache.put(key,
-            ServedModel(model, coded, slim, raw, books, cents))).foreach { old =>
-            try old.coded.unpersist(false) catch { case _: Throwable => () }
-          }
+    servedCorpusCache.getOrBuild(spark, ivfCacheKey(spark, dir)) {
+      val model = ivfAssigned(spark, dir)
+      val eSel = model.assigned.select(
+        col("vec_id"), col("uq").as("qx"), col("cell"), col("v"),
+        col("nrm"), col("dots"))
+      val books = pqBooks(spark, eSel, s"$dir|unit")
+      val codedPlan = pqWithCells(books, eSel)
+      // serve-time slicing: the parquet-scan partitioning (sized for
+      // batch scans under files.maxPartitionBytes) is the wrong
+      // granularity for a resident corpus that is re-scanned every
+      // micro-batch — at sf1 it left 600-row cached partitions whose
+      // per-task scheduling cost dwarfed the ADC work. Target a row
+      // density where task launch is amortized (~8k coded rows per
+      // slice, capped at the core count); `graft.serve.slices`
+      // overrides for corpora whose row width is unusual.
+      val n0 = codedPlan.count()
+      val slices = spark.conf.getOption("graft.serve.slices")
+        .map(_.toInt).filter(_ > 0).getOrElse {
+          val byRows = math.ceil(n0 / 8192.0).toInt
+          math.min(math.max(byRows, 1),
+            spark.sparkContext.defaultParallelism)
         }
-      }
+      val coded = codedPlan.coalesce(slices)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      coded.count()
+      val slim = coded.select(col("vec_id") +: col("cell") +:
+        (0 until PQ_S).map(s => col(s"cell$s")): _*)
+      val raw = coded.select(col("vec_id"), col("v"), col("nrm"))
+      val cents = topMatrix(spark, dir).map(_.map(_.toDouble).toSeq).toSeq
+      ServedModel(model, coded, slim, raw, books, cents)
     }
+    ()
   }
 
   /** the serving session's pinned snapshot, if one is registered for
     * this (corpus, confs) on this SparkContext */
   private def served(spark: SparkSession, dir: String): Option[ServedModel] =
-    servedCorpusCache.synchronized {
-      Option(servedCorpusCache.get(ivfCacheKey(spark, dir)))
-    }.filter(_.coded.sparkSession.sparkContext eq spark.sparkContext)
+    servedCorpusCache.get(spark, ivfCacheKey(spark, dir))
 
   /** The shared IVF-PQ ranking body: `querySide` supplies the query
     * relation — (vec_id, v, nrm, qx, dots) — either filtered out of

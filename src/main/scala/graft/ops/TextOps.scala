@@ -619,7 +619,7 @@ object TextOps {
     * [[bpeInitialWords]]'s word-count aggregate. */
   /** A trained tokenizer model: the merge sequence plus the
     * vocabulary-sized word→subtoken-count table (persisted). */
-  private final case class BpeModel(
+  private[graft] final case class BpeModel(
       dir: String,
       merges: Seq[(Long, String, String, String, Long)],
       subs: DataFrame,
@@ -638,47 +638,12 @@ object TextOps {
     * vocab table. The table is persisted HERE, with its cardinality
     * recorded, so encoders use [[Model.guardedBroadcastKnown]] — the
     * per-query [[Model.release]] sweep must not evict a registry
-    * table, and no re-count job is needed per encode. */
-  private val BpeCacheMax = 4
-  private val bpeRegistry =
-    new java.util.LinkedHashMap[String, BpeModel](8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, BpeModel]): Boolean = {
-        val evict = size() > BpeCacheMax
-        if (evict) {
-          try e.getValue.subs.unpersist(false) catch { case _: Throwable => () }
-        }
-        evict
-      }
-    }
+    * table, and no re-count job is needed per encode. The table goes
+    * with its entry ([[KeyedCache]]), except when tok3's retrain
+    * rebuilds the identical plan. */
+  private[graft] val bpeCache = new KeyedCache[BpeModel](4, m => Seq(m.subs))
 
-  /** Per-corpus training locks: a registry miss trains under the
-    * corpus's lock, so two concurrent consumers of the SAME corpus
-    * share one training run (the second re-checks the registry inside
-    * the lock and serves the first's model) while different corpora
-    * train in parallel. The keyed map (vs the former single
-    * AtomicReference slot) also means alternating corpora in one
-    * session no longer evict each other's models. */
-  private val bpeTrainLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  private def register(dir: String, model: BpeModel): Unit =
-    bpeRegistry.synchronized {
-      val prev = bpeRegistry.put(dir, model)
-      // drop a superseded model's cached table (session-matched: a
-      // dead session's unpersist throws and the try absorbs it) —
-      // UNLESS the new model's table is the same semantic plan
-      // (tok3's explicit retrain rebuilds the identical deterministic
-      // table): unpersisting prev would evict the shared cache entry
-      // out from under the model just registered
-      if (prev != null && (prev ne model) &&
-          !prev.subs.queryExecution.analyzed.sameResult(
-            model.subs.queryExecution.analyzed)) {
-        try prev.subs.unpersist(false) catch { case _: Throwable => () }
-      }
-    }
-
-  private def trainAndRegister(spark: SparkSession, dir: String): BpeModel = {
+  private def trainBpe(spark: SparkSession, dir: String): BpeModel = {
     val (merges, wt, anchored) = trainLoop(spark, dir)
     val subs = wt
       .select(col("wd"), size(col("syms")).cast("long").as("n_sub"))
@@ -690,38 +655,15 @@ object TextOps {
     }
     val nSubs = subs.count()
     anchored.unpersist()
-    val model = BpeModel(dir, merges, subs, nSubs)
-    register(dir, model)
-    model
+    BpeModel(dir, merges, subs, nSubs)
   }
 
-  /** tok3's explicit-retrain entry: takes the corpus lock so a
-    * concurrent encoder's miss waits and then serves this run's model
-    * instead of training its own. */
-  private def trainLocked(spark: SparkSession, dir: String): BpeModel = {
-    val lock = bpeTrainLocks.computeIfAbsent(dir, _ => new Object)
-    lock.synchronized { trainAndRegister(spark, dir) }
-  }
-
-  private def bpeModel(spark: SparkSession, dir: String): BpeModel = {
-    def live: Option[BpeModel] =
-      bpeRegistry.synchronized { Option(bpeRegistry.get(dir)) }
-        .filter(_.subs.sparkSession eq spark)
-    live.getOrElse {
-      val lock = bpeTrainLocks.computeIfAbsent(dir, _ => new Object)
-      lock.synchronized { live.getOrElse(trainAndRegister(spark, dir)) }
-    }
-  }
+  private def bpeModel(spark: SparkSession, dir: String): BpeModel =
+    bpeCache.getOrBuild(spark, dir)(trainBpe(spark, dir))
 
   /** test hook: drop every registered tokenizer model (unpersisting
     * its table), forcing the next call to retrain */
-  private[graft] def resetModelRegistry(): Unit =
-    bpeRegistry.synchronized {
-      bpeRegistry.values().forEach { m =>
-        try m.subs.unpersist(false) catch { case _: Throwable => () }
-      }
-      bpeRegistry.clear()
-    }
+  private[graft] def resetModelRegistry(): Unit = bpeCache.clear()
 
   /** the registered (or trained-on-miss) model's persistable parts —
     * [[graft.ops.ModelStore]]'s export surface */
@@ -740,7 +682,7 @@ object TextOps {
       subs: DataFrame): Unit = {
     val s = subs.persist()
     val n = s.count()
-    register(dir, BpeModel(dir, merges, s, n))
+    bpeCache.put(s.sparkSession, dir, BpeModel(dir, merges, s, n))
   }
 
   /** Re-materialize the fold chain every this-many merge steps. The
@@ -804,7 +746,7 @@ object TextOps {
     * oracle-checkable: the DuckDB twin unrolls all BPE_MERGES
     * iterations and must reproduce the identical merge sequence. */
   def tok3BpeTrain(spark: SparkSession, dir: String): DataFrame = {
-    val model = trainLocked(spark, dir)
+    val model = bpeCache.rebuild(spark, dir)(trainBpe(spark, dir))
     import spark.implicits._
     model.merges.toDF("step", "lft", "rgt", "merged", "freq")
   }
@@ -813,7 +755,7 @@ object TextOps {
     * count, BPE token count, and an order-sensitive fold of the
     * per-word subtoken counts (so the full per-position segmentation
     * is hash-compared, not just totals). The word→subtoken-count map
-    * comes from the [[bpeRegistry]] — tok4 does NOT retrain when a
+    * comes from the [[bpeCache]] — tok4 does NOT retrain when a
     * model for this corpus already exists (the deployment contract:
     * tokenizers are trained once, encode forever) — and sits behind
     * [[Model.guardedBroadcastKnown]] (tok1's encode-join contract:

@@ -74,11 +74,7 @@ object AsofJoin {
     * on sf10's 10M-row events per build). Staleness (same plan, new
     * files underneath) only re-uses a salt DECISION — results are
     * salt-invariant — so a bounded memo is safe. */
-  private val probeCache =
-    new java.util.LinkedHashMap[String, Seq[Any]](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Seq[Any]]): Boolean = size() > 64
-    }
+  private val probeCache = new graft.ops.KeyedCache[Seq[Any]](64)
 
   /** Column-name builder: resolves against the inputs' analyzed plans,
     * so the node enters the analyzer fully resolved. Key and time
@@ -248,7 +244,7 @@ object AsofJoin {
     val memoKey = Seq(lhs.queryExecution.analyzed.semanticHash(),
       rhs.queryExecution.analyzed.semanticHash(),
       leftKey, rightKey, f, thr, minRows).mkString("|")
-    probeCache.synchronized(Option(probeCache.get(memoKey))).getOrElse {
+    probeCache.getOrBuild(lhs.sparkSession, memoKey) {
       import org.apache.spark.sql.functions._
       val bySide = org.apache.spark.sql.expressions.Window.partitionBy(col("side"))
       val hot = lhs.select(col(leftKey).as("k"), lit(0).as("side"))
@@ -261,7 +257,6 @@ object AsofJoin {
         .orderBy(col("count").desc)
         .select(col("k")).limit(MaxHotKeys)
         .collect().map(_.get(0)).toSeq.distinct
-      probeCache.synchronized(probeCache.put(memoKey, hot))
       hot
     }
   }

@@ -54,6 +54,20 @@ class ModelRegistrySpec extends AnyFunSuite {
     // the query only. Demand a decisive gap, not an exact count.
     assert(warmJobs <= coldJobs - 3,
       s"expected a registry hit to skip training jobs (cold=$coldJobs warm=$warmJobs)")
+
+    // ir3 then sim6, the benchmark sweep's order: ir3's dense leg
+    // trains the IVF and PQ models sim6 reads, so sim6 trains nothing
+    Similarity.resetModelRegistry()
+    Similarity.ir3HybridRrfIvfpq(spark, sf).collect()
+    graft.ops.Model.release()
+    val builds = (Similarity.ivfCache.misses, Similarity.pqCache.misses)
+    var afterIr3: Seq[String] = null
+    val afterIr3Jobs = jobsDuring { afterIr3 = rows(Similarity.sim6IvfPqTopK(spark, sf)) }
+    assert(afterIr3 === first)
+    assert((Similarity.ivfCache.misses, Similarity.pqCache.misses) === builds,
+      "sim6 after ir3 retrained a model")
+    assert(afterIr3Jobs <= coldJobs - 3,
+      s"expected sim6 after ir3 to skip training jobs (cold=$coldJobs after ir3=$afterIr3Jobs)")
   }
 
   test("tok4 reuses the model tok3 registered: identical result, fewer jobs") {
