@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet tables at /root/testdata/sf*.
   *
@@ -9,8 +10,28 @@ import org.apache.spark.sql.functions._
   * and prunes columns into the scan, so every query built on top of them
   * keeps `PushedFilters`/`ReadSchema` tight. On a real cluster the same
   * code reads a partitioned table; nothing here is local-mode-specific.
+  *
+  * A table's parquet schema is inferred on its path's first read in the
+  * JVM and reused after that: inference is a one-task Spark job, which
+  * every query would otherwise pay once per table it reads. A table
+  * read through here must therefore not be rewritten under the same
+  * path within one JVM.
   */
 object Tables {
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
+  /** `path` read with its memoized schema. A missing entry is inferred
+    * outside any lock, so no Spark job runs under one; two first reads
+    * of a path may both infer it, and both get the same schema. */
+  private def parquet(spark: SparkSession, path: String): DataFrame =
+    Option(schemas.get(path)) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        schemas.putIfAbsent(path, df.schema)
+        df
+    }
+
   /** The events table's `ts` has shipped in two physical shapes across
     * driver testdata generations: INT64 TIMESTAMP(NANOS) (which Spark's
     * parquet reader rejects by default — read as raw nanos via the
@@ -38,7 +59,7 @@ object Tables {
     if (prevTz != "UTC")
       System.err.println(s"[graft] Tables.events: overriding session timeZone '$prevTz' -> UTC (required for the NTZ ts cast)")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = parquet(spark, s"$dir/events.parquet")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
@@ -49,7 +70,7 @@ object Tables {
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else parquet(spark, s"$dir/$name.parquet")
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "orders")

@@ -1,39 +1,28 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, LongType}
-import org.apache.spark.unsafe.types.UTF8String
 
-/** Count of elements of `left` (array<string>) that appear in `right`
-  * (array<string>) — the stopword/marker/top-vocab hit counter.
-  *
-  * The built-in formulation (`size(filter(w, x => x.isin(markers)))`
-  * in ta1/ta2/the curation gate, `size(filter(w, x =>
-  * array_contains(tl, x)))` in ta6) evaluates the filter lambda through
-  * the higher-order-function interpreter — per TOKEN, times the member
-  * list's length (ta6: 64 comparisons per token, interpreted). This
-  * expression is the codegen'd nested loop: for the short marker lists
-  * it is a handful of pointer-equality-fast UTF8String compares per
-  * token inside whole-stage codegen (optimization r13, the
-  * LongMatchCount/DoubleDot move applied to the text-analysis family).
-  *
-  * Semantics match both built-in forms exactly: a null ELEMENT of
-  * `left` never counts (isin/array_contains yield null → filter
-  * drops); null elements of `right` match nothing; a null ARRAY on
-  * either side nullifies the result (BinaryExpression null
-  * propagation). Occurrences count per position — no dedup.
-  */
-case class CountIn(left: Expression, right: Expression)
-  extends BinaryExpression {
+object CountIn {
 
-  override def dataType: DataType = LongType
-  override def prettyName: String = "count_in"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val w = a.asInstanceOf[ArrayData]
-    val m = b.asInstanceOf[ArrayData]
+  /** Count of elements of `w` (array<string>) that appear in `m`
+    * (array<string>) (`count_in`) — the stopword/marker/top-vocab hit
+    * counter.
+    *
+    * The built-in formulation (`size(filter(w, x => x.isin(markers)))`
+    * in ta1/ta2/the curation gate, `size(filter(w, x =>
+    * array_contains(tl, x)))` in ta6) evaluates the filter lambda
+    * through the higher-order-function interpreter — per TOKEN, times
+    * the member list's length (ta6: 64 comparisons per token,
+    * interpreted). This kernel is the same nested loop in one call:
+    * for the short marker lists, a handful of UTF8String compares per
+    * token.
+    *
+    * Semantics match both built-in forms exactly: a null ELEMENT of
+    * `w` never counts (isin/array_contains yield null → filter
+    * drops); null elements of `m` match nothing; a null ARRAY on
+    * either side yields null (standard null propagation). Occurrences
+    * count per position — no dedup. */
+  def compute(w: ArrayData, m: ArrayData): Long = {
     val n = w.numElements()
     val k = m.numElements()
     var acc = 0L
@@ -53,35 +42,4 @@ case class CountIn(left: Expression, right: Expression)
     }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val n = ctx.freshName("n")
-      val k = ctx.freshName("k")
-      val x = ctx.freshName("x")
-      val hit = ctx.freshName("hit")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $n = $a.numElements();
-         |int $k = $b.numElements();
-         |long $acc = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$a.isNullAt($i)) {
-         |    UTF8String $x = $a.getUTF8String($i);
-         |    boolean $hit = false;
-         |    for (int $j = 0; !$hit && $j < $k; $j++) {
-         |      if (!$b.isNullAt($j) && $x.equals($b.getUTF8String($j))) $hit = true;
-         |    }
-         |    if ($hit) $acc++;
-         |  }
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CountIn =
-    copy(left = newLeft, right = newRight)
 }

@@ -51,17 +51,33 @@ import org.apache.spark.unsafe.types.UTF8String
   *    hyperplane LSH signatures, [[RkLshSignatures]]
   *  - `rolling_hash(array<string>, k)` — Rabin–Karp [min, full]
   *    fingerprint, [[RollingHashFp]]
-  *
-  * Expressions — classes whose generated code or evaluation is their
-  * own:
-  *
-  *  - `double_dot(array<double>, array<double>)` — dot product
   *  - `long_match_count(array<bigint>, array<bigint>)` — count of equal
-  *    positions (MinHash signature match)
+  *    positions (MinHash signature match), [[LongMatchCount]]
   *  - `count_in(array<string>, array<string>)` — membership hit count
-  *    (stopword/marker/top-vocab scoring)
-  *  - `quantize_unit(array<double>, q)` / `matrix_dots(array<double>,
-  *    array<array<double>>)` — normalized grid, per-row dots
+  *    (stopword/marker/top-vocab scoring), [[CountIn]]
+  *  - `quantize_unit(array<double>, q)` — unit-normalized integer grid,
+  *    [[QuantizeUnit]]
+  *  - `matrix_dots(array<double>, array<array<double>>)` — one dot per
+  *    matrix row; a constant matrix is passed as one flat literal,
+  *    a matrix column row by row, [[MatrixDots]]
+  *
+  * STANDING RULE (paid for three times before it was written down —
+  * dc4's Bloom probe in r8, dsir1's bucket fold and cls1's quantize
+  * chain in r13, the latter measured ASCENDING 18→107 s/rep at 2M
+  * vectors from interpreted-eval GC pressure): a per-element lambda on
+  * a hot column does not belong in `transform`/`aggregate`/`zip_with`.
+  * Move the scalar work AFTER an `explode` (plain expressions stay in
+  * codegen), use a plain `Cast` for elementwise casts, or write a
+  * kernel — a static method over `ArrayData` plus one registration
+  * below, as [[QuantizeUnit]] is.
+  *
+  * Expressions — classes whose evaluation is their own:
+  *
+  *  - `double_dot(array<double>, array<double>)` — dot product, the one
+  *    expression whose generated code inlines its own loop: as a static
+  *    kernel, dd5 ran ~40% slower at sf0.1 when other queries had run
+  *    in the JVM before it (~9% alone); also what
+  *    [[graft.plans.RewriteDotProduct]] rewrites to
   *  - `pq_scores(array<double>, mat, c2)` — per-subspace PQ assignment
   *    scores ‖c_p‖² − 2·sub·c_p (a deliberate `CodegenFallback`)
   *  - aggregates: `minhash_sketch(bigint)`, `simhash_sketch(bigint,
@@ -129,6 +145,28 @@ object GraftFunctions {
 
     def doubleArray(i: Int): Literal = foldable(i, "array<double>") { case a: ArrayData =>
       Literal(UnsafeArrayData.fromPrimitiveArray(a.toDoubleArray()), ArrayType(DoubleType, false))
+    }
+
+    /** A constant matrix as one row-major [[doubleArray]]-style literal
+      * with its row count and width. Its rows must be non-null, free of
+      * null elements and equally long. */
+    def doubleMatrix(i: Int): (Literal, Int, Int) = {
+      val m = Cast(exprs(i), ArrayType(DoubleArray)).eval() match {
+        case m: ArrayData => m
+        case v => throw new IllegalArgumentException(
+          s"$name: argument must be a foldable array<array<double>>, got $v")
+      }
+      val rows = Seq.tabulate(m.numElements()) { c =>
+        require(!m.isNullAt(c), s"$name: null matrix row $c")
+        val row = m.getArray(c)
+        require(!(0 until row.numElements()).exists(row.isNullAt),
+          s"$name: null element in matrix row $c")
+        row.toDoubleArray()
+      }
+      val dim = rows.headOption.fold(0)(_.length)
+      require(rows.forall(_.length == dim), s"$name: ragged matrix")
+      (Literal(UnsafeArrayData.fromPrimitiveArray(rows.flatten.toArray),
+        ArrayType(DoubleType, false)), rows.length, dim)
     }
   }
 
@@ -271,16 +309,29 @@ object GraftFunctions {
         a.typed(0, StringArray), shingleWidth(a))
     }
 
+    fn("long_match_count", 2) { a =>
+      invoke(LongMatchCount, "compute", LongType)(a.cast(0, LongArray), a.cast(1, LongArray))
+    }
+    fn("count_in", 2) { a =>
+      invoke(CountIn, "compute", LongType)(a.cast(0, StringArray), a.cast(1, StringArray))
+    }
+    fn("quantize_unit", 2) { a =>
+      invoke(QuantizeUnit, "compute", ArrayType(LongType))(
+        a.cast(0, DoubleArray), Literal(a.int(1)))
+    }
+    fn("matrix_dots", 2) { a =>
+      if (a(1).foldable) {
+        val (flat, k, dim) = a.doubleMatrix(1)
+        invoke(MatrixDots, "compute", ArrayType(DoubleType))(
+          a.cast(0, DoubleArray), flat, Literal(k), Literal(dim))
+      } else {
+        invoke(MatrixDots, "dotsWithMatrix", ArrayType(DoubleType))(
+          a.cast(0, DoubleArray), a.cast(1, ArrayType(DoubleArray)))
+      }
+    }
+
     // expressions
     fn("double_dot", 2) { a => DoubleDot(a.cast(0, DoubleArray), a.cast(1, DoubleArray)) }
-    fn("long_match_count", 2) { a =>
-      LongMatchCount(a.cast(0, LongArray), a.cast(1, LongArray))
-    }
-    fn("count_in", 2) { a => CountIn(a.cast(0, StringArray), a.cast(1, StringArray)) }
-    fn("quantize_unit", 2) { a => QuantizeUnit(a.cast(0, DoubleArray), a.int(1)) }
-    fn("matrix_dots", 2) { a =>
-      MatrixDots(a.cast(0, DoubleArray), a.cast(1, ArrayType(DoubleArray)))
-    }
     fn("pq_scores", 3) { a =>
       // codebook/norms stay literal CHILDREN (value-equal under plan
       // canonicalization), never constructor arrays — see PqScores

@@ -1,38 +1,28 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, LongType}
 
-/** Count of positions where two `array<bigint>` columns hold equal
-  * non-null values — the MinHash signature match counter.
-  *
-  * The built-in formulation
-  * (`aggregate(zip_with(a, b, (x,y) => when(x===y,1L).otherwise(0L)), 0L, _+_)`)
-  * evaluates BOTH lambdas through the higher-order-function interpreter,
-  * outside whole-stage codegen: measured at sf1, cur2's estJaccard
-  * filter over its 1.2M-row candidate stream cost ~8 s of a ~25 s query
-  * (~5.6 µs/pair for 32 comparisons), the same tax double_dot removed
-  * from the cosine family in round 5. This expression is the identical
-  * tight-loop fix for the signature-match path (dd2/cur2/dc2 and cc2
-  * through dd2's pairs).
-  *
-  * Semantics match the HOF formulation exactly: zip_with pads the
-  * shorter array with nulls and `when(null === x, 1).otherwise(0)`
-  * counts 0 for a padded or null element, so the count runs over the
-  * common prefix and skips null slots; a null ARRAY on either side
-  * nullifies the result (BinaryExpression's default null propagation).
-  */
-case class LongMatchCount(left: Expression, right: Expression)
-  extends BinaryExpression {
+object LongMatchCount {
 
-  override def dataType: DataType = LongType
-  override def prettyName: String = "long_match_count"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  /** Count of positions where two `array<bigint>` values hold equal
+    * non-null values (`long_match_count`) — the MinHash signature
+    * match counter.
+    *
+    * The built-in formulation
+    * (`aggregate(zip_with(a, b, (x,y) => when(x===y,1L).otherwise(0L)), 0L, _+_)`)
+    * evaluates BOTH lambdas through the higher-order-function
+    * interpreter, outside whole-stage codegen: measured at sf1, cur2's
+    * estJaccard filter over its 1.2M-row candidate stream cost ~8 s of
+    * a ~25 s query (~5.6 µs/pair for 32 comparisons). This kernel is
+    * the tight-loop fix for the signature-match path (dd2/cur2/dc2 and
+    * cc2 through dd2's pairs).
+    *
+    * Semantics match the HOF formulation exactly: zip_with pads the
+    * shorter array with nulls and `when(null === x, 1).otherwise(0)`
+    * counts 0 for a padded or null element, so the count runs over
+    * the common prefix and skips null slots; a null ARRAY on either
+    * side yields null (standard null propagation). */
+  def compute(x: ArrayData, y: ArrayData): Long = {
     val n = math.min(x.numElements(), y.numElements())
     var acc = 0L
     var i = 0
@@ -43,24 +33,4 @@ case class LongMatchCount(left: Expression, right: Expression)
     }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |long $acc = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$a.isNullAt($i) && !$b.isNullAt($i) &&
-         |      $a.getLong($i) == $b.getLong($i)) $acc++;
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): LongMatchCount =
-    copy(left = newLeft, right = newRight)
 }

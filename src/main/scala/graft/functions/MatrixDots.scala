@@ -1,28 +1,27 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
-/** Dot products of one `array<double>` column against a K×dim matrix
-  * (the k-means centroid model), returning `array<double>` of K dots.
+/** Dot products of one `array<double>` vector against a K×dim matrix
+  * (the k-means centroid model), returning `array<double>` of K dots
+  * (`matrix_dots`).
   *
   * The unrolled alternative — `array(double_dot(v, lit(c0)), ...,
   * double_dot(v, lit(cK)))` — embeds K×dim literal nodes in the plan:
   * fine at K=16, but with a corpus-proportional cell count (K≈1.5k at
   * the sf10 probe, unbounded at 100 TB) it detonates analysis time and
   * overflows the generated class's constant pool, kicking the whole
-  * stage out of codegen. Here a FOLDABLE matrix rides along as ONE
-  * reference object (a flat `double[]`, `ctx.addReferenceObj`), so plan
-  * size and generated code are O(1) in K and assignment stays inside
-  * whole-stage codegen at any K.
+  * stage out of codegen. A CONSTANT matrix instead reaches [[compute]]
+  * as ONE row-major literal (primitive-backed, built and checked
+  * rectangular when the plan is built), so plan size and generated code
+  * are O(1) in K and assignment stays inside whole-stage codegen at
+  * any K.
   *
-  * A NON-foldable matrix (an `array<array<double>>` column — the
-  * two-level IVF trainer's per-coarse-cell fine-centroid table, joined
-  * to each row) is evaluated per row with the identical accumulation
-  * order; the model never exists driver-side in that mode, which is
-  * the point of the two-level path.
+  * A matrix COLUMN (an `array<array<double>>` column — the two-level
+  * IVF trainer's per-coarse-cell fine-centroid table, joined to each
+  * row) goes to [[dotsWithMatrix]] per row with the identical
+  * accumulation order; the model never exists driver-side in that
+  * mode, which is the point of the two-level path.
   *
   * Per-centroid accumulation is strict left-to-right double addition —
   * identical to [[DoubleDot]] and DuckDB's `list_dot_product`, keeping
@@ -30,42 +29,38 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * per-centroid [[DoubleDot]] formulation: a null input element or a
   * vector/matrix-row width mismatch nulls every dot (same input is fed
   * to all K centroids, so per-element nulls are all-or-nothing; the
-  * foldable path enforces rectangularity eagerly, the column path nulls
-  * the whole output on the first ragged row).
+  * column path nulls the whole output on the first null or ragged
+  * row). A null vector or matrix column yields null.
   */
-case class MatrixDots(left: Expression, right: Expression)
-  extends BinaryExpression {
+object MatrixDots {
 
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
-  override def nullable: Boolean = true
-  override def prettyName: String = "matrix_dots"
-
-  /** Flattened model for the foldable fast path: (K, dim, row-major
-    * double[K*dim]). Extracted once per task from the literal;
-    * @transient so only the literal expression, not the duplicate flat
-    * copy, is serialized. None when the matrix is a per-row column. */
-  @transient private lazy val constModel: Option[(Int, Int, Array[Double])] =
-    if (!right.foldable) None
-    else {
-      val m = right.eval().asInstanceOf[ArrayData]
-      val k = m.numElements()
-      val dim = if (k == 0) 0 else m.getArray(0).numElements()
-      val flat = new Array[Double](k * dim)
+  /** The constant-matrix path: `flat` holds `k` rows of `dim` doubles,
+    * row-major. */
+  def compute(v: ArrayData, flat: ArrayData, k: Int, dim: Int): ArrayData = {
+    val out = new Array[Any](k) // nulls until proven otherwise
+    if (v.numElements() == dim) {
+      val vec = new Array[Double](dim)
+      var i = 0
+      while (i < dim) {
+        if (v.isNullAt(i)) return new GenericArrayData(out)
+        vec(i) = v.getDouble(i)
+        i += 1
+      }
       var c = 0
       while (c < k) {
-        val row = m.getArray(c)
-        require(row.numElements() == dim, "matrix_dots: ragged matrix")
+        var acc = 0.0
+        val off = c * dim
         var j = 0
-        while (j < dim) { flat(c * dim + j) = row.getDouble(j); j += 1 }
+        while (j < dim) { acc += vec(j) * flat.getDouble(off + j); j += 1 }
+        out(c) = java.lang.Double.valueOf(acc)
         c += 1
       }
-      Some((k, dim, flat))
     }
+    new GenericArrayData(out)
+  }
 
-  /** The column-matrix path, shared by eval and codegen (the generated
-    * code calls back into this — the per-row matrix walk dominates, so
-    * a codegen'd loop would buy nothing over the virtual call). */
-  def dotsWithMatrix(v: ArrayData, m: ArrayData): GenericArrayData = {
+  /** The matrix-column path. */
+  def dotsWithMatrix(v: ArrayData, m: ArrayData): ArrayData = {
     val k = m.numElements()
     val dim = v.numElements()
     val out = new Array[Any](k) // nulls until proven otherwise
@@ -96,73 +91,4 @@ case class MatrixDots(left: Expression, right: Expression)
     if (ok) new GenericArrayData(out)
     else new GenericArrayData(new Array[Any](k)) // all-or-nothing nulls
   }
-
-  override def nullSafeEval(v: Any, mv: Any): Any = constModel match {
-    case None => dotsWithMatrix(v.asInstanceOf[ArrayData], mv.asInstanceOf[ArrayData])
-    case Some((k, dim, flat)) =>
-      val x = v.asInstanceOf[ArrayData]
-      val out = new Array[Any](k) // nulls until proven otherwise
-      if (x.numElements() == dim) {
-        val vec = new Array[Double](dim)
-        var ok = true
-        var i = 0
-        while (ok && i < dim) {
-          if (x.isNullAt(i)) ok = false else { vec(i) = x.getDouble(i); i += 1 }
-        }
-        if (ok) {
-          var c = 0
-          while (c < k) {
-            var acc = 0.0
-            var j = 0
-            val off = c * dim
-            while (j < dim) { acc += vec(j) * flat(off + j); j += 1 }
-            out(c) = acc
-            c += 1
-          }
-        }
-      }
-      new GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    constModel match {
-      case None =>
-        val self = ctx.addReferenceObj("matrixDots", this, classOf[MatrixDots].getName)
-        nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $self.dotsWithMatrix($a, $b);")
-      case Some((k, dim, flat)) =>
-        val mRef = ctx.addReferenceObj("centroidMatrix", flat, "double[]")
-        nullSafeCodeGen(ctx, ev, (a, _) => {
-          val out = ctx.freshName("out")
-          val vec = ctx.freshName("vec")
-          val okv = ctx.freshName("ok")
-          val i = ctx.freshName("i")
-          val c = ctx.freshName("c")
-          val j = ctx.freshName("j")
-          val off = ctx.freshName("off")
-          val acc = ctx.freshName("acc")
-          s"""
-             |Object[] $out = new Object[$k];
-             |if ($a.numElements() == $dim) {
-             |  double[] $vec = new double[$dim];
-             |  boolean $okv = true;
-             |  for (int $i = 0; $okv && $i < $dim; $i++) {
-             |    if ($a.isNullAt($i)) $okv = false; else $vec[$i] = $a.getDouble($i);
-             |  }
-             |  if ($okv) {
-             |    for (int $c = 0; $c < $k; $c++) {
-             |      double $acc = 0.0;
-             |      int $off = $c * $dim;
-             |      for (int $j = 0; $j < $dim; $j++) $acc += $vec[$j] * $mRef[$off + $j];
-             |      $out[$c] = (Double) $acc;
-             |    }
-             |  }
-             |}
-             |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-           """.stripMargin
-        })
-    }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): MatrixDots =
-    copy(left = newLeft, right = newRight)
 }

@@ -10,8 +10,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * expressions), not constructor arrays: raw `Array` fields compare by
   * reference under case-class equality, which silently breaks plan
   * canonicalization — `sameResult` against the pinned/cached coded
-  * frame and common-subtree reuse both fail ([[MatrixDots]] keeps its
-  * matrix as a foldable child for the same reason). The flat copies
+  * frame and common-subtree reuse both fail (`matrix_dots` passes its
+  * matrix as a literal argument for the same reason). The flat copies
   * are extracted lazily per task from the literals.
   *
   * DELIBERATELY [[CodegenFallback]], not codegen'd. The zip_with form
@@ -80,7 +80,7 @@ case class PqScores(first: Expression, second: Expression, third: Expression)
 }
 
 /** The PQ coding pass's two remaining per-row HOFs replaced
-  * (optimization r14 — the [[QuantizeUnit]] standing rule: a
+  * (optimization r14 — the standing rule in [[GraftFunctions]]: a
   * per-element lambda on a hot column does not belong in
   * `transform`/`zip_with`). Both run over the FULL corpus in every
   * consumer of the coded frame — pq1/sim5 directly, sim6/knn2/ir3/hn2
@@ -92,7 +92,7 @@ case class PqScores(first: Expression, second: Expression, third: Expression)
   *  - [[PqCoding.quantizeGrid]] `quantize_grid(array<double>, q)` — the raw
   *    integer grid `qx[i] = floor(v[i] * q)` of pq1/sim5's codebook
   *    domain. Replaces `transform(v, x -> floor(x * q))`; unlike
-  *    [[QuantizeUnit]] there is no normalization (the PQ books train
+  *    [[QuantizeUnit.compute]] there is no normalization (the PQ books train
   *    on the raw grid so reconstruction error stays an exact integer).
   *    Null semantics are transform's: null array → null, a null
   *    ELEMENT maps through the lambda to a null element (not the
@@ -105,7 +105,7 @@ case class PqScores(first: Expression, second: Expression, third: Expression)
   *    (a, b) => a - 2.0 * b)` — matrix_dots was already codegen'd but
   *    the zip_with tail evaluated interpreted per codebook entry per
   *    row. The dot accumulates strict left-to-right (identical to
-  *    [[MatrixDots]]' foldable path), then `c2[p] - (2.0 * dot)` in
+  *    [[MatrixDots.compute]]), then `c2[p] - (2.0 * dot)` in
   *    the lambda's exact IEEE op order, so scores are bit-identical
   *    and the oracle replay is untouched. Codebooks are bounded model
   *    state (PQ_S × PQ_K × PQ_D longs) riding as foldable literal

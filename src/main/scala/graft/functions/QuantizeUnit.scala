@@ -1,102 +1,50 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
-/** Integer-grid quantization of a unit-normalized vector in ONE
-  * codegen'd pass: `uq[i] = floor((v[i] / ||v||) * q)`.
-  *
-  * Replaces the HOF pipeline `transform(transform(v, x -> x / nrm),
-  * x -> floor(x * q))` on the IVF corpus scan — higher-order functions
-  * evaluate their lambdas interpreted, outside whole-stage codegen, and
-  * this is a per-row cost on EVERY vector of the corpus (the sim3/dd7
-  * training and assignment input).
-  *
-  * STANDING RULE (paid for three times before it was written down —
-  * dc4's Bloom probe in r8, dsir1's bucket fold and cls1's quantize
-  * chain in r13, the latter measured ASCENDING 18→107 s/rep at 2M
-  * vectors from interpreted-eval GC pressure): a per-element lambda
-  * on a hot column does not belong in `transform`/`aggregate`/
-  * `zip_with`. Move the scalar work AFTER an `explode` (plain
-  * expressions stay in codegen), use a plain `Cast` for elementwise
-  * casts, or write the codegen Expression — this file is the
-  * template.
-  *
-  * The scalar sequence is IDENTICAL to the HOF form and the DuckDB
-  * oracle's `list_transform(v, x -> floor((x / nrm) * q))`: the norm is
-  * a strict left-to-right dot (same order as [[DoubleDot]] /
-  * `list_dot_product`) under one `Math.sqrt`, then one divide, one
-  * multiply, one floor per element — bit-identical doubles end to end,
-  * so hash-checked results are unchanged.
-  *
-  * Null semantics match the HOF form: null input array → null; a null
-  * ELEMENT nulls the norm and hence every output element (the HOF's
-  * per-element null would propagate through the norm the same way) —
-  * represented as an all-null output array. `q` is a compile-time
-  * constant (it shapes nothing structurally but mirrors the registry's
-  * foldable-arg convention). A zero norm yields floor(x/0 * q) =
-  * ±Infinity → Long.MIN/MAX under Java double→long casts; corpus
-  * vectors are non-zero by construction and the oracle's floor does
-  * the same saturation, but the cast semantics are pinned here for the
-  * record.
-  */
-case class QuantizeUnit(child: Expression, q: Int)
-  extends UnaryExpression {
+object QuantizeUnit {
 
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-  override def nullable: Boolean = true
-  override def prettyName: String = "quantize_unit"
-
-  override def nullSafeEval(v: Any): Any = {
-    val x = v.asInstanceOf[ArrayData]
+  /** Integer-grid quantization of a unit-normalized vector in ONE pass
+    * (`quantize_unit`): `uq[i] = floor((v[i] / ||v||) * q)`.
+    *
+    * Replaces the HOF pipeline `transform(transform(v, x -> x / nrm),
+    * x -> floor(x * q))` on the IVF corpus scan — higher-order
+    * functions evaluate their lambdas interpreted, outside whole-stage
+    * codegen, and this is a per-row cost on EVERY vector of the corpus
+    * (the sim3/dd7 training and assignment input).
+    *
+    * The scalar sequence is IDENTICAL to the HOF form and the DuckDB
+    * oracle's `list_transform(v, x -> floor((x / nrm) * q))`: the norm
+    * is a strict left-to-right dot (same order as [[DoubleDot]] /
+    * `list_dot_product`) under one `Math.sqrt`, then one divide, one
+    * multiply, one floor per element — bit-identical doubles end to
+    * end, so hash-checked results are unchanged.
+    *
+    * Null semantics match the HOF form: null input array → null (null
+    * propagation); a null ELEMENT nulls the norm and hence every
+    * output element — an all-null output array. A zero norm yields
+    * floor(x/0 * q) = ±Infinity → Long.MIN/MAX under Java double→long
+    * casts (NaN → 0 for a zero element), where Spark's `/` yields null
+    * or raises; corpus vectors are non-zero by construction and the
+    * oracle's floor does the same saturation, but the cast semantics
+    * are pinned here for the record. */
+  def compute(x: ArrayData, q: Int): ArrayData = {
     val n = x.numElements()
     val out = new Array[Any](n)
     var i = 0
     var acc = 0.0
-    var ok = true
-    while (ok && i < n) {
-      if (x.isNullAt(i)) ok = false
-      else { val d = x.getDouble(i); acc += d * d; i += 1 }
+    while (i < n) {
+      if (x.isNullAt(i)) return new GenericArrayData(out)
+      val d = x.getDouble(i)
+      acc += d * d
+      i += 1
     }
-    if (ok) {
-      val nrm = math.sqrt(acc)
-      var j = 0
-      while (j < n) { out(j) = math.floor(x.getDouble(j) / nrm * q).toLong; j += 1 }
+    val nrm = math.sqrt(acc)
+    var j = 0
+    while (j < n) {
+      out(j) = java.lang.Long.valueOf(math.floor(x.getDouble(j) / nrm * q).toLong)
+      j += 1
     }
     new GenericArrayData(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n")
-      val out = ctx.freshName("out")
-      val acc = ctx.freshName("acc")
-      val okv = ctx.freshName("ok")
-      val nrm = ctx.freshName("nrm")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val d = ctx.freshName("d")
-      s"""
-         |int $n = $a.numElements();
-         |Object[] $out = new Object[$n];
-         |double $acc = 0.0;
-         |boolean $okv = true;
-         |for (int $i = 0; $okv && $i < $n; $i++) {
-         |  if ($a.isNullAt($i)) $okv = false;
-         |  else { double $d = $a.getDouble($i); $acc += $d * $d; }
-         |}
-         |if ($okv) {
-         |  double $nrm = java.lang.Math.sqrt($acc);
-         |  for (int $j = 0; $j < $n; $j++) {
-         |    $out[$j] = (Long) (long) java.lang.Math.floor($a.getDouble($j) / $nrm * $q);
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): QuantizeUnit =
-    copy(child = newChild)
 }

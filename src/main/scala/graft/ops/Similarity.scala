@@ -560,11 +560,11 @@ object Similarity {
   private def unitVecs(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.registerAll(spark)
     // unit-normalize + integer-grid quantize in ONE codegen'd pass
-    // (QuantizeUnit; the HOF transform chain evaluated its lambdas
+    // (QuantizeUnit.compute; the HOF transform chain evaluated its lambdas
     // interpreted on every corpus row) — the exact scalar sequence of
     // the oracle's list_transform(v, x -> floor((x / nrm) * 512)), so
     // hashes are unchanged; cell dots then go through the codegen'd
-    // MatrixDots, exact (products ≤ 2^18, 64-term sums ≤ 2^24 —
+    // MatrixDots.compute, exact (products ≤ 2^18, 64-term sums ≤ 2^24 —
     // order- and engine-free)
     vecs(spark, dir).withColumn("nrm", norm2(col("v")))
       .withColumn("uq", call_function("quantize_unit", col("v"), lit(IVF_Q)))
@@ -679,10 +679,10 @@ object Similarity {
     centroids
   }
 
-  /** dots against the whole centroid matrix via ONE codegen'd
-    * expression carrying the model as a reference object — plan size
-    * and generated code are O(1) in K (the unrolled per-centroid
-    * literal form detonates past K≈500; see MatrixDots); argmax with
+  /** dots against the whole centroid matrix via ONE kernel call
+    * carrying the model as one flat literal — plan size and generated
+    * code are O(1) in K (the unrolled per-centroid literal form
+    * detonates past K≈500; see [[graft.functions.MatrixDots]]); argmax with
     * FIRST-index tie-break (array_position returns the first
     * occurrence) — mirrored by the oracle's ORDER BY d DESC, pid. */
   private def withCellFlat(df: DataFrame, centroids: Array[Seq[Long]]): DataFrame = df
@@ -692,7 +692,7 @@ object Similarity {
 
   /** The per-coarse-cell fine-centroid table pivoted to one matrix row
     * per coarse cell: (cell1, mat sorted by sub-cell index) — the shape
-    * [[graft.functions.MatrixDots]]' column path consumes. */
+    * [[graft.functions.MatrixDots.dotsWithMatrix]] consumes. */
   private def fineMat(fine: DataFrame): DataFrame = fine
     .groupBy(col("cell1"))
     .agg(sort_array(collect_list(struct(col("fidx"), col("c")))).as("fc"))
@@ -988,7 +988,7 @@ object Similarity {
     * sign(k,j) from bit 16 of the 32-bit Knuth-multiplicative mix of
     * the flat index k·DIM+j — engine-neutral integer arithmetic the
     * oracle reproduces with `%`/`//`, no RNG state to ship. Doubles
-    * (±1.0) so [[graft.functions.MatrixDots]] consumes it directly. */
+    * (±1.0) so [[graft.functions.MatrixDots.compute]] consumes it directly. */
   private def rpSigns: Seq[Seq[Double]] =
     Seq.tabulate(RP_D)(k => Seq.tabulate(DIM) { j =>
       val h = ((k.toLong * DIM + j) * 2654435761L) & 0xFFFFFFFFL
@@ -1006,7 +1006,7 @@ object Similarity {
     * Engine-neutral by the sim3 trick: project the 512-grid QUANTIZED
     * vector, so every p[k] = Σ_j ±uq[j] is an exact whole number
     * (|p[k]| ≤ 64·512 — order-free integer sums), computed by ONE
-    * codegen'd [[graft.functions.MatrixDots]] against the 16×64 sign
+    * codegen'd [[graft.functions.MatrixDots.compute]] against the 16×64 sign
     * matrix — a narrow map, zero shuffle, O(1) plan size. Output per
     * vector: the first component, an index-weighted checksum of all 16
     * (so the oracle pins every component, not just a sum), the
@@ -1070,7 +1070,7 @@ object Similarity {
     * (eval suites are small artifacts; they do not grow with the
     * training corpus — at sf1/sf10 ScaleGen's replicas all land on the
     * corpus side) and ships as a plan literal through the O(1)-plan
-    * codegen'd [[graft.functions.MatrixDots]]; scoring is ONE narrow
+    * codegen'd [[graft.functions.MatrixDots.compute]]; scoring is ONE narrow
     * pass over the corpus — per row, |bench| dots + an argmax — with
     * ZERO shuffle and zero join (PlanSpec-class no-Exchange pin in
     * DedupSimilaritySpec). Contrast dd5's O(N²) all-pairs: here one
@@ -1143,7 +1143,7 @@ object Similarity {
       .select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
       // quantize_unit: the codegen'd one-pass form of
       // transform(v, x => floor(x / norm2(v) * q)) — identical scalar
-      // sequence (QuantizeUnit scaladoc; the cls1Train swap from r13,
+      // sequence (QuantizeUnit.compute scaladoc; the cls1Train swap from r13,
       // applied to the site it missed — optimization r14)
       .withColumn("uq", call_function("quantize_unit", col("v"), lit(EMB_Q)))
       .select(col("vec_id"), col("label"), col("uq"))
@@ -1403,7 +1403,7 @@ object Similarity {
     * the update is a componentwise floor-division mean (Math.floorDiv
     * ↔ the oracle's (x − floorMod)/n — NOT `/` or `//`, whose
     * negative-operand truncation differs); empty cells keep their
-    * centroid. Spark evaluates argmin via [[MatrixDots]] on the
+    * centroid. Spark evaluates argmin via [[graft.functions.MatrixDots.compute]] on the
     * identity ‖s−c‖² = ‖s‖² + (‖c‖² − 2·s·c): the bracket is an exact
     * integer-valued double (|terms| ≤ 2^21), ‖s‖² is constant per row,
     * so the argmin and its ties match the oracle's direct-distance
@@ -1670,8 +1670,8 @@ object Similarity {
     * with batch, so the tiers cannot drift: `queries` is a (qid,
     * v: array<float|double>) relation, and each query's uq/dots
     * columns are derived from its RAW vector by the corpus
-    * assignment's exact scalar sequence ([[graft.functions.QuantizeUnit]],
-    * [[graft.functions.MatrixDots]]) — a query that IS a corpus vector
+    * assignment's exact scalar sequence ([[graft.functions.QuantizeUnit.compute]],
+    * [[graft.functions.MatrixDots.compute]]) — a query that IS a corpus vector
     * (knn2's contract: qid = vec_id < NQ) therefore gets bit-identical
     * probe lists and scores to [[sim6TopK]].
     *
@@ -2006,7 +2006,7 @@ object Similarity {
     * (map-side partials; label cardinality is schema-bounded model
     * state, the categorical-dictionary class — NOT corpus-sized), and
     * the trained centroids ship as a plan literal through the
-    * O(1)-plan-size codegen'd [[graft.functions.MatrixDots]], so
+    * O(1)-plan-size codegen'd [[graft.functions.MatrixDots.compute]], so
     * classification is ONE narrow pass — zero join, zero shuffle
     * (spec-pinned no-Exchange in the scoring plan). Contrast knn1,
     * whose per-item cost is a corpus-wide neighbor ranking. */
@@ -2025,7 +2025,7 @@ object Similarity {
     graft.functions.GraftFunctions.registerAll(spark)
     val ctr = Tables.embeddings(spark, dir)
       .select(col("label"), asDouble(col("embedding")).as("v"))
-      // codegen'd quantization (QuantizeUnit — identical scalar sequence
+      // codegen'd quantization (QuantizeUnit.compute — identical scalar sequence
       // to the HOF transform chain, which evaluates interpreted and was
       // measured ASCENDING 18→107 s/rep at 2M vectors from GC pressure)
       .withColumn("uq", call_function("quantize_unit", col("v"), lit(EMB_Q)))
@@ -2042,7 +2042,7 @@ object Similarity {
 
   /** cls1's SCORING half over a (vec_id, label, v: array<double>)
     * relation: a PURE narrow projection — the model rides as plan
-    * literals through the codegen'd MatrixDots, so the same code
+    * literals through the codegen'd MatrixDots.compute, so the same code
     * classifies a batch corpus and a live stream
     * ([[graft.streaming.ClassifyStream]] delegates here verbatim; the
     * streaming spec's equality assertion IS this polymorphism). */

@@ -13,9 +13,10 @@ import graft.ops.Similarity
   * centroid model is trained OFFLINE over a corpus snapshot —
   * [[graft.ops.Similarity.cls1Train]], one label-keyed integer sketch
   * aggregate — and ships to executors as plan literals through the
-  * codegen'd MatrixDots (label-cardinality × 64 doubles: the smallest
-  * closure-held model in this repo; a 1000-class production model is
-  * still ~KBs). Online, each arrival is ONE stateless narrow map —
+  * codegen'd [[graft.functions.MatrixDots.compute]]
+  * (label-cardinality × 64 doubles: the smallest closure-held model in
+  * this repo; a 1000-class production model is still ~KBs). Online,
+  * each arrival is ONE stateless narrow map —
   * quantize to the 512 grid, |labels| dots, argmax with
   * smallest-label ties — zero shuffle, zero state, so throughput is
   * scan-bound and scales with input partitions alone.

@@ -110,9 +110,9 @@ object SemanticDedupStream {
   }
 
   /** Batch dd7's assignment arithmetic, scalar-for-scalar:
-    * `uq[i] = floor(v[i]/‖v‖ · 512)` ([[graft.functions.QuantizeUnit]]),
+    * `uq[i] = floor(v[i]/‖v‖ · 512)` ([[graft.functions.QuantizeUnit.compute]]),
     * dots against the centroid matrix in doubles
-    * ([[graft.functions.MatrixDots]] — uq rides as exact whole-number
+    * ([[graft.functions.MatrixDots.compute]] — uq rides as exact whole-number
     * doubles, the cast the batch plan inserts), argmax with FIRST-index
     * tie-break (`array_position` returns the first occurrence). */
   private[streaming] def cellOf(v: Seq[Double], nrm: Double,

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Edge cases of the codegen'd CountIn expression (optimization r13:
+/** Edge cases of the `count_in` kernel (optimization r13:
   * replaces the interpreted size(filter(isin))/array_contains HOFs in
   * ta1/ta2/ta6 and the curation gate) — must agree with both built-in
   * formulations it replaced. */

@@ -40,7 +40,11 @@ class GraftFunctionsSpec extends AnyFunSuite {
     "shingle_hashes_pos" -> Seq(col("w"), lit(2)),
     "span_cover" -> Seq(col("ids"), col("n"), lit(2)),
     "word_chunks" -> Seq(col("w"), lit(2)),
-    "word_pairs" -> Seq(col("w"), lit(2)))
+    "word_pairs" -> Seq(col("w"), lit(2)),
+    "long_match_count" -> Seq(col("ids"), col("ids")),
+    "count_in" -> Seq(col("w"), col("w")),
+    "quantize_unit" -> Seq(col("v"), lit(4)),
+    "matrix_dots" -> Seq(col("v"), typedLit(Seq(Seq(1.0, 2.0)))))
 
   /** Planning `args` as a call of `name` over `df` fails with `msg`
     * somewhere in the exception's cause chain. */
@@ -74,7 +78,8 @@ class GraftFunctionsSpec extends AnyFunSuite {
       ("rk_lsh_signatures", 2, "integer"), ("rolling_hash", 1, "integer"),
       ("scaled_cos", 2, "array<double>"), ("shingle_hashes", 1, "integer"),
       ("shingle_hashes_pos", 1, "integer"), ("span_cover", 2, "integer"),
-      ("word_chunks", 1, "integer"), ("word_pairs", 1, "integer"))
+      ("word_chunks", 1, "integer"), ("word_pairs", 1, "integer"),
+      ("quantize_unit", 1, "integer"))
     val column = Map("integer" -> col("n"), "string" -> col("s"),
       "array<bigint>" -> col("ids"), "array<double>" -> col("v"))
     for ((name, i, what) <- constant) {
@@ -118,6 +123,10 @@ class GraftFunctionsSpec extends AnyFunSuite {
     rejects("span_cover", Seq(col("ids"), col("n"), lit(0)), "span_cover needs k > 0, got 0")
     rejects("word_chunks", Seq(col("w"), lit(0)), "word_chunks needs k > 0, got 0")
     rejects("word_pairs", Seq(col("w"), lit(3)), "word_pairs mode must be 0|1|2, got 3")
+    rejects("matrix_dots", Seq(col("v"), typedLit(Seq(Seq(1.0, 2.0), Seq(1.0)))),
+      "matrix_dots: ragged matrix")
+    rejects("matrix_dots", Seq(col("v"), typedLit(Seq(Seq[java.lang.Double](1.0, null)))),
+      "matrix_dots: null element in matrix row 0")
   }
 
   test("bloom_hits and scaled_cos plans from value-equal constant arrays have the same result") {
@@ -140,6 +149,12 @@ class GraftFunctionsSpec extends AnyFunSuite {
     val lits = plan.expressions.flatMap(_.collect { case s: StaticInvoke => s.arguments })
       .flatten.collect { case Literal(a: UnsafeArrayData, _) => a.toLongArray().toSeq }
     assert(lits == Seq(Seq(-1L)))
+    // a constant matrix becomes one row-major literal, whatever its row count
+    val dots = rows.select(call_function("matrix_dots", col("v"),
+      typedLit(Seq(Seq(1.0, 2.0), Seq(3.0, 4.0), Seq(5.0, 6.0))))).queryExecution.analyzed
+    val flat = dots.expressions.flatMap(_.collect { case s: StaticInvoke => s.arguments })
+      .flatten.collect { case Literal(a: UnsafeArrayData, _) => a.toDoubleArray().toSeq }
+    assert(flat == Seq(Seq(1.0, 2.0, 3.0, 4.0, 5.0, 6.0)))
   }
 
   test("the compiled path runs the kernel inside whole-stage codegen; the interpreted path does not") {

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Edge cases of the codegen'd LongMatchCount expression (optimization
+/** Edge cases of the `long_match_count` kernel (optimization
   * r13: replaces the interpreted zip_with+aggregate pair in
   * Dedup.estJaccard) — must agree with the HOF formulation it replaced
   * on every input shape the signature path can produce. */

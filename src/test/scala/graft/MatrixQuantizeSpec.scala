@@ -4,27 +4,18 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.VectorFunctions
 
-/** Edge cases of the round-5 codegen'd expressions — MatrixDots (all
-  * centroid dots in one pass, matrix as a reference object) and
-  * QuantizeUnit (unit-normalize + integer-grid quantize in one pass).
-  * Each check runs under BOTH whole-stage codegen and the interpreted
-  * eval path: a divergence between doGenCode and nullSafeEval is the
-  * classic custom-expression bug and would otherwise surface only as
-  * an unexplained oracle mismatch at some future scale. */
+/** Edge cases of the `matrix_dots` kernels (all centroid dots in one
+  * pass, a constant matrix as one flat literal) and `quantize_unit`
+  * (unit-normalize + integer-grid quantize in one pass). Each check
+  * runs on both evaluation paths ([[CodegenPaths.onBothPaths]]): the
+  * kernel call inside whole-stage generated code and the interpreted
+  * `StaticInvoke`. */
 class MatrixQuantizeSpec extends AnyFunSuite {
   import TestSpark._
+  import CodegenPaths.onBothPaths
   import spark.implicits._
 
   graft.functions.GraftFunctions.registerAll(spark)
-
-  /** run the thunk with whole-stage codegen ON then OFF; results must
-    * agree (the OFF path drives nullSafeEval) */
-  private def bothPaths[A](f: => A): (A, A) = {
-    spark.conf.set("spark.sql.codegen.wholeStage", "true")
-    val gen = f
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try { (gen, f) } finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
-  }
 
   private val m22 = typedLit(Seq(Seq(1.0, 2.0), Seq(-1.0, 0.5)))
 
@@ -32,8 +23,7 @@ class MatrixQuantizeSpec extends AnyFunSuite {
     def run = Seq(Seq(3.0, 4.0)).toDF("v")
       .select(call_function("matrix_dots", col("v"), m22).as("d"))
       .head().getSeq[java.lang.Double](0)
-    val (gen, interp) = bothPaths(run)
-    assert(gen == Seq(11.0, -1.0) && interp == Seq(11.0, -1.0))
+    onBothPaths(assert(run == Seq(11.0, -1.0)))
   }
 
   test("matrix_dots: width mismatch and null element null every dot") {
@@ -44,17 +34,14 @@ class MatrixQuantizeSpec extends AnyFunSuite {
       .select(call_function("matrix_dots",
         array(lit(1.0), lit(null).cast("double")), m22).as("d"))
       .head().getSeq[java.lang.Double](0)
-    val (g1, i1) = bothPaths(runMismatch)
-    val (g2, i2) = bothPaths(runNullElem)
-    assert(Seq(g1, i1, g2, i2).forall(_ == Seq(null, null)))
+    onBothPaths(assert(Seq(runMismatch, runNullElem).forall(_ == Seq(null, null))))
   }
 
   test("matrix_dots: null input array yields null, not a crash") {
     def run = Seq(Option.empty[Seq[Double]]).toDF("v")
       .select(call_function("matrix_dots", col("v"), m22).as("d"))
       .head().isNullAt(0)
-    val (gen, interp) = bothPaths(run)
-    assert(gen && interp)
+    onBothPaths(assert(run))
   }
 
   test("matrix_dots agrees with per-centroid double_dot bit-for-bit") {
@@ -80,9 +67,7 @@ class MatrixQuantizeSpec extends AnyFunSuite {
       .select(transform(transform(col("v"), x => x / col("nrm")),
         x => floor(x * 512)).as("uq"))
       .collect().map(_.getSeq[Long](0))
-    val (gen, interp) = bothPaths(viaExpr)
-    assert(gen.map(_.toList).toSeq == viaHof.map(_.toList).toSeq)
-    assert(interp.map(_.toList).toSeq == viaHof.map(_.toList).toSeq)
+    onBothPaths(assert(viaExpr.map(_.toList).toSeq == viaHof.map(_.toList).toSeq))
   }
 
   test("quantize_unit: null element nulls the whole output; null array is null") {
@@ -90,12 +75,10 @@ class MatrixQuantizeSpec extends AnyFunSuite {
       .select(call_function("quantize_unit",
         array(lit(1.0), lit(null).cast("double")), lit(512)).as("uq"))
       .head().getSeq[java.lang.Long](0)
-    val (g, i) = bothPaths(runNullElem)
-    assert(g == Seq(null, null) && i == Seq(null, null))
+    onBothPaths(assert(runNullElem == Seq(null, null)))
     def runNullArr = Seq(Option.empty[Seq[Double]]).toDF("v")
       .select(call_function("quantize_unit", col("v"), lit(512)).as("uq"))
       .head().isNullAt(0)
-    val (g2, i2) = bothPaths(runNullArr)
-    assert(g2 && i2)
+    onBothPaths(assert(runNullArr))
   }
 }
