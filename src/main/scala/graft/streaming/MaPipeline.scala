@@ -24,7 +24,11 @@ import graft.model.Schemas
   *  - W5 1s timer            → Trigger.ProcessingTime("1 second")
   *  - W6 emission policy     → `windowedSma(emit = …)`: update (V1
   *                             re-emit cadence) vs append (V2/V3
-  *                             close-of-window); the query's output mode
+  *                             close-of-window); the query's output mode.
+  *                             `current_time` is the emitting trigger's
+  *                             batch time, which [[SmaProcessor]] takes
+  *                             from `TimerValues`, so the stream's plan
+  *                             compiles once per query
   *
   * The watermark is event-time (idiomatic Spark) where the reference
   * evicts by wall clock (`ma_agg.py:51-54`); bit-exact V1 timer behavior
@@ -80,8 +84,7 @@ object MaPipeline {
     * [[V1StateProcessor]]'s formatter (the round-1 seconds-only pattern
     * silently truncated sub-second tick timestamps on this path). */
   private def isoMicro(ts: Column): Column =
-    when(date_format(ts, "SSSSSS") === "000000",
-      date_format(ts, "yyyy-MM-dd'T'HH:mm:ssXXX"))
+    when(unix_micros(ts) % 1000000 === 0, date_format(ts, "yyyy-MM-dd'T'HH:mm:ssXXX"))
       .otherwise(date_format(ts, "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"))
 
   /** A `window()` duration ("5 seconds") in micros, as `window()` reads it. */
@@ -104,6 +107,10 @@ object MaPipeline {
     * `flatMapGroups`, with no watermark and no state. The fold emits one
     * numeric row per window, and the gate and projection below turn it
     * into the wire record.
+    *
+    * A stream stamps `current_time` from the processor's `emit_ts`, the
+    * trigger's batch time: `current_timestamp()` holds the same value but
+    * reaches generated code as a literal, a new class on every trigger.
     *
     * A tick is late when its event time is at or before the watermark the
     * operator filters with, the previous trigger's: it is dropped whole
@@ -133,7 +140,8 @@ object MaPipeline {
       lit("5_MA_data").as("MA_type"),
       isoMicro(col("min_ts")).as("start"),
       isoMicro(col("max_ts")).as("end"),
-      date_format(current_timestamp(), "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX").as("current_time"),
+      date_format(if (parsed.isStreaming) col("emit_ts") else current_timestamp(),
+        "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX").as("current_time"),
       when(col("count_of_vwap") > 0, col("sum_of_vwap") / col("count_of_vwap"))
         .otherwise(0.0).as("sma_value"),
       col("sum_of_vwap"), col("count_of_vwap"), col("window_data_count"),

@@ -19,7 +19,8 @@ final case class SmaTick(
 final case class SmaKey(symbol: String, `type`: String)
 
 /** One window's aggregate, all numeric: the columns `MaPipeline`'s gate
-  * filter and output projection read. */
+  * filter and output projection read. `emit_ts` is the emitting trigger's
+  * batch time in a stream and null in a batch. */
 final case class SmaWindow(
     symbol: String,
     `type`: String,
@@ -29,7 +30,8 @@ final case class SmaWindow(
     filled_data_count: Long,
     min_ts: Instant,
     max_ts: Instant,
-    window_data_count: Long)
+    window_data_count: Long,
+    emit_ts: Instant)
 
 /** A key's open windows as ONE state row, in window-start order: `longs`
   * holds [[SmaFold.Acc.Longs]] values per window (start, vwap count,
@@ -131,9 +133,9 @@ object SmaFold {
       touched = true
     }
 
-    def row(key: SmaKey): SmaWindow = SmaWindow(key.symbol, key.`type`, sum, vwapCount,
-      real, filled, DateTimeUtils.microsToInstant(minTs), DateTimeUtils.microsToInstant(maxTs),
-      count)
+    def row(key: SmaKey, emitTs: Instant): SmaWindow = SmaWindow(key.symbol, key.`type`, sum,
+      vwapCount, real, filled, DateTimeUtils.microsToInstant(minTs),
+      DateTimeUtils.microsToInstant(maxTs), count, emitTs)
 
     /** This window's values in the [[SmaPanes]] layout, but for its sum. */
     def longs: Array[Long] = Array(start, vwapCount, real, filled, minTs, maxTs, count)
@@ -159,7 +161,7 @@ object SmaFold {
       ticks: Iterator[SmaTick]): Iterator[SmaWindow] = {
     val fold = new SmaFold(sizeUs, slideUs)
     ticks.foreach(fold.add)
-    fold.all.iterator.map(_.row(key))
+    fold.all.iterator.map(_.row(key, null))
   }
 }
 
@@ -184,6 +186,7 @@ object SmaFold {
 class SmaProcessor(sizeUs: Long, slideUs: Long)
   extends StatefulProcessor[SmaKey, SmaTick, SmaWindow] {
   import SmaFold.{NoTimer, timerFor}
+  import SmaProcessor.emitTs
 
   @transient private var state: ValueState[SmaPanes] = _
   @transient private var append = false
@@ -226,7 +229,7 @@ class SmaProcessor(sizeUs: Long, slideUs: Long)
     val touched = fold.touched
     val closed = fold.close(wmMs * 1000L)
     store(fold, timerMs, wmMs)
-    (if (append) closed else touched).iterator.map(_.row(key))
+    (if (append) closed else touched).iterator.map(_.row(key, emitTs(timerValues)))
   }
 
   override def handleExpiredTimer(key: SmaKey, timerValues: TimerValues,
@@ -235,11 +238,16 @@ class SmaProcessor(sizeUs: Long, slideUs: Long)
     val (fold, _) = loaded()
     val closed = fold.close(wmMs * 1000L)
     store(fold, NoTimer, wmMs) // the fired timer is gone
-    if (append) closed.iterator.map(_.row(key)) else Iterator.empty
+    if (append) closed.iterator.map(_.row(key, emitTs(timerValues))) else Iterator.empty
   }
 }
 
 object SmaProcessor {
+  /** The trigger's batch time, the value `current_timestamp()` takes in
+    * that micro-batch: `transformWithState` passes it in every mode. */
+  private def emitTs(t: TimerValues): Instant =
+    Instant.ofEpochMilli(t.getCurrentProcessingTimeInMs())
+
   /** Built once per JVM: `Encoders.product` reflects on the class. */
   private lazy val panes = Encoders.product[SmaPanes]
 }

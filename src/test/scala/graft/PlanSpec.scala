@@ -187,6 +187,54 @@ class PlanSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("streaming SMA: the output stage's generated code is the same on every trigger") {
+    // a per-batch value inlined into a projection (current_timestamp()
+    // becomes a literal after optimization) gives each trigger a new
+    // source: a cache miss, a fresh compile and a cold class. What may
+    // compile per data trigger is the operator's late-event predicate,
+    // which holds the watermark. The first two triggers warm up: the
+    // second is the first to read state and, in append mode, to emit,
+    // and each of those compiles a decoder once per query. No-data
+    // triggers are off so that each data trigger's compiles count alone.
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.Encoders
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.streaming.OutputMode
+    import graft.streaming.MaPipeline
+    def tick(sec: Int) = """{"symbol":"TSM","type":"stock",""" +
+      f""""current_time":"2024-01-01T00:00:$sec%02d+00:00","real_or_filled":"real",""" +
+      """"vwap_price_per_sec":10.0,"size_per_sec":3}"""
+    CodegenPaths.withConf("spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
+      for (mode <- Seq(OutputMode.Update(), OutputMode.Append())) {
+        val input = MemoryStream[String](Encoders.STRING, spark)
+        val q = MaPipeline.windowedSma(MaPipeline.parse(input.toDF().select(col("value"))),
+            gate = None, emit = mode)
+          .writeStream.format("memory").queryName(s"sma_codegen_$mode").outputMode(mode).start()
+        try {
+          // event time moves on 10 s a trigger, and so does the watermark;
+          // the tick at 1 s closes windows in the second trigger
+          val runs = Seq(1 +: (10 to 14), 20 to 24, 30 to 34, 40 to 44).map { secs =>
+            Thread.sleep(5) // a new batch timestamp
+            val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+            input.addData(secs.map(tick): _*)
+            q.processAllAvailable()
+            val p = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+            (p.collect { case w: WholeStageCodegenExec => w.doCodeGen()._2.body },
+              CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before)
+          }
+          val compiles = runs.map(_._2)
+          assert(runs(1)._1.nonEmpty, s"$mode: no whole-stage codegen in the plan")
+          val same = runs.drop(2).forall(_._1 == runs(1)._1)
+          assert(same, s"$mode: the generated code changed between triggers; compiles $compiles")
+          assert(compiles.drop(2).forall(_ <= 1), s"$mode: compiles per data trigger $compiles")
+          assert(spark.table(s"sma_codegen_$mode").count() > 0, s"$mode: no rows")
+        } finally q.stop()
+      }
+    }
+  }
+
   test("pk1: distributed prefix sum — no single-partition funnel") {
     val p = plan(graft.ops.Pipeline.pk1PackSequences(spark, sf))
     // the two-phase form windows WITHIN range buckets; a global

@@ -100,6 +100,15 @@ class SmaDifferentialSpec extends AnyFunSuite {
     }
   }
 
+  /** One tick per symbol at each edge of the `start`/`end` format: whole
+    * seconds, a microsecond either side of one, a half second, and the
+    * same before 1970, where the epoch micros are negative. */
+  private val edges: Seq[String] = Seq(base + 60000000L, base + 61000001L, base + 61999999L,
+      base + 62500000L, 0L, -1L, -1000000L, -999999L, -1500000L, -31536000000000L + 250000L)
+    .zipWithIndex.map { case (us, i) =>
+      tick(s"E$i", "stock", us, Some(1.0), Some(1L), Some("real"))
+    }
+
   private type Out = Seq[(Long, Seq[Row])]
 
   /** Runs `build` over `input` in `mode`, one data trigger per batch, and
@@ -165,11 +174,14 @@ class SmaDifferentialSpec extends AnyFunSuite {
 
   for ((size, slide) <- Seq(("5 seconds", "1 second"), ("5 seconds", "5 seconds"))) {
     test(s"$size/$slide, batch input: every window equals the replaced plan's") {
-      val parsed = MaPipeline.parse(spark.createDataset(batches(41).flatten)(Encoders.STRING)
-        .toDF("value"))
+      val parsed = MaPipeline.parse(
+        spark.createDataset(batches(41).flatten ++ edges)(Encoders.STRING).toDF("value"))
       val got = MaPipeline.windowedSma(parsed, size, slide, gate = None).drop("current_time")
       val want = oracle(parsed, size, slide, "5 seconds", None).drop("current_time")
       assertSame(Seq(0L -> got.collect().toSeq), Seq(0L -> want.collect().toSeq), "batch")
+      val starts = got.select("start").collect().map(_.getString(0)).toSet
+      assert(Set("2024-01-01T00:01:00Z", "2024-01-01T00:01:01.000001Z", "1969-12-31T23:59:59Z",
+        "1969-12-31T23:59:59.999999Z", "1969-12-31T23:59:58.500000Z").subsetOf(starts), starts)
     }
   }
 

@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.streaming.OutputMode
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.{MaPipeline, StockTick, V1StateProcessor}
 
@@ -187,6 +188,45 @@ class StreamingSpec extends AnyFunSuite {
       assert(rows.length == 1)
       assert(rows.head.getAs[Double]("sma_value") == 30.0)
     } finally q.stop()
+  }
+
+  test("current_time is the emitting trigger's batch time; a batch carries one current_time") {
+    val fmt = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
+    for (mode <- Seq(OutputMode.Update(), OutputMode.Append())) {
+      val input = MemoryStream[String](Encoders.STRING, spark)
+      val out = MaPipeline.windowedSma(MaPipeline.parse(input.toDF().select(col("value"))),
+          gate = None, emit = mode)
+        .withColumn("batch_time", date_format(current_timestamp(), fmt))
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Array[Row])]()
+      val sink: (DataFrame, Long) => Unit =
+        (df, id) => seen.add(id -> df.select("current_time", "batch_time").collect())
+      val q = out.writeStream.outputMode(mode).foreachBatch(sink).start()
+      try {
+        // N's five ticks complete a window; P@30 and P@40 move the
+        // watermark to 25 s and 35 s, so append mode closes N's windows
+        // from their timers, in the no-data triggers that follow
+        for (b <- Seq((10 to 14).map(s => wire("N", s, 1.0, 1)),
+                      Seq(wire("P", 30, 1.0, 1)), Seq(wire("P", 40, 1.0, 1)))) {
+          Thread.sleep(5) // a new batch timestamp
+          input.addData(b: _*)
+          q.processAllAvailable()
+        }
+        val byBatch = seen.asScala.toSeq.filter(_._2.nonEmpty)
+        val rows = byBatch.flatMap(_._2)
+        assert(rows.nonEmpty, s"$mode: no rows")
+        rows.foreach(r => assert(r.getString(0) == r.getString(1), s"$mode: $r"))
+        assert(rows.map(_.getString(0)).distinct.length >= 2, s"$mode: one batch time for all")
+        if (mode == OutputMode.Append()) {
+          val noData = q.recentProgress.filter(_.numInputRows == 0).map(_.batchId).toSet
+          assert(byBatch.exists { case (id, _) => noData(id) },
+            s"append: no rows from a no-data trigger: ${byBatch.map(_._1)} vs $noData")
+        }
+      } finally q.stop()
+    }
+    val batch = MaPipeline.windowedSma(MaPipeline.parse(
+      Seq(10, 11, 12, 13, 14, 30).map(s => wire("N", s, 1.0, 1)).toDF("value")), gate = None)
+    val times = batch.select("current_time").distinct().collect()
+    assert(times.length == 1 && times.head.getString(0) != null, times.toSeq)
   }
 
   test("watermark lateness: data older than the watermark is dropped (W4)") {
