@@ -3,18 +3,13 @@ package graft.functions
 import org.apache.spark.sql.catalyst.util.ArrayData
 
 object BloomHits {
-  import RkLsh.{A, B, P, blA, blB}
+  import RkLsh.{blA, blB, mix2}
 
   /** JVM twin of the column-level probe arithmetic in
     * `graft.ops.Pipeline.bloomProbe` (two-round avalanche → bit
-    * position). */
-  private def probe(i: Int, x: Long, bits: Long): Int = {
-    val s1 = (A(blA(i)) * (x & (RkLsh.M40 - 1)) + B(blA(i))) % P
-    val s1x = s1 ^ (s1 >>> 20)
-    val s2 = (A(blB(i)) * s1x + B(blB(i))) % P
-    // mix2 output is non-negative, so % == pmod here
-    (((s2 ^ (s2 >>> 20)) % bits).toInt)
-  }
+    * position); mix2 output is non-negative, so % == pmod here. */
+  private def probe(i: Int, x: Long, bits: Long): Int =
+    (mix2(blA(i), blB(i), x) % bits).toInt
 
   /** Count of array elements whose BLOOM_K probe bits are ALL set in a
     * fixed bit array (`bloom_hits`) — the per-document contamination

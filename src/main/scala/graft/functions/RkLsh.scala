@@ -1,6 +1,8 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.{lit, shiftright}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Shared constants for ENGINE-NEUTRAL LSH hashing (MinHash + SimHash).
@@ -23,6 +25,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * Overflow audit (must hold in DuckDB's checked BIGINT as well as the
   * JVM): x < 2^40, a_j < 2^22 ⇒ a_j·x < 2^62; b_j < 2^40 ⇒ sum < 2^63.
   * Band folds: acc < 2^40, acc·1000003 < 2^60, + x(< 2^41) < 2^61. ✓
+  *
+  * Each piece of arithmetic has its forms here and nowhere else: the
+  * JVM form for kernels, the Spark Column form ([[mix2Col]]) and the
+  * DuckDB SQL text ([[mix2Sql]], [[permSql]], [[foldSql]],
+  * [[shinglesSql]], [[wordSql]]) the oracles assemble their queries
+  * from. The two engines still evaluate independently; only the
+  * spelling of each side is shared.
   */
 object RkLsh {
 
@@ -73,17 +82,19 @@ object RkLsh {
   /** two-round chain indices for the CDC anchor hash (dd11). */
   final val CDC_A = 56; final val CDC_B = 57
 
-  /** Two-round engine-neutral avalanche (the dd3 recipe — see
-    * `graft.ops.Dedup.affineMix` for the measurement that motivated two
-    * rounds): affine mod P, fold the top 20 bits down with an
-    * xor-shift, twice. A SINGLE affine of a small or sequential input
-    * barely wraps the modulus, so low bits stay structured — parity of
-    * `(a·x+b) mod P` over sequential x with odd `a` simply ALTERNATES,
-    * which round 3 measured as banded-LSH planes collapsing to two
-    * effective buckets (probe fraction 0.50) and HLL trailing-zero
-    * registers losing all entropy. Overflow audit: x < 2^40 ⇒
-    * s1 < P, s1x < 2^40+2^21, a·s1x < 2^62+2^44 < 2^63 — safe in
-    * DuckDB's checked BIGINT. */
+  /** Two-round engine-neutral avalanche (the dd3 recipe): affine mod
+    * P, fold the top 20 bits down with an xor-shift, twice. A SINGLE
+    * affine of a small or sequential input barely wraps the modulus, so
+    * low bits stay structured — parity of `(a·x+b) mod P` over
+    * sequential x with odd `a` simply ALTERNATES, which round 3
+    * measured as banded-LSH planes collapsing to two effective buckets
+    * (probe fraction 0.50) and HLL trailing-zero registers losing all
+    * entropy. dd3's SimHash showed the same: on sf0.01 the one-round
+    * form produced 1930 Hamming-≤7 "near-dup" pairs where the
+    * avalanched xxhash64 baseline produced 444 (bit correlation, not
+    * real similarity); two rounds restore 408 at equal recall.
+    * Overflow audit: x < 2^40 ⇒ s1 < P, s1x < 2^40+2^21,
+    * a·s1x < 2^62+2^44 < 2^63 — safe in DuckDB's checked BIGINT. */
   def mix2(ia: Int, ib: Int, x: Long): Long = {
     val s1 = (A(ia) * (x & (M40 - 1)) + B(ia)) % P
     val s1x = s1 ^ (s1 >> 20)
@@ -98,6 +109,16 @@ object RkLsh {
     val s2 = s"((${A(ib)} * $s1x + ${B(ib)}) % $P)"
     s"xor($s2, $s2 >> 20)"
   }
+
+  /** Spark Column mirror of [[mix2]] (callers guarantee h in [0, 2^40),
+    * so the mask is left out, as on the SQL side). */
+  def mix2Col(ia: Int, ib: Int, h: Column): Column = {
+    val s1 = (lit(A(ia)) * h + lit(B(ia))) % P
+    val s1x = s1.bitwiseXOR(shiftright(s1, 20))
+    val s2 = (lit(A(ib)) * s1x + lit(B(ib))) % P
+    s2.bitwiseXOR(shiftright(s2, 20))
+  }
+
   final val A: Array[Long] = Array.tabulate(NUM)(i => (mix(2L * i) & 0x3FFFFFL) | 1L)
   final val B: Array[Long] = Array.tabulate(NUM)(i => mix(2L * i + 1) & 0xFFFFFFFFFFL)
 
@@ -107,12 +128,21 @@ object RkLsh {
     * x < 2^40, so no mask is needed on the SQL side). */
   def permSql(j: Int, x: String): String = s"(${A(j)} * $x + ${B(j)}) % $P"
 
+  /** DuckDB form of the RK fold `(a·mul + x) mod 2^40`, seed 0, over
+    * the SQL list `list` (elements < 2^41, see the overflow audit). */
+  def foldSql(list: String, mul: Long): String =
+    s"list_reduce(list_prepend(CAST(0 AS BIGINT), $list), (a, x) -> (a * $mul + x) % $M40)"
+
+  /** DuckDB mirror of [[RkShingleHashes.compute]]'s k-word windows
+    * before the dedup: the [[MUL]] fold of `hs[i+1 .. i+k]` for every
+    * i in [0, max(nw − k, 0)], slices clamped at the list end. */
+  def shinglesSql(hs: String, nw: String, k: Int): String =
+    s"list_transform(range(0, greatest($nw - $k, 0) + 1), i -> ${foldSql(s"$hs[i + 1:i + $k]", MUL)})"
+
   /** DuckDB mirror of the RK word-char fold over a word column `wd`. */
-  val wordSql: String =
-    """list_reduce(list_prepend(CAST(0 AS BIGINT),
-      |  list_transform(range(1, length(wd) + 1),
-      |    j -> CAST(ascii(substr(wd, CAST(j AS INT), 1)) AS BIGINT))),
-      |  (a, x) -> (a * 31 + x) % 1099511627776)""".stripMargin
+  val wordSql: String = foldSql(
+    "list_transform(range(1, length(wd) + 1), j -> CAST(ascii(substr(wd, CAST(j AS INT), 1)) AS BIGINT))",
+    31)
 }
 
 object RkShingleHashes {

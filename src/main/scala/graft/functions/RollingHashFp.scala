@@ -25,24 +25,16 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
   * code points would need code-point iteration on both engines.
   */
 object RollingHashFp {
-
-  private final val M40 = 1099511627776L // 2^40
+  import RkLsh.{M40, MUL}
 
   def compute(words: ArrayData, k: Int): ArrayData = {
     val n = words.numElements()
     val wh = new Array[Long](n)
     var i = 0
-    while (i < n) {
-      val s = words.getUTF8String(i).toString
-      var h = 0L
-      var j = 0
-      while (j < s.length) { h = (h * 31 + s.charAt(j)) % M40; j += 1 }
-      wh(i) = h
-      i += 1
-    }
+    while (i < n) { wh(i) = RkShingleHashes.wordHash(words.getUTF8String(i)); i += 1 }
     var full = 0L
     i = 0
-    while (i < n) { full = (full * 1000003 + wh(i)) % M40; i += 1 }
+    while (i < n) { full = (full * MUL + wh(i)) % M40; i += 1 }
     val m = math.max(n - k, 0) // windows 0..m inclusive
     var minH = Long.MaxValue
     i = 0
@@ -50,7 +42,7 @@ object RollingHashFp {
       var h = 0L
       var j = i
       val e = math.min(i + k, n) // slice clamps at the array end
-      while (j < e) { h = (h * 1000003 + wh(j)) % M40; j += 1 }
+      while (j < e) { h = (h * MUL + wh(j)) % M40; j += 1 }
       if (h < minH) minH = h
       i += 1
     }

@@ -64,20 +64,6 @@ object Schemas {
     StructField("yesterday_price", DoubleType),
     StructField("price_change_percentage", DoubleType)))
 
-  val aggregatedData: StructType = StructType(Seq(
-    StructField("symbol", StringType),
-    StructField("type", StringType),
-    StructField("MA_type", StringType),
-    StructField("start", StringType),
-    StructField("end", StringType),
-    StructField("current_time", StringType),
-    StructField("sma_value", DoubleType),
-    StructField("sum_of_vwap", DoubleType),
-    StructField("count_of_vwap", LongType),
-    StructField("window_data_count", LongType),
-    StructField("real_data_count", LongType),
-    StructField("filled_data_count", LongType)))
-
   /** JSON bytes/string -> typed columns (S2, `ma_agg.py:40`). */
   def parseStockJson(jsonCol: Column): Column = from_json(jsonCol, stockData)
 

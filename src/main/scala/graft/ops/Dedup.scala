@@ -284,21 +284,16 @@ object Dedup {
     * `bnd2(doc_id, sig, band, bkey)` — the SQL twin of [[rkBanded]],
     * shared by the dd2/cc2 and dc2 oracles */
   private[ops] val dd2SigCtes: String = {
-    val wordFold = RkLsh.wordSql.replace("\n", " ")
+    val band = s"sig[CAST(b.b * $ROWS + 1 AS INT):CAST(b.b * $ROWS + $ROWS AS INT)]"
     s"""toks2 AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-       |wh2 AS (SELECT doc_id, list_transform(w, wd -> $wordFold) AS hs,
+       |wh2 AS (SELECT doc_id, list_transform(w, wd -> ${RkLsh.wordSql}) AS hs,
        |          len(w) AS nw FROM toks2),
-       |sh2 AS (SELECT doc_id, unnest(list_transform(range(0, greatest(nw - 3, 0) + 1),
-       |          i -> list_reduce(list_prepend(CAST(0 AS BIGINT), hs[i + 1:i + 3]),
-       |                 (a, x) -> (a * ${RkLsh.MUL} + x) % ${RkLsh.M40}))) AS s FROM wh2),
+       |sh2 AS (SELECT doc_id, unnest(${RkLsh.shinglesSql("hs", "nw", 3)}) AS s FROM wh2),
        |shd2 AS (SELECT DISTINCT doc_id, s FROM sh2),
        |shl2 AS (SELECT doc_id, list(s ORDER BY s) AS ss FROM shd2 GROUP BY doc_id),
        |sigs2 AS (SELECT doc_id,
        |          [$dd2SigEntries] AS sig FROM shl2),
-       |bnd2 AS (SELECT doc_id, sig, b.b AS band,
-       |           list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |               sig[CAST(b.b * $ROWS + 1 AS INT):CAST(b.b * $ROWS + $ROWS AS INT)]),
-       |             (a, x) -> (a * ${RkLsh.MUL} + x) % ${RkLsh.M40}) AS bkey
+       |bnd2 AS (SELECT doc_id, sig, b.b AS band, ${RkLsh.foldSql(band, RkLsh.MUL)} AS bkey
        |         FROM sigs2 CROSS JOIN range(0, $BANDS) b(b))""".stripMargin
   }
 
@@ -331,24 +326,6 @@ object Dedup {
   private val H1a = 32; private val H1b = 34
   private val H2a = 33; private val H2b = 35
 
-  /** Two-round engine-neutral avalanche of a mod-2^40 RK hash: affine
-    * mod P, fold the top 20 bits into the bottom with an xor-shift,
-    * twice. One affine round alone leaves SimHash bits correlated —
-    * RK hashes of short words occupy a narrow structured range, and a
-    * single `(a·x+b) mod P` of a small x barely wraps the modulus, so
-    * low bits stay low-entropy; measured on sf0.01 the 1-round form
-    * produced 1930 Hamming-≤7 "near-dup" pairs where the avalanched
-    * xxhash64 baseline produced 444 (bit correlation, not real
-    * similarity). Two mixed rounds restore 408 at equal recall.
-    * Overflow audit: s1 < P+2^21 < 2^40+2^22, a·s1 < 2^62+2^44 < 2^63 —
-    * safe in DuckDB's checked BIGINT too (mirrored in [[dd3Oracle]]). */
-  private def affineMix(h: Column, ia: Int, ib: Int): Column = {
-    val s1 = (lit(RkLsh.A(ia)) * h + lit(RkLsh.B(ia))) % RkLsh.P
-    val s1x = s1.bitwiseXOR(shiftright(s1, 20))
-    val s2 = (lit(RkLsh.A(ib)) * s1x + lit(RkLsh.B(ib))) % RkLsh.P
-    s2.bitwiseXOR(shiftright(s2, 20))
-  }
-
   /** DD3 — SimHash near-dup pairs: 63-bit simhash from engine-neutral
     * word hashes (bit j of each word's hash votes ±1 weighted by its
     * count), banded into 9 chunks of 7 bits — by pigeonhole, any pair
@@ -358,7 +335,7 @@ object Dedup {
     * low-margin bits per edited word, so the radius is wider than the
     * classic 64-bit/3-bit setup).
     *
-    * The 63-bit fingerprint is assembled from two [[affineMix]] chains
+    * The 63-bit fingerprint is assembled from two [[RkLsh.mix2Col]] chains
     * over the mod-2^40 RK word hash — `(g1 mod 2^31)·2^32 + (g2 mod
     * 2^32)`, the widest packing that stays inside DuckDB's overflow-
     * checked BIGINT — so the whole query is oracle-hash-checked (was
@@ -452,34 +429,25 @@ object Dedup {
     docsDf
       .select(col("doc_id"), explode(words).as("w"))
       .select(col("doc_id"), call_function("rk_word_hash", col("w")).as("h40"))
-      .withColumn("g1", affineMix(col("h40"), H1a, H1b))
-      .withColumn("g2", affineMix(col("h40"), H2a, H2b))
+      .withColumn("g1", RkLsh.mix2Col(H1a, H1b, col("h40")))
+      .withColumn("g2", RkLsh.mix2Col(H2a, H2b, col("h40")))
       .withColumn("h63",
         (col("g1") % 2147483648L) * 4294967296L + (col("g2") % 4294967296L))
       .groupBy(col("doc_id"))
       .agg(call_function("simhash_sketch", col("h63"), lit(1L)).as("simhash"))
   }
 
-  /** DuckDB mirror of [[affineMix]] over SQL fragment `x`. */
-  private def affineMixSql(x: String, ia: Int, ib: Int): String = {
-    val s1 = s"((${RkLsh.A(ia)} * $x + ${RkLsh.B(ia)}) % ${RkLsh.P})"
-    val s1x = s"xor($s1, $s1 >> 20)"
-    val s2 = s"((${RkLsh.A(ib)} * $s1x + ${RkLsh.B(ib)}) % ${RkLsh.P})"
-    s"xor($s2, $s2 >> 20)"
-  }
-
   /** DuckDB CTE chain ending in `sim(doc_id, simhash)` — the oracle
     * mirror of [[dd3SigOf]], shared by dd3's and dd12's oracles. */
-  private val dd3SimCtes: String = {
-    val wordFold = RkLsh.wordSql.replace("\n", " ")
+  private val dd3SimCtes: String =
     s"""toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
        |tok AS (SELECT doc_id, unnest(w) AS wd FROM toks),
        |wcnt AS (SELECT doc_id, wd, CAST(count(*) AS BIGINT) AS cnt
        |         FROM tok GROUP BY doc_id, wd),
-       |wh AS (SELECT doc_id, cnt, $wordFold AS h40 FROM wcnt),
+       |wh AS (SELECT doc_id, cnt, ${RkLsh.wordSql} AS h40 FROM wcnt),
        |g AS (SELECT doc_id, cnt,
-       |        ((${affineMixSql("h40", H1a, H1b)}) % 2147483648) * 4294967296 +
-       |        ((${affineMixSql("h40", H2a, H2b)}) % 4294967296) AS h63
+       |        ((${RkLsh.mix2Sql(H1a, H1b, "h40")}) % 2147483648) * 4294967296 +
+       |        ((${RkLsh.mix2Sql(H2a, H2b, "h40")}) % 4294967296) AS h63
        |      FROM wh),
        |bits AS (SELECT doc_id, b.b AS b,
        |           sum(cnt * (CASE WHEN ((h63 >> CAST(b.b AS INT)) & 1) = 1
@@ -490,7 +458,6 @@ object Dedup {
        |            THEN (CAST(1 AS BIGINT) << CAST(b AS INT)) ELSE 0 END), 0) AS BIGINT)
        |            AS simhash
        |        FROM bits GROUP BY 1)""".stripMargin
-  }
 
   private val dd3Oracle: String = {
     s"""WITH $dd3SimCtes,
@@ -1006,16 +973,6 @@ object Dedup {
     * its avalanched hash ≡ 0 (mod ANCHOR_DIV). */
   private val ANCHOR_DIV = 8L
 
-  /** Column mirror of [[RkLsh.mix2]] over the CDC anchor chain (56/57)
-    * — the standard two-round avalanche; a raw RK word hash's low bits
-    * are too structured to gate boundaries on (see RkLsh scaladoc). */
-  private def cdcMix(h: Column): Column = {
-    val s1 = (lit(RkLsh.A(RkLsh.CDC_A)) * h + lit(RkLsh.B(RkLsh.CDC_A))) % RkLsh.P
-    val s1x = s1.bitwiseXOR(shiftright(s1, 20))
-    val s2 = (lit(RkLsh.A(RkLsh.CDC_B)) * s1x + lit(RkLsh.B(RkLsh.CDC_B))) % RkLsh.P
-    s2.bitwiseXOR(shiftright(s2, 20))
-  }
-
   /** DD11 — CONTENT-DEFINED chunking dedup (the FastCDC/rsync boundary
     * idea at word granularity): a chunk starts at every ANCHOR word —
     * one whose avalanched hash ≡ 0 mod ANCHOR_DIV — so boundaries are a
@@ -1051,7 +1008,8 @@ object Dedup {
       .select(col("doc_id"), (col("pos") + 1).as("pos"),
         call_function("rk_word_hash", col("col")).as("h"))
       .withColumn("anc",
-        when(pmod(cdcMix(col("h")), lit(ANCHOR_DIV)) === 0, 1L).otherwise(0L))
+        when(pmod(RkLsh.mix2Col(RkLsh.CDC_A, RkLsh.CDC_B, col("h")), lit(ANCHOR_DIV)) === 0, 1L)
+          .otherwise(0L))
     val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val chunks = pos.withColumn("cid", sum(col("anc")).over(w))
@@ -1073,10 +1031,9 @@ object Dedup {
   }
 
   private val dd11Oracle: String = {
-    val wordFold = RkLsh.wordSql.replace("\n", " ")
     val mix = RkLsh.mix2Sql(RkLsh.CDC_A, RkLsh.CDC_B, "u.h")
     s"""WITH t11 AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-       |w11 AS (SELECT doc_id, list_transform(w, wd -> $wordFold) AS hs FROM t11),
+       |w11 AS (SELECT doc_id, list_transform(w, wd -> ${RkLsh.wordSql}) AS hs FROM t11),
        |p11 AS (SELECT doc_id, unnest(list_transform(range(1, len(hs) + 1),
        |          i -> {'pos': i, 'h': hs[CAST(i AS INT)]})) AS u FROM w11),
        |e11 AS (SELECT doc_id, u.pos AS pos, u.h AS h,
@@ -1087,8 +1044,7 @@ object Dedup {
        |                         ROWS UNBOUNDED PRECEDING) AS cid
        |        FROM e11),
        |ck11 AS (SELECT doc_id, cid,
-       |          list_reduce(list_prepend(CAST(0 AS BIGINT), list(h ORDER BY pos)),
-       |            (a, x) -> (a * ${RkLsh.MUL} + x) % ${RkLsh.M40}) AS ch
+       |          ${RkLsh.foldSql("list(h ORDER BY pos)", RkLsh.MUL)} AS ch
        |         FROM c11 GROUP BY doc_id, cid),
        |df11 AS (SELECT ch, count(DISTINCT doc_id) AS nd FROM ck11 GROUP BY ch)
        |SELECT k.doc_id, CAST(count(*) AS BIGINT) AS n_chunks,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.RkLsh
 
 /** Operators beyond the reference's surface that a production engine at
   * this seat needs: session windows, as-of (temporal) joins, and
@@ -580,20 +581,6 @@ object Extended {
   private val CM_D = 4
   private val CM_W = 1024
 
-  /** Column mirror of [[graft.functions.RkLsh.mix2]]: the two-round
-    * engine-neutral avalanche (affine mod P + xor-fold, twice) that
-    * every structured-input bucketing hash in this repo uses — a raw
-    * RK word hash is low-entropy in its low bits (see RkLsh scaladoc),
-    * which for count-min would pile the vocabulary into few buckets
-    * and destroy the ε = e/W error bound. */
-  private def cmMix(d: Int, h: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import graft.functions.RkLsh
-    val s1 = (lit(RkLsh.A(RkLsh.cmA(d))) * h + lit(RkLsh.B(RkLsh.cmA(d)))) % RkLsh.P
-    val s1x = s1.bitwiseXOR(shiftright(s1, 20))
-    val s2 = (lit(RkLsh.A(RkLsh.cmB(d))) * s1x + lit(RkLsh.B(RkLsh.cmB(d)))) % RkLsh.P
-    s2.bitwiseXOR(shiftright(s2, 20))
-  }
-
   /** APX3 — count-min heavy-hitter counts (Cormode & Muthukrishnan
     * 2005): a 4×1024 integer sketch of the corpus bigram-frequency
     * vector, probed for the exact top-100 bigrams (ng1's list) —
@@ -629,9 +616,14 @@ object Extended {
       .select(explode(bigrams).as("wd"))
       .groupBy(col("wd")).agg(count(lit(1)).as("cnt"))
       .withColumn("h40", call_function("rk_word_hash", col("wd"))))
+    // two-round avalanche: a raw RK word hash is low-entropy in its low
+    // bits, which would pile the vocabulary into few buckets and break
+    // the ε = e/W error bound
+    def bucket(d: Int) =
+      pmod(RkLsh.mix2Col(RkLsh.cmA(d), RkLsh.cmB(d), col("h40")), lit(CM_W.toLong))
     def buckets(c: DataFrame, keep: org.apache.spark.sql.Column*): DataFrame =
       c.select(keep :+ explode(array((0 until CM_D).map(d =>
-          struct(lit(d).as("d"), pmod(cmMix(d, col("h40")), lit(CM_W.toLong)).as("bkt"))): _*))
+          struct(lit(d).as("d"), bucket(d).as("bkt"))): _*))
         .as("e"): _*)
         .select(keep :+ col("e.d") :+ col("e.bkt"): _*)
     // the sketch: Σ count per (row, bucket) — ≤ 4096 rows by construction
@@ -645,8 +637,6 @@ object Extended {
   }
 
   private val apx3Oracle: String = {
-    import graft.functions.RkLsh
-    val wordFold = RkLsh.wordSql.replace("\n", " ")
     def arms(src: String): String = (0 until CM_D).map { d =>
       s"""SELECT wd, cnt,
          |       $d AS d, (${RkLsh.mix2Sql(RkLsh.cmA(d), RkLsh.cmB(d), "h40")}) % $CM_W AS bkt
@@ -657,7 +647,7 @@ object Extended {
        |                i -> array_to_string(w[i:i+1], ' '))) AS wd
        |        FROM tw3 WHERE len(w) >= 2),
        |wc3 AS (SELECT wd, CAST(count(*) AS BIGINT) AS cnt FROM tk3 GROUP BY wd),
-       |wh3 AS (SELECT wd, cnt, $wordFold AS h40 FROM wc3),
+       |wh3 AS (SELECT wd, cnt, ${RkLsh.wordSql} AS h40 FROM wc3),
        |bk3 AS (${arms("wh3")}),
        |cm3 AS (SELECT d, bkt, CAST(sum(cnt) AS BIGINT) AS bc FROM bk3 GROUP BY d, bkt),
        |tp3 AS (SELECT wd, cnt, h40 FROM wh3 ORDER BY cnt DESC, wd LIMIT 100),

@@ -232,15 +232,16 @@ object MovingAverage {
     * optimizer stats, nothing executes. */
   private[graft] def paneShuffleWidth(e: DataFrame): Int = {
     val spark = e.sparkSession
-    val conf = spark.conf.getOption(PaneWidthConf).map { v =>
-      try v.toInt
-      catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"$PaneWidthConf must be an int, got '$v'")
+    def num[T](key: String, kind: String)(parse: String => T): Option[T] =
+      spark.conf.getOption(key).map { v =>
+        try parse(v)
+        catch {
+          case _: NumberFormatException => throw new IllegalArgumentException(
+            s"$key must be $kind, got '$v'")
+        }
       }
-    }
-    conf.getOrElse {
-      val target = spark.conf.getOption(PaneTargetBytesConf).map(_.toLong)
+    num(PaneWidthConf, "an int")(_.toInt).getOrElse {
+      val target = num(PaneTargetBytesConf, "a long")(_.toLong)
         .getOrElse(DefaultPaneTargetBytes)
       val bytes = e.queryExecution.optimizedPlan.stats.sizeInBytes
       val base = spark.conf.get("spark.sql.shuffle.partitions").toInt

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.RkLsh
 
 /** One decoded-media record: dimensions recovered by the real PNG
   * decode, plus exact-integer image features over the decoded pixels. */
@@ -242,6 +243,23 @@ object Multimodal {
     (w, h, maxval, java.util.Arrays.copyOfRange(bytes, pos, pos + w * h))
   }
 
+  /** `(px_sum, px_mean, row0_hash)` of a `w`×`h` 8-bit image: the
+    * pixel sum, the mean floored at the 1e-6 grid, and the RK char
+    * fold `(h·31 + p) mod 2^40` of the first row — the statistics the
+    * mm5/mm8/mm9 oracles recompute in DuckDB. */
+  private def pxSummary(px: Array[Byte], w: Int, h: Int): (Long, Double, Long) = {
+    var sum = 0L
+    var i = 0
+    while (i < px.length) { sum += (px(i) & 0xFF); i += 1 }
+    var row0 = 0L
+    i = 0
+    while (i < w) { row0 = (row0 * 31 + (px(i) & 0xFF)) % RkLsh.M40; i += 1 }
+    // double division, NOT integer: DuckDB's `/` is double division,
+    // so the floor must see the identical IEEE quotient (Exact.intRatio
+    // has the same shape — Spark Column `/` is Divide-as-double too)
+    (sum, math.floor((sum * 1000000L).toDouble / (w.toLong * h)) / 1e6, row0)
+  }
+
   /** MM5 — REAL image decode: encode each document as a PGM (the
     * synthetic stand-in), then run the real parser per partition and
     * emit exact pixel statistics. Because the pixels are the document's
@@ -255,16 +273,8 @@ object Multimodal {
       .select(col("doc_id"), col("media")).as[(Long, Array[Byte])]
       .mapPartitions(_.map { case (id, payload) =>
         val (w, h, _, px) = decodePgm(encodePgm(payload))
-        var sum = 0L
-        var i = 0
-        while (i < px.length) { sum += (px(i) & 0xFF); i += 1 }
-        var row0 = 0L
-        i = 0
-        while (i < w) { row0 = (row0 * 31 + (px(i) & 0xFF)) % 1099511627776L; i += 1 }
-        // double division, NOT integer: DuckDB's `/` is double division,
-        // so the floor must see the identical IEEE quotient (Exact.intRatio
-        // has the same shape — Spark Column `/` is Divide-as-double too)
-        (id, w, h, sum, math.floor((sum * 1000000L).toDouble / (w.toLong * h)) / 1e6, row0)
+        val (sum, mean, row0) = pxSummary(px, w, h)
+        (id, w, h, sum, mean, row0)
       })
       .toDF("doc_id", "width", "height", "px_sum", "px_mean", "row0_hash")
   }
@@ -279,8 +289,7 @@ object Multimodal {
        |SELECT doc_id, $PGM_W AS width, CAST(h AS INT) AS height,
        |       CAST(list_sum(p) AS BIGINT) AS px_sum,
        |       floor(list_sum(p) * 1000000 / ($PGM_W * h)) / 1000000 AS px_mean,
-       |       list_reduce(list_prepend(CAST(0 AS BIGINT), p[1:$PGM_W]),
-       |         (a, x) -> (a * 31 + x) % 1099511627776) AS row0_hash
+       |       ${RkLsh.foldSql(s"p[1:$PGM_W]", 31)} AS row0_hash
        |FROM px""".stripMargin
 
   private val WAV_RATE = 8000
@@ -565,14 +574,8 @@ object Multimodal {
       .mapPartitions(_.map { case (id, payload) =>
         val (w, h, _, px) = decodePgm(encodePgm(payload))
         val (ow, oh, out) = boxDownsample2(w, h, px)
-        var sum = 0L
-        var i = 0
-        while (i < out.length) { sum += (out(i) & 0xFF); i += 1 }
-        var row0 = 0L
-        i = 0
-        while (i < ow) { row0 = (row0 * 31 + (out(i) & 0xFF)) % 1099511627776L; i += 1 }
-        (id, w, h, ow, oh, sum,
-          math.floor((sum * 1000000L).toDouble / (ow.toLong * oh)) / 1e6, row0)
+        val (sum, mean, row0) = pxSummary(out, ow, oh)
+        (id, w, h, ow, oh, sum, mean, row0)
       })
       .toDF("doc_id", "in_w", "in_h", "out_w", "out_h",
         "px_sum", "px_mean", "row0_hash")
@@ -596,8 +599,7 @@ object Multimodal {
        |       ${PGM_W / 2} AS out_w, CAST(oh AS INT) AS out_h,
        |       CAST(list_sum(q) AS BIGINT) AS px_sum,
        |       floor(list_sum(q) * 1000000 / (${PGM_W / 2} * oh)) / 1000000 AS px_mean,
-       |       list_reduce(list_prepend(CAST(0 AS BIGINT), q[1:${PGM_W / 2}]),
-       |         (a, x) -> (a * 31 + x) % 1099511627776) AS row0_hash
+       |       ${RkLsh.foldSql(s"q[1:${PGM_W / 2}]", 31)} AS row0_hash
        |FROM rs""".stripMargin
 
   /** Grayscale PNG encoder via the JDK's built-in ImageIO codec (zlib
@@ -677,14 +679,8 @@ object Multimodal {
       .select(col("doc_id"), col("media")).as[(Long, Array[Byte])]
       .mapPartitions(_.map { case (id, payload) =>
         val (w, h, px) = decodeImage(encodePng(payload))
-        var sum = 0L
-        var i = 0
-        while (i < px.length) { sum += (px(i) & 0xFF); i += 1 }
-        var row0 = 0L
-        i = 0
-        while (i < w) { row0 = (row0 * 31 + (px(i) & 0xFF)) % 1099511627776L; i += 1 }
-        (id, w, h, sum,
-          math.floor((sum * 1000000L).toDouble / (w.toLong * h)) / 1e6, row0)
+        val (sum, mean, row0) = pxSummary(px, w, h)
+        (id, w, h, sum, mean, row0)
       })
       .toDF("doc_id", "width", "height", "px_sum", "px_mean", "row0_hash")
   }

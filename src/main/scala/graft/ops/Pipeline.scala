@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.RkLsh
 
 /** Corpus-curation operators a large-scale training-data pipeline runs
   * between ingest and tokenization: deterministic sampling / split
@@ -47,18 +48,14 @@ object Pipeline {
           .when(col("bucket") === 1, "test")
           .otherwise("train").as("split"))
 
-  private val rkWordSql =
-    """list_reduce(list_prepend(CAST(0 AS BIGINT),
-      |  list_transform(range(1, length(wd) + 1),
-      |    j -> CAST(ascii(substr(wd, CAST(j AS INT), 1)) AS BIGINT))),
-      |  (a, x) -> (a * 31 + x) % 1099511627776)""".stripMargin
+  /** the engine-neutral whole-document content hash over word hashes `hs` */
+  private val fullHashSql = RkLsh.foldSql("hs", RkLsh.MUL)
 
   private val smp1Oracle =
     s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-       |wh AS (SELECT doc_id, list_transform(w, wd -> $rkWordSql) AS hs FROM t),
+       |wh AS (SELECT doc_id, list_transform(w, wd -> ${RkLsh.wordSql}) AS hs FROM t),
        |fh AS (SELECT doc_id,
-       |         list_reduce(list_prepend(CAST(0 AS BIGINT), hs),
-       |           (a, x) -> (a * 1000003 + x) % 1099511627776) % 100 AS bucket
+       |         $fullHashSql % 100 AS bucket
        |       FROM wh)
        |SELECT doc_id, bucket,
        |       CASE WHEN bucket = 0 THEN 'valid'
@@ -96,10 +93,9 @@ object Pipeline {
 
   private val smp2Oracle =
     s"""WITH t AS (SELECT doc_id, lang, string_split(text, ' ') AS w FROM documents),
-       |wh AS (SELECT doc_id, lang, list_transform(w, wd -> $rkWordSql) AS hs FROM t),
+       |wh AS (SELECT doc_id, lang, list_transform(w, wd -> ${RkLsh.wordSql}) AS hs FROM t),
        |fh AS (SELECT doc_id, lang,
-       |         list_reduce(list_prepend(CAST(0 AS BIGINT), hs),
-       |           (a, x) -> (a * 1000003 + x) % 1099511627776) AS h
+       |         $fullHashSql AS h
        |       FROM wh),
        |r AS (SELECT doc_id, lang,
        |         row_number() OVER (PARTITION BY lang ORDER BY h, doc_id) AS pos_in_stratum
@@ -196,13 +192,8 @@ object Pipeline {
     * reduced to a bit position — the same two-round avalanche every
     * structured-input bucketing hash in the repo uses (see apx3's
     * scaladoc for why one affine round is not enough). */
-  private def bloomProbe(i: Int, h: Column): Column = {
-    import graft.functions.RkLsh
-    val s1 = (lit(RkLsh.A(RkLsh.blA(i))) * h + lit(RkLsh.B(RkLsh.blA(i)))) % RkLsh.P
-    val s1x = s1.bitwiseXOR(shiftright(s1, 20))
-    val s2 = (lit(RkLsh.A(RkLsh.blB(i))) * s1x + lit(RkLsh.B(RkLsh.blB(i)))) % RkLsh.P
-    pmod(s2.bitwiseXOR(shiftright(s2, 20)), lit(BLOOM_BITS))
-  }
+  private def bloomProbe(i: Int, h: Column): Column =
+    pmod(RkLsh.mix2Col(RkLsh.blA(i), RkLsh.blB(i), h), lit(BLOOM_BITS))
 
   /** DC4 — BLOOM-FILTER decontamination: dc1's contamination test with
     * the benchmark side compressed into a fixed 16 KB bit array instead
@@ -251,19 +242,15 @@ object Pipeline {
   }
 
   private val dc4Oracle: String = {
-    import graft.functions.RkLsh
-    val wordFold = RkLsh.wordSql.replace("\n", " ")
     def arms(src: String, cols: String): String = (0 until BLOOM_K).map { i =>
       s"""SELECT $cols,
          |  (${RkLsh.mix2Sql(RkLsh.blA(i), RkLsh.blB(i), "s")}) % $BLOOM_BITS AS p
          |FROM $src""".stripMargin
     }.mkString("\nUNION ALL\n")
     s"""WITH tk4 AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-       |wh4 AS (SELECT doc_id, list_transform(w, wd -> $wordFold) AS hs,
+       |wh4 AS (SELECT doc_id, list_transform(w, wd -> ${RkLsh.wordSql}) AS hs,
        |          len(w) AS nw FROM tk4),
-       |sh4 AS (SELECT doc_id, unnest(list_transform(range(0, greatest(nw - 3, 0) + 1),
-       |          i -> list_reduce(list_prepend(CAST(0 AS BIGINT), hs[i + 1:i + 3]),
-       |                 (a, x) -> (a * ${RkLsh.MUL} + x) % ${RkLsh.M40}))) AS s FROM wh4),
+       |sh4 AS (SELECT doc_id, unnest(${RkLsh.shinglesSql("hs", "nw", 3)}) AS s FROM wh4),
        |sd4 AS (SELECT DISTINCT doc_id, s FROM sh4),
        |bb4 AS (SELECT DISTINCT p FROM (
        |${arms(s"(SELECT s FROM sd4 WHERE doc_id < $BENCH_DOCS)", "1 AS one")})),
@@ -429,10 +416,9 @@ object Pipeline {
 
   private val shf1Oracle =
     s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-       |wh AS (SELECT doc_id, list_transform(w, wd -> $rkWordSql) AS hs FROM t),
+       |wh AS (SELECT doc_id, list_transform(w, wd -> ${RkLsh.wordSql}) AS hs FROM t),
        |fh AS (SELECT doc_id,
-       |         list_reduce(list_prepend(CAST(0 AS BIGINT), hs),
-       |           (a, x) -> (a * 1000003 + x) % 1099511627776) AS h
+       |         $fullHashSql AS h
        |       FROM wh)
        |SELECT doc_id, h,
        |       row_number() OVER (ORDER BY h, doc_id) AS shuf_pos
@@ -481,10 +467,9 @@ object Pipeline {
   private val mix1Oracle =
     s"""WITH t AS (SELECT doc_id, source, string_split(text, ' ') AS w FROM documents),
        |wh AS (SELECT doc_id, source, CAST(len(w) AS BIGINT) AS n_tokens,
-       |         list_transform(w, wd -> $rkWordSql) AS hs FROM t),
+       |         list_transform(w, wd -> ${RkLsh.wordSql}) AS hs FROM t),
        |fh AS (SELECT doc_id, source, n_tokens,
-       |         list_reduce(list_prepend(CAST(0 AS BIGINT), hs),
-       |           (a, x) -> (a * 1000003 + x) % 1099511627776) AS h FROM wh),
+       |         $fullHashSql AS h FROM wh),
        |bs AS (SELECT source, CAST(sum(n_tokens) AS BIGINT) AS tok_s,
        |         CAST(substr(source, 4) AS BIGINT) % 4 + 1 AS wnum
        |       FROM fh GROUP BY source),
@@ -721,10 +706,9 @@ object Pipeline {
        |      WHERE n_tokens >= $CUR_MIN_TOKENS AND s_en >= 1
        |        AND s_en >= greatest(s_es, s_de, s_fr)),
        |wh AS (SELECT doc_id, source, n_tokens,
-       |         list_transform(w, wd -> $rkWordSql) AS hs FROM g),
+       |         list_transform(w, wd -> ${RkLsh.wordSql}) AS hs FROM g),
        |fh AS (SELECT doc_id, source, n_tokens,
-       |         list_reduce(list_prepend(CAST(0 AS BIGINT), hs),
-       |           (a, x) -> (a * 1000003 + x) % 1099511627776) AS h
+       |         $fullHashSql AS h
        |       FROM wh),
        |dd AS (SELECT *, row_number() OVER (PARTITION BY h ORDER BY doc_id) AS rn FROM fh),
        |toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
@@ -839,16 +823,12 @@ object Pipeline {
       .withColumn("keep", col("avg_w_e6") >= 1000000L)
   }
 
-  private val dsir1Oracle: String = {
-    val wordFold = graft.functions.RkLsh.wordSql.replace("\n", " ")
-    val mul = graft.functions.RkLsh.MUL
-    val m40 = graft.functions.RkLsh.M40
+  private val dsir1Oracle: String =
     s"""WITH toksd AS (SELECT doc_id, source, string_split(text, ' ') AS w FROM documents),
-       |whd AS (SELECT doc_id, source, list_transform(w, wd -> $wordFold) AS hs,
+       |whd AS (SELECT doc_id, source, list_transform(w, wd -> ${RkLsh.wordSql}) AS hs,
        |          len(w) AS nw FROM toksd),
-       |shd0 AS (SELECT doc_id, source, unnest(list_transform(range(0, greatest(nw - 2, 0) + 1),
-       |           i -> list_reduce(list_prepend(CAST(0 AS BIGINT), hs[i + 1:i + 2]),
-       |                  (a, x) -> (a * $mul + x) % $m40))) AS s FROM whd),
+       |shd0 AS (SELECT doc_id, source, unnest(${RkLsh.shinglesSql("hs", "nw", 2)}) AS s
+       |         FROM whd),
        |shdd AS (SELECT DISTINCT doc_id, source, s FROM shd0),
        |f AS (SELECT doc_id, source, s % $DSIR_B AS b,
        |        source = '$DSIR_TARGET' AS tgt FROM shdd),
@@ -865,7 +845,6 @@ object Pipeline {
        |        CAST(sum(w_e6) AS BIGINT) // count(*) AS avg_w_e6
        |      FROM f JOIN wt USING (b) WHERE NOT tgt
        |      GROUP BY f.doc_id, f.source)""".stripMargin
-  }
 
   val queries: Seq[Q] = Seq(
     Q("smp1_hash_sample", smp1HashSample, Some(smp1Oracle)),

@@ -1335,14 +1335,11 @@ object Similarity {
     * sim6 IVF-PQ replay. */
   private def irRrfOracleFor(denseSql: String): String = {
     import graft.functions.RkLsh
-    val wordFold = RkLsh.wordSql.replace("\n", " ")
     s"""WITH tkr AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-       |whr AS (SELECT doc_id, list_transform(w, wd -> $wordFold) AS hs,
+       |whr AS (SELECT doc_id, list_transform(w, wd -> ${RkLsh.wordSql}) AS hs,
        |          len(w) AS nw FROM tkr),
        |shr AS (SELECT DISTINCT doc_id, s FROM (
-       |  SELECT doc_id, unnest(list_transform(range(0, greatest(nw - 3, 0) + 1),
-       |    i -> list_reduce(list_prepend(CAST(0 AS BIGINT), hs[i + 1:i + 3]),
-       |           (a, x) -> (a * ${RkLsh.MUL} + x) % ${RkLsh.M40}))) AS s FROM whr)),
+       |  SELECT doc_id, unnest(${RkLsh.shinglesSql("hs", "nw", 3)}) AS s FROM whr)),
        |lex AS (SELECT qid, id, rl FROM (
        |  SELECT q.doc_id AS qid, c.doc_id AS id,
        |         row_number() OVER (PARTITION BY q.doc_id

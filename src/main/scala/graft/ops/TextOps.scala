@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.RkLsh
 
 /** Text-analysis operators for a large-scale training-data pipeline,
   * over the `documents` table: language ID (stopword-marker heuristic),
@@ -157,22 +158,15 @@ object TextOps {
   }
 
   private val ta5Oracle =
-    """WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-      |wh AS (SELECT doc_id,
-      |         list_transform(w, wd ->
-      |           list_reduce(list_prepend(CAST(0 AS BIGINT),
-      |             list_transform(range(1, length(wd) + 1),
-      |               j -> CAST(ascii(substr(wd, CAST(j AS INT), 1)) AS BIGINT))),
-      |             (a, x) -> (a * 31 + x) % 1099511627776)) AS hs,
-      |         len(w) AS nw
-      |       FROM t)
-      |SELECT doc_id,
-      |       list_min(list_transform(range(0, greatest(nw - 4, 0) + 1),
-      |         i -> list_reduce(list_prepend(CAST(0 AS BIGINT), hs[i + 1:i + 4]),
-      |                (a, x) -> (a * 1000003 + x) % 1099511627776))) AS min_hash,
-      |       list_reduce(list_prepend(CAST(0 AS BIGINT), hs),
-      |         (a, x) -> (a * 1000003 + x) % 1099511627776) AS full_hash
-      |FROM wh""".stripMargin
+    s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+       |wh AS (SELECT doc_id,
+       |         list_transform(w, wd -> ${RkLsh.wordSql}) AS hs,
+       |         len(w) AS nw
+       |       FROM t)
+       |SELECT doc_id,
+       |       list_min(${RkLsh.shinglesSql("hs", "nw", 4)}) AS min_hash,
+       |       ${RkLsh.foldSql("hs", RkLsh.MUL)} AS full_hash
+       |FROM wh""".stripMargin
 
   /** word-2-gram occurrence array over a MATERIALIZED words column `w`
     * (NOT deduplicated — frequency counting wants every occurrence,
@@ -463,21 +457,23 @@ object TextOps {
         call_function("id_fold", col("ids")).as("ids_fold"))
   }
 
+  /** the tok* id-sequence fold, the DuckDB form of `id_fold` */
+  private val idsFoldSql = RkLsh.foldSql("ids", RkLsh.MUL)
+
   private val tok1Oracle =
-    """WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-      |uni AS (SELECT unnest(w) AS wd FROM t),
-      |vocab AS (SELECT wd, CAST(row_number() OVER (ORDER BY count(*) DESC, wd) AS BIGINT) AS id
-      |          FROM uni GROUP BY wd),
-      |tok0 AS (SELECT doc_id, unnest(list_transform(range(1, len(w) + 1),
-      |           i -> {'pos': i, 'wd': w[CAST(i AS INT)]})) AS u FROM t),
-      |tok AS (SELECT doc_id, u.pos AS pos, v.id AS id
-      |        FROM tok0 JOIN vocab v ON u.wd = v.wd),
-      |enc AS (SELECT doc_id, list(id ORDER BY pos) AS ids FROM tok GROUP BY doc_id)
-      |SELECT doc_id, CAST(len(ids) AS BIGINT) AS n_tokens,
-      |       array_to_string(ids[1:16], ',') AS ids_head,
-      |       list_reduce(list_prepend(CAST(0 AS BIGINT), ids),
-      |         (a, x) -> (a * 1000003 + x) % 1099511627776) AS ids_fold
-      |FROM enc""".stripMargin
+    s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+       |uni AS (SELECT unnest(w) AS wd FROM t),
+       |vocab AS (SELECT wd, CAST(row_number() OVER (ORDER BY count(*) DESC, wd) AS BIGINT) AS id
+       |          FROM uni GROUP BY wd),
+       |tok0 AS (SELECT doc_id, unnest(list_transform(range(1, len(w) + 1),
+       |           i -> {'pos': i, 'wd': w[CAST(i AS INT)]})) AS u FROM t),
+       |tok AS (SELECT doc_id, u.pos AS pos, v.id AS id
+       |        FROM tok0 JOIN vocab v ON u.wd = v.wd),
+       |enc AS (SELECT doc_id, list(id ORDER BY pos) AS ids FROM tok GROUP BY doc_id)
+       |SELECT doc_id, CAST(len(ids) AS BIGINT) AS n_tokens,
+       |       array_to_string(ids[1:16], ',') AS ids_head,
+       |       $idsFoldSql AS ids_fold
+       |FROM enc""".stripMargin
 
   /** tok2's vocabulary cap. The production contract is 32k-256k
     * entries; the default stays 16 so the driver-SF corpus is mostly
@@ -559,8 +555,7 @@ object TextOps {
        |SELECT doc_id, CAST(len(ids) AS BIGINT) AS n_tokens,
        |       CAST(len(list_filter(ids, x -> x = 0)) AS BIGINT) AS n_oov,
        |       array_to_string(ids[1:16], ',') AS ids_head,
-       |       list_reduce(list_prepend(CAST(0 AS BIGINT), ids),
-       |         (a, x) -> (a * 1000003 + x) % 1099511627776) AS ids_fold
+       |       $idsFoldSql AS ids_fold
        |FROM enc""".stripMargin
 
   /** tok3/tok4's merge-step count. Production BPE vocabularies run
@@ -867,8 +862,7 @@ object TextOps {
        |enc AS (SELECT doc_id, list(n_sub ORDER BY pos) AS ns FROM tk GROUP BY doc_id)
        |SELECT doc_id, CAST(len(ns) AS BIGINT) AS n_words,
        |       CAST(list_sum(ns) AS BIGINT) AS n_bpe_tokens,
-       |       list_reduce(list_prepend(CAST(0 AS BIGINT), ns),
-       |         (a, x) -> (a * 1000003 + x) % 1099511627776) AS sub_fold
+       |       ${RkLsh.foldSql("ns", RkLsh.MUL)} AS sub_fold
        |FROM enc""".stripMargin
 
   private val IR_TERMS = Seq("join", "hash", "vector", "spark")

@@ -138,17 +138,6 @@ object SemanticDedupStream {
     best
   }
 
-  /** floorE6(dot(a,b)/(na·nb)) — batch dd7's pair score
-    * ([[graft.ops.Exact]]): left-to-right dot, one divide, floor at the
-    * 1e-6 grid. Symmetric (per-index products commute). */
-  private[streaming] def cosE6(a: Seq[Double], na: Double,
-      b: Seq[Double], nb: Double): Double = {
-    var acc = 0.0
-    var i = 0
-    while (i < a.length) { acc += a(i) * b(i); i += 1 }
-    math.floor(acc / (na * nb) * 1000000L) / 1e6
-  }
-
   /** (vec_id, v: array<double>) stream → one [[SemVerdict]] per vector,
     * exactly once, append mode, checkpoint-recoverable. `centroids` is
     * the offline model from [[Similarity.flatCentroids]]. */

@@ -3,11 +3,14 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.functions.RkLsh
 import graft.plans.RewriteDotProduct
 
 /** The vector and array kernels against the built-in forms they
   * replaced, on seeded generated rows: lengths 0..6, null arrays, null
-  * elements, ragged pairs and repeated strings. Each side runs on both
+  * elements, ragged pairs and repeated strings. The Column form of the
+  * engine-neutral hash ([[RkLsh.mix2Col]]) is checked the same way
+  * against its scalar JVM form. Each side runs on both
   * evaluation paths ([[CodegenPaths.onBothPaths]]) and the two must
   * agree row by row, bit for bit.
   *
@@ -128,6 +131,31 @@ class KernelDifferentialSpec extends AnyFunSuite {
       when(col("v").isNotNull,
         when(exists(dots, _.isNull), transform(dots, _ => lit(null).cast("double")))
           .otherwise(dots)))
+  }
+
+  /** seeded values across [0, 2^40), with both ends */
+  private val hashInputs: DataFrame = {
+    val m40 = RkLsh.M40
+    def x: Long = if (chance(4)) rnd.nextInt(1 << 20).toLong else (rnd.nextLong() >>> 1) % m40
+    val xs = Seq(0L, 1L, m40 - 1) ++ Seq.fill(Rows - 3)(x)
+    xs.zipWithIndex.map { case (x, id) => (id, x) }.toDF("id", "x")
+  }
+
+  test("RkLsh.mix2Col agrees with the scalar RkLsh.mix2 on every chain pair the callers use") {
+    val chains = (0 until 4).flatMap(i =>
+        Seq(RkLsh.blA(i) -> RkLsh.blB(i), RkLsh.cmA(i) -> RkLsh.cmB(i))) ++
+      Seq(RkLsh.CDC_A -> RkLsh.CDC_B, 32 -> 34, 33 -> 35) // the last two: dd3's H1/H2
+    val got = CodegenPaths.onBothPaths {
+      val mixed = chains.map { case (a, b) => RkLsh.mix2Col(a, b, col("x")) }
+      hashInputs.select(col("x") +: mixed: _*).collect().toSeq
+    }
+    assert(got.length == Rows)
+    got.foreach { r =>
+      val x = r.getLong(0)
+      chains.zipWithIndex.foreach { case ((a, b), j) =>
+        assert(r.getLong(j + 1) == RkLsh.mix2(a, b, x), s"chain $a/$b at x = $x")
+      }
+    }
   }
 
   test("matrix_dots plans from value-equal constant matrices have the same result") {

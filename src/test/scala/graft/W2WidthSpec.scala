@@ -42,11 +42,14 @@ class W2WidthSpec extends AnyFunSuite {
     withConfs(Seq(MovingAverage.PaneWidthConf -> "7")) {
       assert(MovingAverage.paneShuffleWidth(events) == 7)
     }
-    withConfs(Seq(MovingAverage.PaneWidthConf -> "wide")) {
-      val e = intercept[IllegalArgumentException] {
-        MovingAverage.paneShuffleWidth(events)
+    // a malformed value names its key
+    for (key <- Seq(MovingAverage.PaneWidthConf, MovingAverage.PaneTargetBytesConf)) {
+      withConfs(Seq(key -> "wide")) {
+        val e = intercept[IllegalArgumentException] {
+          MovingAverage.paneShuffleWidth(events)
+        }
+        assert(e.getMessage.contains(key), e.getMessage)
       }
-      assert(e.getMessage.contains(MovingAverage.PaneWidthConf), e.getMessage)
     }
   }
 
