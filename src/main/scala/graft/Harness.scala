@@ -13,9 +13,14 @@ object Harness {
   /** Cores of the local master: `SPARK_GRAFT_CPUS`, else every core the
     * JVM sees. Artifacts record it: cross-artifact reads are only valid
     * at matched parallelism (SCALE.md, "core count is part of the
-    * artifact's identity"). */
-  val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-    .getOrElse(Runtime.getRuntime.availableProcessors)
+    * artifact's identity"). Lazy, so a bad value throws where it is
+    * read, not in this object's initializer. */
+  lazy val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(
+    Runtime.getRuntime.availableProcessors)(parseCpus)
+
+  private[graft] def parseCpus(v: String): Int = v.toIntOption.filter(_ >= 1)
+    .getOrElse(throw new IllegalArgumentException(
+      s"SPARK_GRAFT_CPUS must be an int >= 1, got '$v'"))
 
   /** The session every entry point runs with: `local[cpus]`, one shuffle
     * partition per core, UTC, no UI, the RocksDB state store with

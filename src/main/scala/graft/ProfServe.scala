@@ -61,7 +61,8 @@ object ProfServe {
     // hands the ranking after collecting the micro-batch — under the
     // serve-session confs it sets on the streaming clone
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    spark.conf.set("spark.sql.shuffle.partitions",
+      graft.streaming.AnnServeStream.ShufflePartitions.default.toLong)
     val qRows = Tables.embeddings(spark, sfDir).filter(col("vec_id") < 125)
       .select(col("vec_id").as("qid"),
         col("embedding").cast("array<double>").as("v")).collect().toSeq

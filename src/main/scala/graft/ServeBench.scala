@@ -169,7 +169,7 @@ object ServeBench {
           println(f"[servebench] recall@$k = $r%.4f over ${per.size} queries")
           k -> r
         }
-        val probes = spark.conf.getOption(Similarity.ProbesConf).getOrElse("4")
+        val probes = Similarity.Probes(spark)
         recallExtra = recalls.map { case (k, r) =>
           s""""recall_at_$k":${f"$r%.4f"}""" }.mkString(",") +
           s""","nq":$nQ,"probes":$probes"""

@@ -89,13 +89,10 @@ object Tables {
     * an id predicate on the scan (pushed down), so capped runs still
     * exercise sf1's multi-file layout and wide-id space. NEVER set in
     * production paths — Verify wires it from SPARK_GRAFT_ID_CAP only. */
-  val IdCapConf = "graft.tables.idCap"
+  val IdCap = Setting.long("graft.tables.idCap", None, min = 1)
 
   private def capped(spark: SparkSession, df: DataFrame, idCol: String): DataFrame =
-    spark.conf.getOption(IdCapConf).map(_.toLong) match {
-      case Some(cap) => df.filter(col(idCol) < cap)
-      case None => df
-    }
+    IdCap.get(spark).fold(df)(cap => df.filter(col(idCol) < cap))
 
   def documents(spark: SparkSession, dir: String): DataFrame =
     capped(spark, table(spark, dir, "documents"), "doc_id")

@@ -11,12 +11,12 @@ object Verify {
     val spark = Harness.session()
     // scale-frontier mode for the declared-quadratic oracle twins: cap
     // documents/embeddings ids so the DuckDB side terminates at sf1
-    // (pair with oracle_check.py --id-cap N; see Tables.IdCapConf)
+    // (pair with oracle_check.py --id-cap N; see Tables.IdCap)
     sys.env.get("SPARK_GRAFT_ID_CAP").foreach { c =>
       // loud, so a capped dump can never be mistaken for a full one
       System.err.println(s"[verify] ID CAP ACTIVE: documents/embeddings truncated to ids < $c " +
         "(scale-frontier mode for the quadratic oracle twins; pair with oracle_check --id-cap)")
-      spark.conf.set(Tables.IdCapConf, c)
+      spark.conf.set(Tables.IdCap.key, c)
     }
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(q => only.isEmpty || only(q._1)).foreach { case (name, fn) =>

@@ -490,7 +490,8 @@ object Dedup {
     * budget where the hash join finishes in 126.8 s warm (SCALE.md
     * round-13 decade arc). Under the floor the planner keeps its
     * choice (broadcast at oracle SFs — the exploded index is tiny). */
-  val D12HashJoinMinBytesConf = "graft.simhash.hashJoinMinBytes"
+  val D12HashJoinMinBytes =
+    graft.Setting.long("graft.simhash.hashJoinMinBytes", Some(256L << 20))
   /** Scan bytes per join task for the stats-derived join width (the w2
     * pane-width discipline): a ShuffledHashJoin build map cannot spill,
     * so its per-partition row count must track the data, not a stale
@@ -501,22 +502,15 @@ object Dedup {
     * pre-index scan bytes per task ≈ ~2M index rows ≈ ~100 MB build
     * map. Floor at the session conf, clamp 4096;
     * `graft.simhash.joinWidth` overrides. */
-  val D12JoinTargetBytesConf = "graft.simhash.joinTargetBytes"
-  val D12JoinWidthConf = "graft.simhash.joinWidth"
+  val D12JoinTargetBytes =
+    graft.Setting.long("graft.simhash.joinTargetBytes", Some(16L << 20), min = 1)
+  val D12JoinWidth = graft.Setting.int("graft.simhash.joinWidth", None, min = 1)
 
   /** Stats-derived width for dd12's candidate join (only used past the
     * SHUFFLE_HASH floor). Exposed for the spec to pin the arithmetic. */
-  private[graft] def d12JoinWidth(spark: SparkSession, scanBytes: BigInt): Int = {
-    def parsed(conf: String): Option[Long] =
-      spark.conf.getOption(conf).map { v =>
-        try v.toLong
-        catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"$conf must be numeric, got '$v'")
-        }
-      }
-    parsed(D12JoinWidthConf).map(_.toInt).getOrElse {
-      val target = parsed(D12JoinTargetBytesConf).getOrElse(16L << 20)
+  private[graft] def d12JoinWidth(spark: SparkSession, scanBytes: BigInt): Int =
+    D12JoinWidth.get(spark).getOrElse {
+      val target = D12JoinTargetBytes(spark)
       val session = spark.conf.get("spark.sql.shuffle.partitions").toInt
       // clamp in BigInt space — a huge scan must saturate to 4096, not
       // overflow toInt
@@ -524,7 +518,6 @@ object Dedup {
         .min(BigInt(4096)).toInt
       math.min(4096, math.max(session, derived))
     }
-  }
 
   /** DD12 — SimHash near-dup pairs AT SCALE (radius 3). dd3's 9×7-bit
     * chunk index has 1152 distinct buckets TOTAL, so past ~1e5 docs the
@@ -563,14 +556,7 @@ object Dedup {
         .select((col("t").cast("long") * (1L << 34) + col("bkey")).as("bk")))
     // stats-driven join-strategy dispatch (the AsofJoin discipline):
     // past the floor, hint the sort-free hash join — see the conf doc
-    val minBytes = spark.conf.getOption(D12HashJoinMinBytesConf)
-      .map { v =>
-        try v.toLong
-        catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"$D12HashJoinMinBytesConf must be numeric bytes, got '$v'")
-        }
-      }.getOrElse(256L << 20)
+    val minBytes = D12HashJoinMinBytes(spark)
     val scanBytes =
       docs(spark, dir).queryExecution.optimizedPlan.stats.sizeInBytes
     val hinted =

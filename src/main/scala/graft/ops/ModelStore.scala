@@ -30,8 +30,8 @@ import graft.Tables
   * so the fine model exports as parquet rather than refusing.
   *
   * A model is only valid for the exact training conditions, so
-  * `ivf_meta` records the sizing confs ([[Similarity.TargetCellConf]],
-  * [[Similarity.MaxKConf]], [[Similarity.FlatMaxKConf]]) and a corpus
+  * `ivf_meta` records the sizing confs ([[Similarity.TargetCell]],
+  * [[Similarity.MaxK]], [[Similarity.FlatMaxK]]) and a corpus
   * fingerprint (the embedding
   * count) at SAVE time, and [[loadIvfPq]] fails loudly when the
   * serving session's confs or corpus differ — a model trained under
@@ -64,9 +64,6 @@ object ModelStore {
       .select(col("wd"), col("n_sub"))
     TextOps.installBpeModel(corpusDir, merges, subs)
   }
-
-  private def confOr(spark: SparkSession, key: String): String =
-    spark.conf.getOption(key).getOrElse("")
 
   /** Train (or reuse) the IVF quantizer (either regime) + unit-grid PQ
     * codebooks for `corpusDir` under the current confs and persist
@@ -105,9 +102,8 @@ object ModelStore {
     // serve a model against a corpus it was never trained on (and it
     // is a projection of two columns, a fraction of any serve sweep).
     val fp = corpusFingerprint(spark, corpusDir)
-    Seq((confOr(spark, Similarity.TargetCellConf),
-        confOr(spark, Similarity.MaxKConf),
-        confOr(spark, Similarity.FlatMaxKConf),
+    Seq((Similarity.TargetCell.raw(spark), Similarity.MaxK.raw(spark),
+        Similarity.FlatMaxK.raw(spark),
         fp.n, regime, k1, k2, fp.minId, fp.maxId, fp.sampleHash))
       .toDF("target_cell", "max_k", "flat_max_k", "n_vecs", "regime",
         "k1", "k2", "min_id", "max_id", "sample_hash")
@@ -144,8 +140,7 @@ object ModelStore {
     * while the append is a small fraction of N (the quantizer's cell
     * geometry is a property of the distribution, not the rows), but an
     * index serving 2× its training corpus is a different index. */
-  val MaxStaleGrowthConf = "graft.ivf.maxStaleGrowth"
-  private val DefaultMaxStaleGrowth = 0.25
+  val MaxStaleGrowth = graft.Setting.double("graft.ivf.maxStaleGrowth", Some(0.25))
 
   /** Load stored IVF/PQ models and register them for `corpusDir` under
     * the current confs. Fails loudly when the serving session's sizing
@@ -192,7 +187,7 @@ object ModelStore {
     *    — "grown" means appended-to, never edited-in-place; a mutated
     *    prefix still refuses.
     *  - STALENESS BOUND: the append fraction must stay under
-    *    [[MaxStaleGrowthConf]] (default 25%) — past it the stored
+    *    [[MaxStaleGrowth]] (default 25%) — past it the stored
     *    centroids describe a different distribution and the caller is
     *    told to retrain. The bound is the re-train trigger: a serving
     *    fleet calls delta load until it trips, then schedules one
@@ -225,11 +220,10 @@ object ModelStore {
           s"${prefix.maxId}], sample hash ${prefix.sampleHash} (trained " +
           s"$h); the trained prefix was edited — retrain")
     val growth = (total - nVecs).toDouble / nVecs
-    val maxGrowth = spark.conf.getOption(MaxStaleGrowthConf)
-      .map(_.toDouble).getOrElse(DefaultMaxStaleGrowth)
+    val maxGrowth = MaxStaleGrowth(spark)
     if (growth > maxGrowth) throw new IllegalStateException(
       f"loadIvfPqDelta: corpus grew ${growth * 100}%.1f%% past the " +
-        f"staleness bound (${maxGrowth * 100}%.1f%%, $MaxStaleGrowthConf)" +
+        f"staleness bound (${maxGrowth * 100}%.1f%%, ${MaxStaleGrowth.key})" +
         s" — $total vs $nVecs trained; the stored quantizer no longer " +
         "describes this distribution: retrain")
     installIvfPq(spark, corpusDir, modelDir, meta)
@@ -242,9 +236,8 @@ object ModelStore {
     // maxK alone — their effective flat cap IS the recorded max_k
     val fmk = if (meta.schema.fieldNames.contains("flat_max_k"))
       meta.getAs[String]("flat_max_k") else mk
-    val (curTc, curMk, curFmk) = (confOr(spark, Similarity.TargetCellConf),
-      confOr(spark, Similarity.MaxKConf),
-      confOr(spark, Similarity.FlatMaxKConf))
+    val (curTc, curMk, curFmk) = (Similarity.TargetCell.raw(spark),
+      Similarity.MaxK.raw(spark), Similarity.FlatMaxK.raw(spark))
     if (tc != curTc || mk != curMk || fmk != curFmk)
       throw new IllegalStateException(
         s"$who: model at $modelDir was trained under sizing confs " +

@@ -209,7 +209,7 @@ object MovingAverage {
 
   /** explicit pane-shuffle width override (int). Unset (default) =
     * derive from the scan's optimizer stats. */
-  private[graft] val PaneWidthConf = "graft.panes.width"
+  private[graft] val PaneWidth = graft.Setting.int("graft.panes.width", None)
   /** stats bytes one pane-shuffle task should own — sized from the
     * measured spill boundary, with the ×4 hopping explode priced in:
     * the merge exchange carries ~4 rows per scanned event at real
@@ -219,8 +219,8 @@ object MovingAverage {
     * margin. Measured at sf100e (SCALE.md round 13): 64 MB derived
     * width 38 → 120 s warm; 16 MB derives ~150, in the 128-width
     * regime the round-12 probe measured at 101 s. */
-  private[graft] val PaneTargetBytesConf = "graft.panes.targetBytes"
-  private val DefaultPaneTargetBytes = 16L << 20
+  private[graft] val PaneTargetBytes =
+    graft.Setting.long("graft.panes.targetBytes", Some(16L << 20), min = 1)
 
   /** Stats-derived hopping-pane shuffle width: scan stats bytes /
     * target bytes, floored at the session's shuffle width (never
@@ -228,21 +228,12 @@ object MovingAverage {
     * (past which task-launch overhead beats spill risk on any
     * executor profile this engine targets — a 100 TB input arrives
     * pre-partitioned by source files anyway). Conf-overridable
-    * ([[PaneWidthConf]]); pure plan-time arithmetic on already-cached
+    * ([[PaneWidth]]); pure plan-time arithmetic on already-cached
     * optimizer stats, nothing executes. */
   private[graft] def paneShuffleWidth(e: DataFrame): Int = {
     val spark = e.sparkSession
-    def num[T](key: String, kind: String)(parse: String => T): Option[T] =
-      spark.conf.getOption(key).map { v =>
-        try parse(v)
-        catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"$key must be $kind, got '$v'")
-        }
-      }
-    num(PaneWidthConf, "an int")(_.toInt).getOrElse {
-      val target = num(PaneTargetBytesConf, "a long")(_.toLong)
-        .getOrElse(DefaultPaneTargetBytes)
+    PaneWidth.get(spark).getOrElse {
+      val target = PaneTargetBytes(spark)
       val bytes = e.queryExecution.optimizedPlan.stats.sizeInBytes
       val base = spark.conf.get("spark.sql.shuffle.partitions").toInt
       val byStats = (bytes / BigInt(math.max(1L, target))).min(BigInt(4096)).toInt

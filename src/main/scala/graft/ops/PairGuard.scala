@@ -52,14 +52,15 @@ object PairGuard {
   /** `warn` (default) — estimate past the floor, log when over the
     * cap, proceed; `fail` — throw instead of proceeding; `off` — never
     * probe. */
-  val GuardConf = "graft.pairs.guard"
+  val Guard = graft.Setting.choice("graft.pairs.guard", "warn", "fail", "off")
   /** expansion-row cap the estimate is compared against; ~2e9 pair
     * rows is ~50 GB of narrow pair stream — past the point the linear
     * counterpart is unambiguously the right plan */
-  val MaxExpandRowsConf = "graft.pairs.maxExpandRows"
+  val MaxExpandRows = graft.Setting.long("graft.pairs.maxExpandRows", Some(2_000_000_000L))
   /** probe sample fraction (rows survive independently — see the
-    * unbiasedness note above); 1.0 makes the estimate exact */
-  val SampleFractionConf = "graft.pairs.sampleFraction"
+    * unbiasedness note above); 1.0 makes the estimate exact, ≤ 0 never probes */
+  val SampleFraction =
+    graft.Setting.double("graft.pairs.sampleFraction", Some(0.05), max = 1.0)
   /** pre-expansion inputs under this many bytes (optimizer stats)
     * never probe. 16 MB — deliberately LOWER than the as-of probe's
     * 64 MB floor, because a pair operator's damage is not proportional
@@ -69,7 +70,7 @@ object PairGuard {
     * while the probe on the same input is a single shingle scan. The
     * driver's oracle SFs stay under 16 MB (sf1 documents = 5.9 MB), so
     * the correctness gates still never probe. */
-  val MinBytesConf = "graft.pairs.minBytes"
+  val MinBytes = graft.Setting.long("graft.pairs.minBytes", Some(16L << 20))
 
   private val log = org.slf4j.LoggerFactory.getLogger("graft.PairGuard")
 
@@ -156,38 +157,23 @@ object PairGuard {
   private def guard(query: String, counterpart: String, floorOn: DataFrame,
       extraMemo: String = "")(estimate: (Double, Long) => Long): Unit = {
     val spark = floorOn.sparkSession
-    val mode = spark.conf.getOption(GuardConf).getOrElse("warn")
+    val mode = Guard(spark)
     if (mode == "off") return
-    require(mode == "warn" || mode == "fail",
-      s"$GuardConf must be warn|fail|off, got '$mode'")
-    // validated parses: a malformed or out-of-range value must name its
-    // conf key, not surface as a bare NumberFormatException or an
-    // obscure sampler error from inside plan construction (advice r12)
-    def parsed[A](conf: String, parse: String => A): Option[A] =
-      spark.conf.getOption(conf).map { v =>
-        try parse(v)
-        catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"$conf must be numeric, got '$v'")
-        }
-      }
-    val f = parsed(SampleFractionConf, _.toDouble).getOrElse(0.05)
-    require(f <= 1.0,
-      s"$SampleFractionConf must be in (0, 1], got $f")
+    val f = SampleFraction(spark)
     if (f <= 0) return
-    val minBytes = parsed(MinBytesConf, _.toLong).getOrElse(16L << 20)
+    val minBytes = MinBytes(spark)
     if (floorOn.queryExecution.optimizedPlan.stats.sizeInBytes <
         BigInt(minBytes)) return
-    val cap = parsed(MaxExpandRowsConf, _.toLong).getOrElse(2_000_000_000L)
+    val cap = MaxExpandRows(spark)
     val memoKey = Seq(query,
       floorOn.queryExecution.analyzed.semanticHash(), extraMemo, f, cap)
       .mkString("|")
     val est = memo.getOrBuild(floorOn.sparkSession, memoKey)(estimate(f, 421L))
     if (est > cap) {
       val msg = s"pair-expansion guard: $query estimates ~$est expanded " +
-        s"pair rows (> $MaxExpandRowsConf=$cap). This operator enumerates " +
+        s"pair rows (> ${MaxExpandRows.key}=$cap). This operator enumerates " +
         s"pairs by declared role; at this scale the linear counterpart is " +
-        s"$counterpart. Set $GuardConf=off to silence, =fail to refuse."
+        s"$counterpart. Set ${Guard.key}=off to silence, =fail to refuse."
       if (mode == "fail") throw new IllegalStateException(s"[graft] $msg")
       log.warn(msg)
       System.err.println(s"[graft] WARN $msg")

@@ -660,11 +660,12 @@ object Pipeline {
     * cap=2 ≡ uncapped on the test corpus); in the adversarial regime it
     * bounds the bucket to CAP·|bucket| compares. The oracle bakes the
     * same cap (arn ≤ cap), so the query stays hash-checkable at every
-    * SF; overriding [[BucketCapConf]] forfeits only the oracle twin
+    * SF; overriding [[BucketCap]] forfeits only the oracle twin
     * (same contract as graft.ivf.*). */
-  private[graft] val BucketCapConf = "graft.curation.bucketCap"
-  private[graft] val DefaultBucketCap = 64
+  private[graft] val BucketCap =
+    graft.Setting.int("graft.curation.bucketCap", Some(64), min = 1)
   def cur2CurationNearDup(spark: SparkSession, dir: String): DataFrame = {
+    val cap = BucketCap(spark)
     // pin both shared frames (optimization r13): winners is referenced
     // three times (semi-join filter, final left join, and transitively
     // under banded's both consumers) and banded twice (anchors window +
@@ -677,8 +678,6 @@ object Pipeline {
     val winners = Model.pin(cur1CurationE2e(spark, dir))
     val banded = Model.pin(Dedup.rkBanded(spark, dir)
       .join(winners.select(col("doc_id")), Seq("doc_id"), "left_semi"))
-    val cap = spark.conf.getOption(BucketCapConf).map(_.toInt)
-      .getOrElse(DefaultBucketCap)
     val anchors = banded
       .withColumn("arn", row_number().over(
         Window.partitionBy(col("band"), col("bkey")).orderBy(col("doc_id"))))
@@ -736,7 +735,7 @@ object Pipeline {
        |wb2 AS (SELECT b.* FROM bnd2 b JOIN win2 w ON b.doc_id = w.doc_id),
        |anc2 AS (SELECT * FROM (SELECT *, row_number() OVER
        |           (PARTITION BY band, bkey ORDER BY doc_id) AS arn FROM wb2)
-       |         WHERE arn <= $DefaultBucketCap),
+       |         WHERE arn <= ${BucketCap.default}),
        |drop2 AS (SELECT DISTINCT r.doc_id
        |          FROM anc2 l JOIN wb2 r ON l.band = r.band AND l.bkey = r.bkey
        |            AND l.doc_id < r.doc_id

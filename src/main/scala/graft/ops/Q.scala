@@ -39,8 +39,7 @@ object Fmt {
   * threshold; 0 disables broadcasting entirely (PlanSpec uses this to
   * pin the fallback shape and result-equality). */
 object Model {
-  val MaxEntriesConf = "graft.model.broadcast.maxEntries"
-  private val DefaultMaxEntries = 4000000L
+  val MaxEntries = graft.Setting.long("graft.model.broadcast.maxEntries", Some(4000000L))
 
   /** Model tables the guard has persisted for the query being built.
     * The guard's count() is an ACTION, so without caching the
@@ -85,8 +84,7 @@ object Model {
     * effect the table is persisted (and referenced until [[release]])
     * so the deciding count job doubles as its only materialization */
   def fits(df: DataFrame): Boolean = {
-    val max = df.sparkSession.conf.getOption(MaxEntriesConf)
-      .map(_.toLong).getOrElse(DefaultMaxEntries)
+    val max = MaxEntries(df.sparkSession)
     max > 0 && { hold(df); df.count() <= max }
   }
 
@@ -99,8 +97,7 @@ object Model {
     * registration with [[release]], which would evict a long-lived
     * registry table after the first query that used it */
   def guardedBroadcastKnown(df: DataFrame, rows: Long): DataFrame = {
-    val max = df.sparkSession.conf.getOption(MaxEntriesConf)
-      .map(_.toLong).getOrElse(DefaultMaxEntries)
+    val max = MaxEntries(df.sparkSession)
     if (max > 0 && rows <= max) org.apache.spark.sql.functions.broadcast(df)
     else df
   }

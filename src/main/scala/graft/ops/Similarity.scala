@@ -287,17 +287,14 @@ object Similarity {
   }
 
   private val IVF_ITERS = 3
-  private val IVF_PROBES = 4 // default clusters probed per query
   /** probe-count override (`graft.ivf.probes`) — the recall/latency
     * knob of every IVF read path (sim3/sim6/knn2/ir3/serve): more
     * probed cells = more candidates = higher recall, linearly more ADC
     * work. The DEFAULT (4) is baked into the DuckDB oracle SQL texts,
     * so overriding forfeits the oracle twin exactly like
-    * [[TargetCellConf]] — a deployment tuning move, measured on the
+    * [[TargetCell]] — a deployment tuning move, measured on the
     * recall harness (ServeBench `recall`, SCALE.md). */
-  val ProbesConf = "graft.ivf.probes"
-  private def ivfProbes(spark: SparkSession): Int =
-    spark.conf.getOption(ProbesConf).map(_.toInt).getOrElse(IVF_PROBES)
+  val Probes = graft.Setting.int("graft.ivf.probes", Some(4), min = 1)
   private[graft] val IVF_Q = 512 // integer grid: uq[i] = floor(u[i] * 512)
 
   /** The cell count K is CORPUS-PROPORTIONAL: K = ceil(trainN / target),
@@ -311,7 +308,7 @@ object Similarity {
     * stays hash-checkable at every SF — overriding the confs is a
     * deployment move that forfeits only the oracle twin. The maxK cap
     * bounds driver/model state (maxK × 64 longs ≈ 32 MB at the
-    * default); the [[FlatMaxKConf]] cap bounds per-scan assignment
+    * default); the [[FlatMaxK]] cap bounds per-scan assignment
     * COST — at a corpus big enough that the desired K exceeds either,
     * the trainer goes HIERARCHICAL automatically: a flat coarse
     * quantizer of ≤ maxK
@@ -320,11 +317,11 @@ object Similarity {
     * stays ≈ 4·target and driver/model state stays ≤ maxK rows at any
     * corpus size — the SemDeDup/IVF-PQ deployment reality at 100 TB.
     * See [[twoLevelTrained]]. */
-  val TargetCellConf = "graft.ivf.targetCell"
-  val MaxKConf = "graft.ivf.maxK"
+  val TargetCell = graft.Setting.long("graft.ivf.targetCell", Some(32L), min = 1)
+  val MaxK = graft.Setting.long("graft.ivf.maxK", Some(65536L), min = 1)
 
   /** The flat→two-level dispatch threshold — a COST bound, distinct
-    * from [[MaxKConf]]'s driver-STATE bound. Flat assignment prices
+    * from [[MaxK]]'s driver-STATE bound. Flat assignment prices
     * every corpus row at K 64-dim dots per scan, so its per-scan work
     * is N·K ∝ N²/target at defaults — quadratic in the corpus — while
     * two-level prices it at K1+K2 ≈ 2√K. Dispatching on maxK alone
@@ -340,32 +337,24 @@ object Similarity {
     * 13.6 s sf10 point at worst. Like the sizing confs, the value is
     * part of the model identity: it keys the registry and is recorded
     * and checked by [[graft.ops.ModelStore]]. */
-  val FlatMaxKConf = "graft.ivf.flatMaxK"
-  private val DefaultTargetCell = 32L
-  private val DefaultMaxK = 65536L
-  private val DefaultFlatMaxK = 2048L
+  val FlatMaxK = graft.Setting.long("graft.ivf.flatMaxK", Some(2048L))
 
   /** (desired uncapped cell count = ceil(trainN/target),
     * flat-regime cap = min(flatMaxK, maxK), maxK). */
   private def ivfParams(spark: SparkSession, trainN: Long): (Long, Long, Long) = {
-    val target = spark.conf.getOption(TargetCellConf).map(_.toLong)
-      .getOrElse(DefaultTargetCell)
-    val maxK = spark.conf.getOption(MaxKConf).map(_.toLong)
-      .getOrElse(DefaultMaxK)
-    val flatCap = math.min(maxK, spark.conf.getOption(FlatMaxKConf)
-      .map(_.toLong).getOrElse(DefaultFlatMaxK))
-    (math.max(1L, (trainN + target - 1) / target), flatCap, maxK)
+    val (target, maxK) = (TargetCell(spark), MaxK(spark))
+    (math.max(1L, (trainN + target - 1) / target), math.min(maxK, FlatMaxK(spark)), maxK)
   }
 
   /** SIM3 — IVF (inverted-file) ANN: k-means partitions the corpus into
-    * K cells; a query probes only its IVF_PROBES nearest cells and
+    * K cells; a query probes only its `Probes` nearest cells and
     * reranks exactly inside them. Training is Lloyd's iterations over a
     * deterministic 1-in-4 sample with deterministic init (first K
     * sampled vectors by id); each iteration is one scan + one
     * `vector_sum_long` sketch aggregate per cell — only the K×64
     * centroid matrix ever reaches the driver, which is model state,
     * not data. At 100 TB the cell assignment is a write-time
-    * bucketing column; probes then prune to IVF_PROBES/K of the corpus.
+    * bucketing column; probes then prune to `Probes`/K of the corpus.
     *
     * Since round 3 the whole training loop is ENGINE-NEUTRAL, flipping
     * the last no-oracle query to full hash-check. The blocker was float
@@ -396,16 +385,16 @@ object Similarity {
        |  1, $probes), s -> s.idx)""".stripMargin))
 
   /** Adds an exploded `probe` column of candidate cell ids per query
-    * row. Flat model: the IVF_PROBES best cells by the row's `dots`
+    * row. Flat model: the `Probes` best cells by the row's `dots`
     * (unchanged — bit-identical to the oracle's probe CTE). Two-level:
-    * the IVF_PROBES best coarse cells by `dots`, each refined to its
-    * IVF_PROBES best fine sub-cells (an equi-join against the fine
+    * the `Probes` best coarse cells by `dots`, each refined to its
+    * `Probes` best fine sub-cells (an equi-join against the fine
     * matrix table + one column-matrix dots pass) — P² probed sub-cells
     * whose total population ≈ N·P²/(K1·K2), strictly finer pruning
     * than a maxK-capped flat model could reach. `vecCol` is the
     * unit-grid vector column (sim6 carries it renamed as qx). */
   private def withProbes(model: IvfModel, df: DataFrame, vecCol: Column): DataFrame = {
-    val probes = ivfProbes(df.sparkSession)
+    val probes = Probes(df.sparkSession)
     model.fine match {
       case None => df.withColumn("probe", probesCol(model.k, probes))
       case Some(f) =>
@@ -426,7 +415,7 @@ object Similarity {
   def sim3AnnIvf(spark: SparkSession, dir: String): DataFrame = {
     val model = ivfAssigned(spark, dir)
     val assigned = model.assigned
-    // queries probe their IVF_PROBES best cells
+    // queries probe their `Probes` best cells
     val q = withProbes(model, assigned.filter(col("vec_id") < NQ), col("uq"))
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qnrm"),
         col("probe"))
@@ -474,8 +463,8 @@ object Similarity {
     * deterministic, so reuse cannot change any result — the oracles
     * replay the identical unrolled iterations either way; what a reuse
     * skips is only the redundant re-derivation of the same model. Keys
-    * carry the session confs the trainer reads ([[TargetCellConf]],
-    * [[MaxKConf]]) so a spec forcing the two-level path never sees a
+    * carry the session confs the trainer reads ([[TargetCell]],
+    * [[MaxK]]) so a spec forcing the two-level path never sees a
     * flat model trained under defaults. A tiny LRU (per-entry state is
     * K×64 longs ≤ 32 MB at the default cap; PQ books are 8×16×8
     * longs) bounds a long-lived session; a two-level entry's fine
@@ -487,9 +476,7 @@ object Similarity {
   private[graft] val pqCache = new KeyedCache[Array[Array[Array[Long]]]](4)
 
   private def ivfCacheKey(spark: SparkSession, dir: String): String =
-    s"$dir|${spark.conf.getOption(TargetCellConf).getOrElse("")}" +
-      s"|${spark.conf.getOption(MaxKConf).getOrElse("")}" +
-      s"|${spark.conf.getOption(FlatMaxKConf).getOrElse("")}"
+    s"$dir|${TargetCell.raw(spark)}|${MaxK.raw(spark)}|${FlatMaxK.raw(spark)}"
 
   /** The persistable parts of a trained IVF quantizer — either
     * regime. Flat: the driver-held centroid matrix. Two-level: the
@@ -706,7 +693,7 @@ object Similarity {
     * resume growing with the corpus (the measured failure mode the
     * K∝N fix removed at smaller scales); past flatMaxK its per-scan
     * N·K assignment cost detonates first (the measured 2M-vector
-    * quadratic valley — see [[FlatMaxKConf]]). Level 1 is [[lloydFlat]] with
+    * quadratic valley — see [[FlatMaxK]]). Level 1 is [[lloydFlat]] with
     * K1 = min(maxK, ceil(√desired)) driver-held centroids; level 2
     * trains ≤ K2 = ceil(desired/K1) sub-centroids INSIDE each coarse
     * cell with the same integer-grid Lloyd arithmetic, but the fine
@@ -727,7 +714,7 @@ object Similarity {
     * trainN > flatMaxK·target = 65 536 sampled vectors (≈ 262k corpus
     * vectors) — still past every driver SF and this repo's sf1/sf10
     * fixtures — and forcing it on via the confs forfeits the oracle
-    * by declaration (see [[TargetCellConf]]). Correctness is spec'd
+    * by declaration (see [[TargetCell]]). Correctness is spec'd
     * instead (TwoLevelIvfSpec): structural invariants + sim3/dd7
     * output contracts with the confs forced low. */
   /** coarse-assign: the two-level analogue of [[withCellFlat]] —
@@ -844,8 +831,8 @@ object Similarity {
        |uqt AS (SELECT vec_id,
        |          list_transform(v, x -> floor((x / nrm) * $IVF_Q)) AS uq FROM e),
        |tr AS (SELECT vec_id, uq FROM uqt WHERE vec_id % 4 = 0),
-       |kk AS (SELECT LEAST($DefaultMaxK,
-       |         GREATEST(1, (count(*) + ${DefaultTargetCell - 1}) // $DefaultTargetCell)) AS k
+       |kk AS (SELECT LEAST(${MaxK.default},
+       |         GREATEST(1, (count(*) + ${TargetCell.default - 1}) // ${TargetCell.default})) AS k
        |       FROM tr),
        |c0 AS (SELECT CAST(rn - 1 AS INT) AS pid, uq AS c FROM (
        |         SELECT row_number() OVER (ORDER BY vec_id) AS rn, uq FROM tr)
@@ -862,7 +849,7 @@ object Similarity {
        |           row_number() OVER (PARTITION BY u.vec_id
        |             ORDER BY list_dot_product(u.uq, c.c) DESC, c.pid) AS rn
        |    FROM uqt u CROSS JOIN c$IVF_ITERS c WHERE u.vec_id < $NQ)
-       |  WHERE rn <= $IVF_PROBES),
+       |  WHERE rn <= ${Probes.default}),
        |scored AS (
        |  SELECT q.qid, a.vec_id,
        |         floor(list_dot_product(qe.v, ce.v) / (qe.nrm * ce.nrm) * 1000000) / 1000000 AS cos
@@ -887,7 +874,7 @@ object Similarity {
     * Scale shape vs dd5 (the exact all-pairs oracle twin): the pair
     * join is an EQUI-join on the cell id, so the comparison count is
     * Σ|cell|² — and since round 5 K scales with the corpus
-    * (K = ceil(trainN / targetCell), see [[TargetCellConf]]), so cells
+    * (K = ceil(trainN / targetCell), see [[TargetCell]]), so cells
     * stay ≈ 4·target rows and Σ|cell|² ≈ 4·target·N is LINEAR in the
     * corpus; the join stays bucketed, never all-pairs. Per-vector
     * verdicts are one aggregate over the dup edges + a left join back;
@@ -1590,7 +1577,7 @@ object Similarity {
   /** SIM6 — IVF-PQ END TO END (Jégou et al. TPAMI'11, the billion-scale
     * ANN architecture: FAISS's IVFPQ index): sim3's IVF coarse
     * quantizer prunes WHICH vectors to look at (a query probes its
-    * IVF_PROBES nearest cells — candidates fall from N to
+    * `Probes` nearest cells — candidates fall from N to
     * ≈ N·probes/K), and sim5's PQ codes shrink WHAT is read per
     * candidate (8 nibble lookups instead of a 64-double dot). Both
     * quantizers operate on ONE domain — the unit-grid vectors `uq` the
@@ -1616,7 +1603,7 @@ object Similarity {
 
   /** rerank-shortlist multiplier override (`graft.ivf.rerank`) — the
     * SECOND recall/latency knob of the IVF-PQ read path, orthogonal to
-    * [[ProbesConf]]: more probes ADD candidates, a bigger shortlist
+    * [[Probes]]: more probes ADD candidates, a bigger shortlist
     * lets more of them survive the ADC cut into the exact rerank. The
     * knob that matters when 4-bit ADC cannot ORDER the candidates —
     * on a corpus dense with near-ties (the decade fixture: ~1000
@@ -1626,9 +1613,8 @@ object Similarity {
     * measured: 0.73 → 0.63 recall@50 from probes 4 → 16 at 2M
     * vectors) while raising the shortlist recovers it (SCALE.md round
     * 13). The DEFAULT (10) is baked into the DuckDB oracle SQL, so
-    * overriding forfeits the oracle twin exactly like [[ProbesConf]]. */
-  val RerankConf = "graft.ivf.rerank"
-  private val RERANK_MULT = 10
+    * overriding forfeits the oracle twin exactly like [[Probes]]. */
+  val Rerank = graft.Setting.int("graft.ivf.rerank", Some(10))
 
   /** ADC shortlist size scales with the requested list length (10×k
     * floor-ed at the classic PQ_RERANK): a fixed 50-candidate
@@ -1636,11 +1622,9 @@ object Similarity {
     * measured recall@20 0.47 at sf0.001 — at 10× it recovers the
     * shortlist-to-output ratio sim6's own k=5 search has. `k=K` keeps
     * the historical 50, so sim6_ivfpq hashes are unchanged. The
-    * no-arg form is the ORACLE's (always the default multiplier);
-    * the session form reads [[RerankConf]]. */
-  private def sim6Rerank(k: Int): Int = math.max(PQ_RERANK, RERANK_MULT * k)
-  private def sim6Rerank(spark: SparkSession, k: Int): Int = math.max(PQ_RERANK,
-    spark.conf.getOption(RerankConf).map(_.toInt).getOrElse(RERANK_MULT) * k)
+    * ORACLE takes the default multiplier; a session passes [[Rerank]]'s. */
+  private def sim6Rerank(k: Int, mult: Int = Rerank.default): Int =
+    math.max(PQ_RERANK, mult * k)
 
   /** [[sim6IvfPqTopK]] parameterized on (queries, list length) so the
     * consumers that need a DENSE RANKING AT SCALE — knn2's neighbor
@@ -1720,6 +1704,9 @@ object Similarity {
     * only skip the rebuild. */
   private val servedCorpusCache = new KeyedCache[ServedModel](4, sm => Seq(sm.coded))
 
+  /** unset or ≤ 0: derived from the coded row count, see [[pinServedCorpus]] */
+  val ServeSlices = graft.Setting.int("graft.serve.slices", None)
+
   /** persist + register the coded corpus and its serve-time plan
     * snapshot for a serving session. The multi-second build (training
     * fallback, coding scan, persist + count) runs inside the key's
@@ -1744,8 +1731,7 @@ object Similarity {
       // slice, capped at the core count); `graft.serve.slices`
       // overrides for corpora whose row width is unusual.
       val n0 = codedPlan.count()
-      val slices = spark.conf.getOption("graft.serve.slices")
-        .map(_.toInt).filter(_ > 0).getOrElse {
+      val slices = ServeSlices.get(spark).filter(_ > 0).getOrElse {
           val byRows = math.ceil(n0 / 8192.0).toInt
           math.min(math.max(byRows, 1),
             spark.sparkContext.defaultParallelism)
@@ -1825,7 +1811,7 @@ object Similarity {
       .join(broadcast(q), joinCond)
       .withColumn("ip", ip.cast("long"))
       .withColumn("arank", row_number().over(wIp))
-      .filter(col("arank") <= sim6Rerank(spark, k))
+      .filter(col("arank") <= sim6Rerank(k, Rerank(spark)))
       .select(col("qid"), col("vec_id"))
       .join(broadcast(qVec), "qid")
     // exact rerank: fetch raw vectors for the shortlist only (the
@@ -1954,7 +1940,7 @@ object Similarity {
        |           row_number() OVER (PARTITION BY u.vec_id
        |             ORDER BY list_dot_product(u.uq, c.c) DESC, c.pid) AS rn
        |    FROM uqt u CROSS JOIN c$IVF_ITERS c WHERE u.vec_id < $nq)
-       |  WHERE rn <= $IVF_PROBES),
+       |  WHERE rn <= ${Probes.default}),
        |qd6 AS (
        |  SELECT t.vec_id AS qid, t.s, c.pid,
        |         list_dot_product(t.sub, c.c) AS ipd

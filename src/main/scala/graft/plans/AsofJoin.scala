@@ -43,29 +43,30 @@ object AsofJoin {
     * plan), `merge` (force plain [[AsofJoinExec]]), `salt` (force the
     * hot-key-salted exec on EVERY key — the stress/test form), `expand`
     * (force the compositional splittable form) */
-  val DispatchConf = "graft.asof.dispatch"
+  val Dispatch = graft.Setting.choice("graft.asof.dispatch", "auto", "merge", "salt", "expand")
   /** auto mode's sample fraction for the key-frequency probe; `0`
     * disables the probe (auto then behaves like `merge`) */
-  val SampleFractionConf = "graft.asof.skew.sampleFraction"
+  val SampleFraction = graft.Setting.double(
+    "graft.asof.skew.sampleFraction", Some(0.05), max = 1.0)
   /** auto mode's routing threshold: a key holding at least this
     * fraction of EITHER side's sampled rows is treated as hot and
-    * salted across [[SaltsConf]] sub-partitions */
-  val MaxKeyFractionConf = "graft.asof.skew.maxKeyFraction"
+    * salted across [[Salts]] sub-partitions */
+  val MaxKeyFraction = graft.Setting.double("graft.asof.skew.maxKeyFraction", Some(0.1))
   /** a side whose sample is smaller than this is treated as not skewed
     * — a few dozen sampled rows make max/sum pure noise, and an input
     * that small cannot produce a straggler worth re-planning for */
-  val MinSampleRowsConf = "graft.asof.skew.minSampleRows"
+  val MinSampleRows = graft.Setting.long("graft.asof.skew.minSampleRows", Some(1000L))
   /** how many sub-partitions a hot key's left rows spread over (its
     * right history is replicated into each); default = the session's
     * default parallelism at plan time */
-  val SaltsConf = "graft.asof.skew.salts"
+  val Salts = graft.Setting.int("graft.asof.skew.salts", None, min = 1)
   /** inputs whose larger side is under this many bytes (optimizer
     * stats) skip the probe entirely: a hot key in a table this small
     * costs at most ~a second of straggle — less than the probe scan
     * that would detect it. 64 MB default; the sf10 fixture (205 MB
     * events) where the straggler measurably doubles the query still
     * probes. */
-  val MinBytesConf = "graft.asof.skew.minBytes"
+  val MinBytes = graft.Setting.long("graft.asof.skew.minBytes", Some(64L << 20))
   private val MaxHotKeys = 16 // isin() list bound; top-N by sampled count
 
   /** probe memo: (semantic plan hashes, keys, confs) → hot keys. A
@@ -88,9 +89,9 @@ object AsofJoin {
     * whole merge into one task. Routing by documentation is not a
     * mechanism, so `join()` (mode `auto`, the default) probes BOTH
     * sides' sampled key frequency (one narrow side-tagged union scan
-    * at [[SampleFractionConf]], fixed seed) and, when hot keys emerge,
+    * at [[SampleFraction]], fixed seed) and, when hot keys emerge,
     * plans the SALTED exec: a salt column becomes an extra join key —
-    * a hot key's LEFT rows spread round-robin over [[SaltsConf]]
+    * a hot key's LEFT rows spread round-robin over [[Salts]]
     * sub-partitions while its RIGHT history (one key's history — small
     * by nature) is replicated into each, so every sub-partition runs
     * the exact per-key merge on a time-slice of probes against the
@@ -103,7 +104,7 @@ object AsofJoin {
     * forced `expand` mode. Every form shares one oracle and emits
     * identical columns, so dispatch can never change results — only
     * the straggler profile. Deployments that know their key
-    * distribution skip the probe with [[DispatchConf]]=merge|salt|expand. */
+    * distribution skip the probe with [[Dispatch]]=merge|salt|expand. */
   def join(left: DataFrame, right: DataFrame,
       leftKey: String, rightKey: String,
       leftTime: String, rightTime: String,
@@ -111,8 +112,7 @@ object AsofJoin {
       leftOuter: Boolean = false): DataFrame = {
     requireCompatible(left, right, leftKey, rightKey, leftTime, rightTime)
     val spark = SparkSession.active
-    val mode = spark.conf.getOption(DispatchConf).getOrElse("auto")
-    mode match {
+    Dispatch(spark) match {
       case "merge" =>
         mergePlan(spark, left, right, leftKey, rightKey, leftTime,
           rightTime, rightTieBreak, leftOuter)
@@ -130,8 +130,6 @@ object AsofJoin {
         else
           salted(spark, left, right, leftKey, rightKey, leftTime, rightTime,
             rightTieBreak, leftOuter, hotOnly = Some(hot))
-      case other => throw new IllegalArgumentException(
-        s"$DispatchConf must be auto|merge|salt|expand, got '$other'")
     }
   }
 
@@ -194,8 +192,7 @@ object AsofJoin {
       rightTieBreak: Seq[String], leftOuter: Boolean,
       hotOnly: Option[Seq[Any]]): DataFrame = {
     import org.apache.spark.sql.functions._
-    val salts = spark.conf.getOption(SaltsConf).map(_.toInt)
-      .getOrElse(spark.sparkContext.defaultParallelism)
+    val salts = Salts.get(spark).getOrElse(spark.sparkContext.defaultParallelism)
     val saltL = "__graft_asof_salt_l"
     val saltR = "__graft_asof_salt_r"
     def isHot(c: org.apache.spark.sql.Column) =
@@ -214,28 +211,23 @@ object AsofJoin {
   }
 
   /** auto-dispatch probe: the keys holding at least
-    * [[MaxKeyFractionConf]] of either side's sampled rows (top
+    * [[MaxKeyFraction]] of either side's sampled rows (top
     * [[MaxHotKeys]] by sampled count — an isin() list, so it must stay
     * small; anything past the top 16 is not "a hot key", it is a flat
     * distribution). One job — a union of the two key columns
     * (side-tagged), fixed-seed sample, map-side-combined count. The
     * scan reads ONE column per side with pushdown; at 100 TB that cost
     * is real but bounded and paid once per plan build — callers that
-    * already know the answer set [[DispatchConf]] and never probe.
-    * Sides whose sample is under [[MinSampleRowsConf]] report no hot
+    * already know the answer set [[Dispatch]] and never probe.
+    * Sides whose sample is under [[MinSampleRows]] report no hot
     * keys (noise guard); null keys are never hot (they never match). */
   private def sampledHotKeys(spark: SparkSession,
       lhs: DataFrame, leftKey: String,
       rhs: DataFrame, rightKey: String): Seq[Any] = {
-    val f = spark.conf.getOption(SampleFractionConf)
-      .map(_.toDouble).getOrElse(0.05)
+    val f = SampleFraction(spark)
     if (f <= 0) return Nil
-    val minRows = spark.conf.getOption(MinSampleRowsConf)
-      .map(_.toLong).getOrElse(1000L)
-    val thr = spark.conf.getOption(MaxKeyFractionConf)
-      .map(_.toDouble).getOrElse(0.1)
-    val minBytes = spark.conf.getOption(MinBytesConf)
-      .map(_.toLong).getOrElse(64L << 20)
+    val (minRows, thr, minBytes) =
+      (MinSampleRows(spark), MaxKeyFraction(spark), MinBytes(spark))
     // stats floor: both sides too small for a straggler to matter →
     // the probe scan would cost more than the skew it guards against
     val lStats = lhs.queryExecution.optimizedPlan.stats.sizeInBytes

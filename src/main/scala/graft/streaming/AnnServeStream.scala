@@ -41,6 +41,11 @@ import graft.ops.Similarity
   * the same queries. */
 object AnnServeStream {
 
+  val ShufflePartitions = graft.Setting.int("graft.serve.shufflePartitions", Some(8), min = 1)
+  /** `cap + 1` rows are collected to tell a batch over the cap, see [[serve]] */
+  val MaxBatchRows =
+    graft.Setting.int("graft.serve.maxBatchRows", Some(100000), min = 0, max = Int.MaxValue - 1)
+
   /** Start the serving query: `queries` is a STREAMING (qid, v)
     * relation; each micro-batch is answered with the top-`k` corpus
     * neighbors per query — (qid, vec_id, cos, rank) — and handed to
@@ -77,8 +82,7 @@ object AnnServeStream {
         // hands us — the user's session is untouched.
         val ss = batch.sparkSession
         ss.conf.set("spark.sql.adaptive.enabled", "false")
-        ss.conf.set("spark.sql.shuffle.partitions",
-          ss.conf.getOption("graft.serve.shufflePartitions").getOrElse("8"))
+        ss.conf.set("spark.sql.shuffle.partitions", ShufflePartitions(ss).toLong)
         // A query batch is tiny BY CONTRACT (it broadcasts onto the
         // corpus), so materialize it once on the driver: a foreachBatch
         // DataFrame re-executes its source plan on EVERY action (the
@@ -87,8 +91,7 @@ object AnnServeStream {
         // The contract is ENFORCED, not assumed: limit(cap+1) bounds
         // what the driver can ever hold, and a burst past the cap
         // degrades to the distributed persist path instead of an OOM.
-        val cap = ss.conf.getOption("graft.serve.maxBatchRows")
-          .map(_.toInt).getOrElse(100000)
+        val cap = MaxBatchRows(ss)
         val rows = batch.limit(cap + 1).collect()
         // empty triggers happen (timer/startup batches) — skip them
         if (rows.length > cap) {

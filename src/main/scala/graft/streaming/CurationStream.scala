@@ -195,7 +195,7 @@ object CurationStream {
     * the batch LSH shuffle, and each document touches BANDS buckets —
     * candidate-sized state and candidate-sized compares on ingest.
     * Each bucket's member list is capped to its `bucketCap` MIN-ID
-    * members (default [[graft.ops.Pipeline.DefaultBucketCap]], override
+    * members (default [[graft.ops.Pipeline.BucketCap]], override
     * via the `graft.curation.bucketCap` session conf at plan-build
     * time) — the same anchor cap the batch twin applies — so one
     * viral-boilerplate bucket can neither grow state nor compare-cost
@@ -223,8 +223,7 @@ object CurationStream {
       else GroupStateTimeout.NoTimeout
     // resolved ONCE at plan-build time and captured by the state
     // closure — executors never read session confs
-    val bucketCap = math.max(1, spark.conf.getOption(graft.ops.Pipeline.BucketCapConf)
-      .map(_.toInt).getOrElse(graft.ops.Pipeline.DefaultBucketCap))
+    val bucketCap = graft.ops.Pipeline.BucketCap(spark)
     val probes = winners(docs, bench, ttlMs).flatMap { w =>
       if (w.sig.isEmpty)
         // unshingleable doc: no signature, near-dups nothing — one

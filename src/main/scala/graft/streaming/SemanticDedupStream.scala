@@ -62,7 +62,7 @@ import graft.ops.Similarity
   * arrivals follow the training distribution (the K∝N trainer's
   * invariant), but a drifting or adversarial stream can pile into one
   * cell — so each cell's member list is capped at its `cellCap` MIN-ID
-  * members ([[CellCapConf]], default [[DefaultCellCap]] = 1024 ≫ the
+  * members ([[CellCap]], default 1024 ≫ the
   * ≈128 design occupancy; resolved once at plan-build time). Same
   * anchor-cap move as the cur2 band buckets: any smaller-id neighbor
   * at cos ≥ τ suffices to drop, and replica pile-ups match their
@@ -97,8 +97,7 @@ object SemanticDedupStream {
   final case class SemVerdict(vec_id: Long, cell: Long, n_near: Long,
       max_cos: Option[Double], keep: Boolean)
 
-  val CellCapConf = "graft.semdedup.cellCap"
-  val DefaultCellCap = 1024
+  val CellCap = graft.Setting.int("graft.semdedup.cellCap", Some(1024), min = 1)
 
   /** Strict left-to-right Σx² under one sqrt — [[graft.functions.DoubleDot]]
     * + `sqrt`'s scalar sequence (norm2), bit-identical doubles. */
@@ -148,8 +147,7 @@ object SemanticDedupStream {
     // both resolved ONCE at plan-build time and captured by the
     // closures — executors never read session confs
     val cents: Array[Array[Double]] = centroids.map(_.map(_.toDouble).toArray)
-    val cellCap = math.max(1, spark.conf.getOption(CellCapConf)
-      .map(_.toInt).getOrElse(DefaultCellCap))
+    val cellCap = CellCap(spark)
     val timeoutConf =
       if (ttlMs > 0L) GroupStateTimeout.ProcessingTimeTimeout
       else GroupStateTimeout.NoTimeout

@@ -137,10 +137,10 @@ class AnnDeltaSpec extends AnyFunSuite {
       ModelStore.loadIvfPqDelta(spark, grown, store)
     }
     assert(e.getMessage.contains("staleness bound"), e.getMessage)
-    spark.conf.set(ModelStore.MaxStaleGrowthConf, "0.7")
+    spark.conf.set(ModelStore.MaxStaleGrowth.key, "0.7")
     try ModelStore.loadIvfPqDelta(spark, grown, store) // must not throw
     finally {
-      spark.conf.unset(ModelStore.MaxStaleGrowthConf)
+      spark.conf.unset(ModelStore.MaxStaleGrowth.key)
       Similarity.resetModelRegistry()
     }
   }

@@ -131,8 +131,8 @@ class AnnServeSpec extends AnyFunSuite {
     // refinement inside the first micro-batch — in the regime that is
     // the only one at 100 TB. This pins both the reuse (job count) and
     // the results under the forced two-level sizing confs.
-    val lowCaps = Seq(Similarity.TargetCellConf -> "4",
-      Similarity.MaxKConf -> "4")
+    val lowCaps = Seq(Similarity.TargetCell.key -> "4",
+      Similarity.MaxK.key -> "4")
     val saved = lowCaps.map { case (k, _) => k -> spark.conf.getOption(k) }
     lowCaps.foreach { case (k, v) => spark.conf.set(k, v) }
     try {

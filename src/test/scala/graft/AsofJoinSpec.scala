@@ -31,10 +31,10 @@ class AsofJoinSpec extends AnyFunSuite {
 
   private def join(l: DataFrame, r: DataFrame, mode: String,
       outer: Boolean = false) = {
-    spark.conf.set(AsofJoin.DispatchConf, mode)
+    spark.conf.set(AsofJoin.Dispatch.key, mode)
     try AsofJoin.join(l, r, "k", "rk", "t", "rt",
       rightTieBreak = Seq("tb"), leftOuter = outer)
-    finally spark.conf.unset(AsofJoin.DispatchConf)
+    finally spark.conf.unset(AsofJoin.Dispatch.key)
   }
 
   test("aj2 (custom exec) agrees with aj1 (compositional) bit-for-bit") {

@@ -117,13 +117,13 @@ class DedupSimilaritySpec extends AnyFunSuite {
       assert(m.assigned.select("cell").distinct().count() > 1)
     } finally spark.conf.unset("spark.sql.codegen.fallback")
     // the knob works: halving the target cell size doubles K
-    spark.conf.set(Similarity.TargetCellConf, "8")
+    spark.conf.set(Similarity.TargetCell.key, "8")
     try {
       val k8 = Similarity.ivfAssigned(spark, sf).k
-      val k32 = { spark.conf.set(Similarity.TargetCellConf, "32")
+      val k32 = { spark.conf.set(Similarity.TargetCell.key, "32")
         Similarity.ivfAssigned(spark, sf).k }
       assert(k8 == 4 * k32, s"k(target=8)=$k8 vs k(target=32)=$k32")
-    } finally spark.conf.unset(Similarity.TargetCellConf)
+    } finally spark.conf.unset(Similarity.TargetCell.key)
   }
 
   test("pq1 codes fit 32 bits and reconstruction beats the zero-codebook energy") {

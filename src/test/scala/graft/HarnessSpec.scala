@@ -21,6 +21,15 @@ class HarnessSpec extends AnyFunSuite {
     assert(spark.sparkContext.uiWebUrl.isEmpty)
   }
 
+  test("SPARK_GRAFT_CPUS: abc and 0 throw naming the variable, 3 reads as 3") {
+    assert(Harness.parseCpus("3") == 3)
+    for (bad <- Seq("abc", "0")) {
+      val e = intercept[IllegalArgumentException](Harness.parseCpus(bad))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS") && e.getMessage.contains(s"'$bad'"),
+        e.getMessage)
+    }
+  }
+
   private val rows = spark.range(0, 1000)
     .selectExpr("id", "cast(id % 13 as string) s", "id * 0.5 d")
 

@@ -72,10 +72,10 @@ class KnnIvfpqSpec extends AnyFunSuite {
     // one — this is exactly why the knob recovers recall at 2M
     // vectors where raising probes lowers it)
     def run(conf: Option[String]) = {
-      conf.foreach(v => spark.conf.set(Similarity.RerankConf, v))
+      conf.foreach(v => spark.conf.set(Similarity.Rerank.key, v))
       try Similarity.sim6IvfPqTopK(spark, sf).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      finally spark.conf.unset(Similarity.RerankConf)
+      finally spark.conf.unset(Similarity.Rerank.key)
     }
     val unset = run(None)
     assert(run(Some("10")).toSeq.sorted == unset.toSeq.sorted)
@@ -90,5 +90,20 @@ class KnnIvfpqSpec extends AnyFunSuite {
     }
     // and it genuinely engages on this corpus: at least one query improves
     assert(mNarrow.exists { case (qid, m) => mWide(qid) > m + 1e-9 })
+  }
+
+  test("graft.ivf.probes=0 and graft.ivf.targetCell=0 are refused, naming the key") {
+    // probes=0 used to probe no cell (sim3 and sim6 returned no rows)
+    // and targetCell=0 to fail inside training with "/ by zero"
+    for ((setting, query) <- Seq[(Setting[_], () => Any)](
+        Similarity.Probes -> (() => Similarity.sim3AnnIvf(spark, sf)),
+        Similarity.Probes -> (() => Similarity.sim6IvfPqTopK(spark, sf)),
+        Similarity.TargetCell -> (() => Similarity.sim3AnnIvf(spark, sf)))) {
+      spark.conf.set(setting.key, "0")
+      try {
+        val e = intercept[IllegalArgumentException](query())
+        assert(e.getMessage.contains(setting.key), e.getMessage)
+      } finally spark.conf.unset(setting.key)
+    }
   }
 }

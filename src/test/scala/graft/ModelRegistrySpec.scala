@@ -89,7 +89,7 @@ class ModelRegistrySpec extends AnyFunSuite {
   test("IVF registry is conf-keyed: forcing the sizing confs retrains") {
     Similarity.resetModelRegistry()
     val defaultK = Similarity.ivfAssigned(spark, sf).k
-    spark.conf.set(Similarity.TargetCellConf, "4")
+    spark.conf.set(Similarity.TargetCell.key, "4")
     try {
       val forcedK = Similarity.ivfAssigned(spark, sf).k
       // target 4 rows/cell instead of 32 → ~8x the cells; a stale
@@ -97,7 +97,7 @@ class ModelRegistrySpec extends AnyFunSuite {
       assert(forcedK > defaultK,
         s"conf-keyed registry must retrain (default k=$defaultK forced k=$forcedK)")
     } finally {
-      spark.conf.unset(Similarity.TargetCellConf)
+      spark.conf.unset(Similarity.TargetCell.key)
       Similarity.resetModelRegistry()
     }
   }

@@ -75,8 +75,8 @@ class ModelStoreSpec extends AnyFunSuite {
   }
 
   private val lowCaps = Seq(
-    Similarity.TargetCellConf -> "4",
-    Similarity.MaxKConf -> "4")
+    Similarity.TargetCell.key -> "4",
+    Similarity.MaxK.key -> "4")
 
   private def withConfs[A](confs: Seq[(String, String)])(body: => A): A = {
     val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }

@@ -33,9 +33,9 @@ class PairGuardSpec extends AnyFunSuite {
 
   test("self-join estimator is exact at sampleFraction=1") {
     withConfs(Seq(
-        PairGuard.SampleFractionConf -> "1.0",
-        PairGuard.MinBytesConf -> "0",
-        PairGuard.MaxExpandRowsConf -> "0")) {
+        PairGuard.SampleFraction.key -> "1.0",
+        PairGuard.MinBytes.key -> "0",
+        PairGuard.MaxExpandRows.key -> "0")) {
       PairGuard.guardSelf("pgspec_self_exact", "none", selfDf, selfDf, "k")
       assert(PairGuard.lastEstimate("pgspec_self_exact").contains(4L))
     }
@@ -47,9 +47,9 @@ class PairGuardSpec extends AnyFunSuite {
     val l = (Seq("a", "a", "b") ++ Seq.fill(5)(null: String)).toDF("k")
     val r = Seq("a", "a", "a", "b", "b", "b", "b").toDF("k")
     withConfs(Seq(
-        PairGuard.SampleFractionConf -> "1.0",
-        PairGuard.MinBytesConf -> "0",
-        PairGuard.MaxExpandRowsConf -> "0")) {
+        PairGuard.SampleFraction.key -> "1.0",
+        PairGuard.MinBytes.key -> "0",
+        PairGuard.MaxExpandRows.key -> "0")) {
       PairGuard.guardCross("pgspec_cross_exact", "none", l, l, r, "k")
       assert(PairGuard.lastEstimate("pgspec_cross_exact").contains(10L))
     }
@@ -57,10 +57,10 @@ class PairGuardSpec extends AnyFunSuite {
 
   test("fail mode refuses before execution and names the counterpart") {
     withConfs(Seq(
-        PairGuard.GuardConf -> "fail",
-        PairGuard.SampleFractionConf -> "1.0",
-        PairGuard.MinBytesConf -> "0",
-        PairGuard.MaxExpandRowsConf -> "2")) {
+        PairGuard.Guard.key -> "fail",
+        PairGuard.SampleFraction.key -> "1.0",
+        PairGuard.MinBytes.key -> "0",
+        PairGuard.MaxExpandRows.key -> "2")) {
       val e = intercept[IllegalStateException] {
         PairGuard.guardSelf("pgspec_fail", "the_linear_counterpart",
           selfDf, selfDf, "k")
@@ -72,10 +72,10 @@ class PairGuardSpec extends AnyFunSuite {
 
   test("stats floor skips the probe entirely") {
     withConfs(Seq(
-        PairGuard.GuardConf -> "fail", // would throw if it probed
-        PairGuard.SampleFractionConf -> "1.0",
-        PairGuard.MinBytesConf -> (1L << 40).toString,
-        PairGuard.MaxExpandRowsConf -> "0")) {
+        PairGuard.Guard.key -> "fail", // would throw if it probed
+        PairGuard.SampleFraction.key -> "1.0",
+        PairGuard.MinBytes.key -> (1L << 40).toString,
+        PairGuard.MaxExpandRows.key -> "0")) {
       PairGuard.guardSelf("pgspec_floor", "none", selfDf, selfDf, "k")
       assert(PairGuard.lastEstimate("pgspec_floor").isEmpty)
     }
@@ -89,7 +89,7 @@ class PairGuardSpec extends AnyFunSuite {
       rows.map(_.toString).sorted.toSeq
     val dd5 = sorted(SparkEntry.queries("dd5_embedding_cosine")(spark, sf).collect())
     val rj1 = sorted(SparkEntry.queries("rj1_range_join")(spark, sf).collect())
-    withConfs(Seq(PairGuard.GuardConf -> "off")) {
+    withConfs(Seq(PairGuard.Guard.key -> "off")) {
       assert(sorted(SparkEntry.queries("dd5_embedding_cosine")(spark, sf)
         .collect()) == dd5)
       assert(sorted(SparkEntry.queries("rj1_range_join")(spark, sf)
@@ -103,9 +103,9 @@ class PairGuardSpec extends AnyFunSuite {
     // band, a×2 and b×1 → Σ C(c,2) = 2 bands × (C(2,2)+C(1,2)) = 2
     val base = Seq(("a", 1), ("a", 2), ("b", 3)).toDF("k", "id")
     withConfs(Seq(
-        PairGuard.SampleFractionConf -> "1.0",
-        PairGuard.MinBytesConf -> "0",
-        PairGuard.MaxExpandRowsConf -> "0")) {
+        PairGuard.SampleFraction.key -> "1.0",
+        PairGuard.MinBytes.key -> "0",
+        PairGuard.MaxExpandRows.key -> "0")) {
       PairGuard.guardSelfOf("pgspec_banded_exact", "none", base, base, "bk") {
         d => d.select(explode(typedLit(Seq(0, 1))).as("band"), col("k"))
           .select(concat_ws(":", col("band"), col("k")).as("bk"))
@@ -120,19 +120,19 @@ class PairGuardSpec extends AnyFunSuite {
     // guard must stay advisory (identical results vs guard=off)
     def sorted(rows: Array[org.apache.spark.sql.Row]) =
       rows.map(_.toString).sorted.toSeq
-    val offDd2 = withConfs(Seq(PairGuard.GuardConf -> "off")) {
+    val offDd2 = withConfs(Seq(PairGuard.Guard.key -> "off")) {
       sorted(SparkEntry.queries("dd2_minhash_lsh")(spark, sf).collect())
     }
-    val offDd3 = withConfs(Seq(PairGuard.GuardConf -> "off")) {
+    val offDd3 = withConfs(Seq(PairGuard.Guard.key -> "off")) {
       sorted(SparkEntry.queries("dd3_simhash")(spark, sf).collect())
     }
-    val offDd12 = withConfs(Seq(PairGuard.GuardConf -> "off")) {
+    val offDd12 = withConfs(Seq(PairGuard.Guard.key -> "off")) {
       sorted(SparkEntry.queries("dd12_simhash_scale")(spark, sf).collect())
     }
     withConfs(Seq(
-        PairGuard.SampleFractionConf -> "1.0",
-        PairGuard.MinBytesConf -> "0",
-        PairGuard.MaxExpandRowsConf -> "1")) {
+        PairGuard.SampleFraction.key -> "1.0",
+        PairGuard.MinBytes.key -> "0",
+        PairGuard.MaxExpandRows.key -> "1")) {
       assert(sorted(SparkEntry.queries("dd2_minhash_lsh")(spark, sf)
         .collect()) == offDd2)
       assert(sorted(SparkEntry.queries("dd3_simhash")(spark, sf)
@@ -159,10 +159,10 @@ class PairGuardSpec extends AnyFunSuite {
 
   test("fail mode refuses the banded dd3 shape naming the counterpart") {
     withConfs(Seq(
-        PairGuard.GuardConf -> "fail",
-        PairGuard.SampleFractionConf -> "1.0",
-        PairGuard.MinBytesConf -> "0",
-        PairGuard.MaxExpandRowsConf -> "1")) {
+        PairGuard.Guard.key -> "fail",
+        PairGuard.SampleFraction.key -> "1.0",
+        PairGuard.MinBytes.key -> "0",
+        PairGuard.MaxExpandRows.key -> "1")) {
       val e = intercept[IllegalStateException] {
         SparkEntry.queries("dd3_simhash")(spark, sf).collect()
       }
@@ -174,18 +174,18 @@ class PairGuardSpec extends AnyFunSuite {
   }
 
   test("conf validation names the key: bad fraction, malformed floor") {
-    withConfs(Seq(PairGuard.SampleFractionConf -> "1.5",
-        PairGuard.MinBytesConf -> "0")) {
+    withConfs(Seq(PairGuard.SampleFraction.key -> "1.5",
+        PairGuard.MinBytes.key -> "0")) {
       val e = intercept[IllegalArgumentException] {
         PairGuard.guardSelf("pgspec_badf", "none", selfDf, selfDf, "k")
       }
-      assert(e.getMessage.contains(PairGuard.SampleFractionConf), e.getMessage)
+      assert(e.getMessage.contains(PairGuard.SampleFraction.key), e.getMessage)
     }
-    withConfs(Seq(PairGuard.MinBytesConf -> "lots")) {
+    withConfs(Seq(PairGuard.MinBytes.key -> "lots")) {
       val e = intercept[IllegalArgumentException] {
         PairGuard.guardSelf("pgspec_badfloor", "none", selfDf, selfDf, "k")
       }
-      assert(e.getMessage.contains(PairGuard.MinBytesConf), e.getMessage)
+      assert(e.getMessage.contains(PairGuard.MinBytes.key), e.getMessage)
     }
   }
 
@@ -193,9 +193,9 @@ class PairGuardSpec extends AnyFunSuite {
     // drop the floor so the sf0.001 embeddings table actually probes:
     // 30 vectors → C(30,2) = 435 > cap 10 → warn path runs end to end
     withConfs(Seq(
-        PairGuard.SampleFractionConf -> "1.0",
-        PairGuard.MinBytesConf -> "0",
-        PairGuard.MaxExpandRowsConf -> "10")) {
+        PairGuard.SampleFraction.key -> "1.0",
+        PairGuard.MinBytes.key -> "0",
+        PairGuard.MaxExpandRows.key -> "10")) {
       val out = SparkEntry.queries("dd5_embedding_cosine")(spark, sf)
       assert(out.count() > 0)
       val est = PairGuard.lastEstimate("dd5_embedding_cosine")

@@ -45,10 +45,10 @@ class PipelineSpec extends AnyFunSuite {
     // are cap-invariant. Forced to 2 (far below the default 64) the
     // rows must match both the uncapped and the default-cap runs.
     def rows(cap: Option[Int]): Seq[String] = {
-      cap.foreach(c => spark.conf.set(Pipeline.BucketCapConf, c.toString))
+      cap.foreach(c => spark.conf.set(Pipeline.BucketCap.key, c.toString))
       try Pipeline.cur2CurationNearDup(spark, sf).collect()
         .map(_.toString).sorted.toSeq
-      finally spark.conf.unset(Pipeline.BucketCapConf)
+      finally spark.conf.unset(Pipeline.BucketCap.key)
     }
     val uncapped = rows(Some(1 << 30))
     assert(uncapped.nonEmpty)

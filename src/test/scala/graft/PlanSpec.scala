@@ -294,8 +294,8 @@ class PlanSpec extends AnyFunSuite {
     // plan must be a ShuffledHashJoin, and results must be identical
     val default = Dedup.dd12SimHashScale(spark, sf)
       .collect().map(_.toString).sorted.toSeq
-    spark.conf.set(Dedup.D12HashJoinMinBytesConf, "0")
-    spark.conf.set(Dedup.D12JoinWidthConf, "7")
+    spark.conf.set(Dedup.D12HashJoinMinBytes.key, "0")
+    spark.conf.set(Dedup.D12JoinWidth.key, "7")
     try {
       val df = Dedup.dd12SimHashScale(spark, sf)
       val p = plan(df)
@@ -305,8 +305,8 @@ class PlanSpec extends AnyFunSuite {
       assert(p.contains(", 7)"), p)
       assert(df.collect().map(_.toString).sorted.toSeq == default)
     } finally {
-      spark.conf.unset(Dedup.D12HashJoinMinBytesConf)
-      spark.conf.unset(Dedup.D12JoinWidthConf)
+      spark.conf.unset(Dedup.D12HashJoinMinBytes.key)
+      spark.conf.unset(Dedup.D12JoinWidth.key)
     }
     // width arithmetic: floor at the session conf, scale with scan
     // bytes over the per-task target, clamp 4096 (the w2 discipline)
@@ -440,7 +440,7 @@ class PlanSpec extends AnyFunSuite {
     graft.ops.Model.release()
     val confs = Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
-      graft.ops.Model.MaxEntriesConf -> "0")
+      graft.ops.Model.MaxEntries.key -> "0")
     val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try fns.foreach { case (n, fn) =>

@@ -142,7 +142,7 @@ class SkewSpec extends AnyFunSuite {
     // the spec fixture is megabytes; drop the production stats floor
     // (64 MB — below it the probe costs more than the skew it guards)
     // so the probe actually runs and the MECHANISM is what's pinned
-    withConfs(Seq(graft.plans.AsofJoin.MinBytesConf -> "0")) {
+    withConfs(Seq(graft.plans.AsofJoin.MinBytes.key -> "0")) {
       val auto = Extended.aj2AsofCustom(spark, dir)
       val p = plan(auto)
       // (a) still the O(1)-memory exec...
@@ -154,7 +154,7 @@ class SkewSpec extends AnyFunSuite {
         "auto dispatch must salt the hot key:\n" + p)
       // (c) dispatch cannot change answers: forced-plain-exec is the twin
       val a = auto.collect().map(_.toString).sorted
-      val m = withConfs(Seq(graft.plans.AsofJoin.DispatchConf -> "merge")) {
+      val m = withConfs(Seq(graft.plans.AsofJoin.Dispatch.key -> "merge")) {
         Extended.aj2AsofCustom(spark, dir).collect().map(_.toString).sorted
       }
       assert(a.length > 0 && a.sameElements(m),
@@ -166,7 +166,7 @@ class SkewSpec extends AnyFunSuite {
     val dir = uniformDir()
     // floor dropped here too: this pins the probe's uniform verdict,
     // not the size gate
-    withConfs(Seq(graft.plans.AsofJoin.MinBytesConf -> "0")) {
+    withConfs(Seq(graft.plans.AsofJoin.MinBytes.key -> "0")) {
       val p = plan(Extended.aj2AsofCustom(spark, dir))
       assert(p.contains("AsofJoin"),
         "uniform keys must keep the custom sort-merge exec:\n" + p)

@@ -130,19 +130,31 @@ class StreamingCurationSpec extends AnyFunSuite {
     }).toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     def batchRows(cap: Int): Set[(Long, String, Long, Long, String, Boolean)] = {
-      spark.conf.set(graft.ops.Pipeline.BucketCapConf, cap.toString)
+      spark.conf.set(graft.ops.Pipeline.BucketCap.key, cap.toString)
       try graft.ops.Pipeline.cur2CurationNearDup(spark, dir).collect()
         .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3),
           r.getString(4), r.getBoolean(5))).toSet
-      finally spark.conf.unset(graft.ops.Pipeline.BucketCapConf)
+      finally spark.conf.unset(graft.ops.Pipeline.BucketCap.key)
     }
     val uncapped = batchRows(1 << 30)
     val capped = batchRows(4)
     assert(capped == uncapped, "cap=4 changed batch verdicts on the replica cluster")
+    // cap=0 would keep no anchors: the batch and the stream both refuse
+    // it, naming the key
+    spark.conf.set(graft.ops.Pipeline.BucketCap.key, "0")
+    try Seq[() => Any](
+      () => graft.ops.Pipeline.cur2CurationNearDup(spark, dir),
+      () => CurationStream.curatedNearDup(
+        MemoryStream[(Long, String, String)](tuple3Enc, spark).toDF()
+          .withColumnRenamed("_1", "doc_id").withColumnRenamed("_2", "source")
+          .withColumnRenamed("_3", "text"), Map.empty)).foreach { build =>
+      val e = intercept[IllegalArgumentException](build())
+      assert(e.getMessage.contains(graft.ops.Pipeline.BucketCap.key), e.getMessage)
+    } finally spark.conf.unset(graft.ops.Pipeline.BucketCap.key)
     assert(uncapped.count(!_._6) == 39,
       s"all but the min-id replica must be tombstoned: $uncapped")
     // streaming under the same forced cap, fed in id order
-    spark.conf.set(graft.ops.Pipeline.BucketCapConf, "4")
+    spark.conf.set(graft.ops.Pipeline.BucketCap.key, "4")
     try {
       val input = MemoryStream[(Long, String, String)](tuple3Enc, spark)
       val stream = CurationStream.curatedNearDup(
@@ -163,7 +175,7 @@ class StreamingCurationSpec extends AnyFunSuite {
         assert(streamed == capped,
           s"stream-only: ${streamed -- capped}; batch-only: ${capped -- streamed}")
       } finally q.stop()
-    } finally spark.conf.unset(graft.ops.Pipeline.BucketCapConf)
+    } finally spark.conf.unset(graft.ops.Pipeline.BucketCap.key)
   }
 
   test("near-dup leg: band index and hash state survive a checkpointed restart") {

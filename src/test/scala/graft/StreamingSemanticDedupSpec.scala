@@ -138,7 +138,7 @@ class StreamingSemanticDedupSpec extends AnyFunSuite {
       Seq.tabulate(dim)(j => (j % 7).toLong),
       Seq.tabulate(dim)(j => ((j + 3) % 5).toLong))
     def run(cap: Int, name: String): Set[(Long, Boolean)] = {
-      spark.conf.set(SemanticDedupStream.CellCapConf, cap.toString)
+      spark.conf.set(SemanticDedupStream.CellCap.key, cap.toString)
       try {
         val input = MemoryStream[EmbRow](embEnc, spark)
         val q = SemanticDedupStream.verdicts(input.toDF(), cents)
@@ -150,7 +150,7 @@ class StreamingSemanticDedupSpec extends AnyFunSuite {
           input.addData(b); q.processAllAvailable()
           spark.table(name).collect().map(r => (r.getLong(0), r.getBoolean(4))).toSet
         } finally q.stop()
-      } finally spark.conf.unset(SemanticDedupStream.CellCapConf)
+      } finally spark.conf.unset(SemanticDedupStream.CellCap.key)
     }
     val uncapped = run(1 << 30, "sem_adv_u")
     val capped = run(4, "sem_adv_c")

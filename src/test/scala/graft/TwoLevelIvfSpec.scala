@@ -21,8 +21,8 @@ class TwoLevelIvfSpec extends AnyFunSuite {
   import TestSpark._
 
   private val confs = Seq(
-    Similarity.TargetCellConf -> "4",
-    Similarity.MaxKConf -> "4")
+    Similarity.TargetCell.key -> "4",
+    Similarity.MaxK.key -> "4")
 
   private def withLowCaps[A](body: => A): A = {
     val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
@@ -78,8 +78,8 @@ class TwoLevelIvfSpec extends AnyFunSuite {
 
   test("the flat-COST cap dispatches to two-level with maxK untouched, under its own registry key") {
     val costConfs = Seq(
-      Similarity.TargetCellConf -> "4",
-      Similarity.FlatMaxKConf -> "4")
+      Similarity.TargetCell.key -> "4",
+      Similarity.FlatMaxK.key -> "4")
     val saved = costConfs.map { case (k, _) => k -> spark.conf.getOption(k) }
     costConfs.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
@@ -94,8 +94,8 @@ class TwoLevelIvfSpec extends AnyFunSuite {
       // the conf is part of the model identity: the registry must not
       // hand this hierarchical model to a default-conf caller (whose
       // oracle replays the flat trainer)
-      spark.conf.unset(Similarity.FlatMaxKConf)
-      spark.conf.unset(Similarity.TargetCellConf)
+      spark.conf.unset(Similarity.FlatMaxK.key)
+      spark.conf.unset(Similarity.TargetCell.key)
       val flat = Similarity.ivfAssigned(spark, sf)
       assert(flat.fine.isEmpty && flat.k == 4,
         s"registry leaked the cost-capped model: k=${flat.k}")

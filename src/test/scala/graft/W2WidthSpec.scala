@@ -31,19 +31,19 @@ class W2WidthSpec extends AnyFunSuite {
   test("width floors at the session conf and scales with stats/target") {
     val base = spark.conf.get("spark.sql.shuffle.partitions").toInt
     // huge target → byStats rounds to 0 → the session conf wins
-    withConfs(Seq(MovingAverage.PaneTargetBytesConf -> (1L << 60).toString)) {
+    withConfs(Seq(MovingAverage.PaneTargetBytes.key -> (1L << 60).toString)) {
       assert(MovingAverage.paneShuffleWidth(events) == base)
     }
     // 1-byte target → byStats = stats bytes, clamped at 4096
-    withConfs(Seq(MovingAverage.PaneTargetBytesConf -> "1")) {
+    withConfs(Seq(MovingAverage.PaneTargetBytes.key -> "1")) {
       assert(MovingAverage.paneShuffleWidth(events) == 4096)
     }
     // explicit override beats everything, including the conf floor
-    withConfs(Seq(MovingAverage.PaneWidthConf -> "7")) {
+    withConfs(Seq(MovingAverage.PaneWidth.key -> "7")) {
       assert(MovingAverage.paneShuffleWidth(events) == 7)
     }
     // a malformed value names its key
-    for (key <- Seq(MovingAverage.PaneWidthConf, MovingAverage.PaneTargetBytesConf)) {
+    for (key <- Seq(MovingAverage.PaneWidth.key, MovingAverage.PaneTargetBytes.key)) {
       withConfs(Seq(key -> "wide")) {
         val e = intercept[IllegalArgumentException] {
           MovingAverage.paneShuffleWidth(events)
@@ -54,7 +54,7 @@ class W2WidthSpec extends AnyFunSuite {
   }
 
   test("wide shape: derived width on both exchanges, no extra shuffle") {
-    withConfs(Seq(MovingAverage.PaneWidthConf -> "64")) {
+    withConfs(Seq(MovingAverage.PaneWidth.key -> "64")) {
       val df = MovingAverage.w2Hopping(spark, sf)
       val optimized = df.queryExecution.optimizedPlan.toString
       // both repartitions survive optimization at the derived width
@@ -74,7 +74,7 @@ class W2WidthSpec extends AnyFunSuite {
   test("wide and legacy shapes produce identical rows") {
     val legacy = MovingAverage.w2Hopping(spark, sf).collect()
       .map(_.toString).sorted.toSeq
-    val wide = withConfs(Seq(MovingAverage.PaneWidthConf -> "64")) {
+    val wide = withConfs(Seq(MovingAverage.PaneWidth.key -> "64")) {
       MovingAverage.w2Hopping(spark, sf).collect().map(_.toString).sorted.toSeq
     }
     assert(legacy == wide)
